@@ -28,10 +28,10 @@ object Bench {
     sys.env.get("SPARK_GRAFT_BENCH_ITERS").map(_.toInt).getOrElse(5)
 
   /** Per-arm structural counters (jobs / stages / tasks / shuffle-write
-    * bytes / input bytes) via a SparkListener — the ProfR16b instrument,
-    * embedded in the bench output (r17, VERDICT r16 item 2): counts are
-    * noise-immune, so plan-shape changes stay verifiable on a host whose
-    * wall-clock is poisoned by CPU steal. */
+    * bytes / input bytes) via a SparkListener, embedded in the bench
+    * output (r17, VERDICT r16 item 2): counts are noise-immune, so
+    * plan-shape changes stay verifiable on a host whose wall-clock is
+    * poisoned by CPU steal. */
   private final class ArmCounts extends org.apache.spark.scheduler.SparkListener {
     private val jobs = new java.util.concurrent.atomic.AtomicLong
     private val stages = new java.util.concurrent.atomic.AtomicLong
@@ -62,7 +62,8 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Scan-protocol knob (BENCH_NOTES "Round-15: 180M protocol v2
     // attempt"): exposed for deployment experimentation with
-    // spark.sql.files.maxPartitionBytes. ProfR14's initial two-JVM sweep
+    // spark.sql.files.maxPartitionBytes. The round-14 two-JVM sweep
+    // (BENCH_NOTES "Round-14: fit_twfe_compress scan-knob sweep")
     // suggested 256m as a −10-14 % win on the 180M scan-bound fit, but
     // the round-15 replication attempt measured a NULL result (v2 never
     // won one of four fresh-JVM pairs, nor a within-JVM A/B on the
@@ -460,18 +461,28 @@ object Bench {
       catch { case e: Throwable => System.err.println(s"[bench] warmup $name: $e") }
     }
 
-    def timed(ws: Seq[(String, () => Unit)]) = ws.map { case (name, fn) =>
+    // an arm that throws is FAILED, never a (fast) sample: its first
+    // error is recorded, it stops iterating, it is left out of every
+    // per-arm map and total, and main exits non-zero after the output
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def timed(ws: Seq[(String, () => Unit)]) = ws.flatMap { case (name, fn) =>
       var prof: Seq[Long] = Nil // structural counters from the LAST iter
-      val times = (1 to Iters).map { _ =>
+      val times = scala.collection.mutable.ArrayBuffer.empty[Double]
+      while (times.size < Iters && !failed.contains(name)) {
         val before = armCounts.snap()
         val t0 = System.nanoTime()
-        try fn()
-        catch { case e: Throwable => System.err.println(s"[bench] $name: $e") }
-        val dt = (System.nanoTime() - t0) / 1e9
-        prof = armCounts.snap().zip(before).map { case (a, b) => a - b }
-        dt
-      }.sorted
-      (name, times.head, prof) // min — see protocol note above
+        try {
+          fn()
+          times += (System.nanoTime() - t0) / 1e9
+          prof = armCounts.snap().zip(before).map { case (a, b) => a - b }
+        } catch {
+          case e: Throwable =>
+            System.err.println(s"[bench] $name: $e")
+            failed(name) = e.toString
+        }
+      }
+      if (failed.contains(name)) None
+      else Some((name, times.min, prof)) // min — see protocol note above
     }
     val results = timed(selected)
     val curResults = timed(selectedCur)
@@ -485,13 +496,21 @@ object Bench {
           ",\"tasks\":" + p(2) + ",\"shuffle_write_bytes\":" + p(3) +
           ",\"input_bytes\":" + p(4) + "}"
       }.mkString("{", ",", "}")
+    def jsonStr(v: String) = v.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => "\\u%04x".format(c.toInt)
+      case c => c.toString
+    }.mkString("\"", "", "\"")
+    val errorsJs = failed.map { case (k, e) => "\"" + k + "\":" + jsonStr(e) }
+      .mkString("{", ",", "}")
     val total = results.map(_._2).sum
     val curTotal = curResults.map(_._2).sum
     val mntTotal = mntResults.map(_._2).sum
     val all = results ++ curResults ++ mntResults
-    // the round-13 rich line, unchanged keys + additive prof/cpus (old
-    // consumers that tolerated curation/maint tolerate these too)
-    println(f"""{"metric":"total","value":$total%.4f,"unit":"sec","queries":${js(results)},"curation":${js(curResults)},"curation_total":$curTotal%.4f,"maint":${js(mntResults)},"maint_total":$mntTotal%.4f,"sf":"$sfDir","cpus":$cpus,"prof":${profJs(all)}}""")
+    // the round-13 rich line, unchanged keys + additive prof/cpus/errors
+    // (old consumers that tolerated curation/maint tolerate these too)
+    println(f"""{"metric":"total","value":$total%.4f,"unit":"sec","queries":${js(results)},"curation":${js(curResults)},"curation_total":$curTotal%.4f,"maint":${js(mntResults)},"maint_total":$mntTotal%.4f,"sf":"$sfDir","cpus":$cpus,"prof":${profJs(all)},"errors":$errorsJs}""")
     // FLAT single-line JSON (r17, VERDICT r16 item 1 — the driver's
     // comparator could not parse the nested line for two rounds): every
     // arm name → seconds in ONE flat object, no nesting, printed as the
@@ -503,9 +522,13 @@ object Bench {
         s""""sf":"$sfDir"""")).mkString("{", ",", "}")
     java.nio.file.Files.write(
       java.nio.file.Paths.get("bench_out.json"),
-      (flat.dropRight(1) + s""","prof":${profJs(all)}}""" + "\n")
+      (flat.dropRight(1) + s""","prof":${profJs(all)},"errors":$errorsJs}""" + "\n")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     println(flat)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] FAILED arms: ${failed.keys.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

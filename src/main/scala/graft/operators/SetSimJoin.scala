@@ -63,20 +63,6 @@ object SetSimJoin {
       tau: Double,
       positionalFilter: Boolean = true
   ): DataFrame = {
-    val (sets, cand) = stagedCandidates(df, idCol, tokensCol, tau, positionalFilter)
-    verify(sets, cand, tau)
-  }
-
-  /** The staged per-doc hashed-set table and the distinct candidate-pair
-    * frame (pre-verification) — split out so profilers can count the
-    * candidate set the filters admit. */
-  private[graft] def stagedCandidates(
-      df: DataFrame,
-      idCol: String,
-      tokensCol: Column,
-      tau: Double,
-      positionalFilter: Boolean
-  ): (DataFrame, DataFrame) = {
     require(tau > 0.0 && tau <= 1.0, s"tau must be in (0,1], got $tau")
     // NOTE for callers: pass `tokensCol` over a BOUND token attribute
     // (select the token array first), not an inline tokens(text) chain —
@@ -131,7 +117,7 @@ object SetSimJoin {
     val cand = pruned
       .select(col("a.id").as("id1"), col("b.id").as("id2"))
       .distinct()
-    (sets, cand)
+    verify(sets, cand, tau)
   }
 
   /** Exact verification: intersection size via the per-doc SET ARRAYS —

@@ -234,17 +234,6 @@ object Dedup {
     * document size is bounded, so the per-pair cost is constant and the
     * join fan-out is bounded by capped bucket sizes (the standard web-scale
     * dedup shape). */
-  /** The valved bucket table's staging, behind a live-JVM toggle
-    * (`-Dgraft.lsh.stageBuckets=false` disables it) so the staged-vs-
-    * recompute decision can be A/B'd INTERLEAVED in one JVM (ProfR17;
-    * the r16 A/B's samples overlapped on a bursting host — VERDICT item
-    * 6). Default = staged, the shipping configuration: the valve
-    * consumes the table twice and re-deriving it re-runs the 16-hash
-    * signature pass. */
-  private[graft] def stageBucketTable(df: DataFrame): DataFrame =
-    if (sys.props.get("graft.lsh.stageBuckets").contains("false")) df
-    else df.staged
-
   def minhashPairs(
       df: DataFrame,
       idCol: String,
@@ -276,16 +265,18 @@ object Dedup {
     // 16 affine array passes — the dominant per-row CPU of the LSH side)
     // from the repSh checkpoint. The staged rows are narrow (id, band,
     // bucket), so one checkpoint write costs far less than a second
-    // signature pass (r16 A/B in OPTIMIZATION_r16.md; the r12 staging
-    // lesson cuts the other way for WIDE frames like the refresh union).
-    // Unvalved (None) keeps one consumer — no barrier.
+    // signature pass (r16 A/B in OPTIMIZATION_r16.md, re-confirmed
+    // interleaved in one JVM in r17 — BENCH_NOTES "Round-17": staged wins
+    // min and mean; the r12 staging lesson cuts the other way for WIDE
+    // frames like the refresh union). Unvalved (None) keeps one
+    // consumer — no barrier.
     val bk0raw = lshBuckets(sigs)
     // bucket-size valve (post-collapse): drop residual hot buckets before
     // the O(bucket²) self-join, mirroring the jaccardPairs shingle valve
     val bk = maxBucketSize match {
       case None => bk0raw
       case Some(cap) =>
-        val bk0 = stageBucketTable(bk0raw)
+        val bk0 = bk0raw.staged
         val ok = bk0.groupBy("band", "bucket")
           .agg(count(lit(1)).as("__bsz"))
           .filter(col("__bsz") <= cap)
@@ -421,10 +412,11 @@ object Dedup {
       // STAGED: the pointer-jump self-join below references prop twice,
       // and without a materialization barrier Spark planned — and RAN —
       // the whole edges⋈labels propagate join + aggregate TWICE per round
-      // (verified in plans/r16/cc_propagate_round_after.txt: operators
-      // 1–22 ≡ 23–39; a persist alone does NOT fix it — the analyzer's
-      // self-join deduplication clones the right subtree into a form the
-      // cache lookup no longer matches, plans/r17 persist experiment).
+      // (r16 plan: operators 1–22 ≡ 23–39; a persist alone does NOT fix
+      // it — the analyzer's self-join deduplication clones the right
+      // subtree into a form the cache lookup no longer matches, BENCH_NOTES
+      // "Round-17"; pinned by PlanShapeSpec "duplicateClusters plans the
+      // propagate join once per round").
       // The eager checkpoint runs the propagate ONCE per round and both
       // join sides read the materialized blocks; the kept hash(a)
       // partitioning also feeds the jump's build side (__lid = a)
@@ -673,7 +665,7 @@ object Dedup {
         // staged for the same reason as minhashPairs' bucket table: the
         // valve consumes it twice (hot agg + anti join) and re-deriving it
         // means a second full signature pass; staged rows are narrow (r16)
-        val cb0 = stageBucketTable(cb0raw)
+        val cb0 = cb0raw.staged
         val hot = cb0.groupBy("band", "bucket")
           .agg(count(lit(1)).as("__bsz")).filter(col("__bsz") > cap)
           .select("band", "bucket")
@@ -932,7 +924,8 @@ object Dedup {
     * (shard², bucket-capped), three key-equi probes of the persisted
     * MinHash state (never corpus×corpus), and one CC re-run over
     * dup-sized edges; the resident corpus is never re-paired, re-read,
-    * or shuffled. Measured vs full re-pair in BENCH_NOTES (ProfR16).
+    * or shuffled. Measured vs full re-pair in BENCH_NOTES ("Round-16:
+    * complete DupClusterState refresh recipe priced").
     *
     * SEQUENTIAL multi-shard refreshes must ALSO refresh the MinHash
     * state between shards ([[minhashDedupStateRefresh]]) — shard 2's
@@ -1193,7 +1186,8 @@ object Dedup {
     // docs staged/unstaged is 9.9/5.3 s — checkpoint-writing the exploded
     // shingle table costs ~2x re-deriving the codegen'd tokenize+shingle
     // projection from the scan for the second consumer (the
-    // removeDupSpans staging lesson, fourth confirmation; ProfR15)
+    // removeDupSpans staging lesson, fourth confirmation; BENCH_NOTES
+    // "Round-15: leakage-split frozen-state dividend")
     val cs = shingleSets(shard, idCol, textCol, n)
     // defensive re-distinct per (shingle, suite): a hand-unioned state
     // could carry duplicate rows that would double-count that suite's hits
@@ -1737,36 +1731,22 @@ object Dedup {
       idCol: String,
       textCol: String,
       width: Int = 8
-  ): DataFrame =
-    removeDupSpansImpl(df, idCol, textCol, width,
-      stageTokens = DefaultStageTokens)
-
-  /** Whether the span-removal family checkpoints the tokenized corpus
-    * before fanning it out to its three consumers (window explode for the
-    * duplicate agg, window explode for the mask join, rebuild join).
-    * UNSTAGED, by measurement (BENCH_NOTES r12, min-statistic): at 5M
-    * docs staged/unstaged is 208.9/115.3 s (w=5) and 168.6/95.1 s (w=8)
-    * — re-deriving the codegen'd tokenize projection from the scan beats
-    * checkpoint-writing the tokenized corpus ~1.8× (the rank-1-MF /
-    * token-budget-base lesson, third confirmation); at 500k docs the gap
-    * is ~10% the same way, and the ingest mode is staging-insensitive
-    * (48.9 vs 47.0 s — its tokenized SHARD is small). In reliable
-    * checkpoint mode staging would also write the whole tokenized corpus
-    * to the checkpoint dir per call — the dominant I/O at 100 TB.
-    * [[removeDupSpansImpl]] keeps both arms measurable. */
-  private[graft] val DefaultStageTokens = false
-
-  private[graft] def removeDupSpansImpl(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      width: Int,
-      stageTokens: Boolean
   ): DataFrame = {
     require(width >= 2, s"width must be >= 2, got $width")
-    val t0 = df
+    // the tokenized corpus feeds three consumers (window explode for the
+    // duplicate agg, window explode for the mask join, rebuild join) and
+    // is deliberately NOT staged, by measurement (BENCH_NOTES r12,
+    // min-statistic): at 5M docs staged/unstaged is 208.9/115.3 s (w=5)
+    // and 168.6/95.1 s (w=8) — re-deriving the codegen'd tokenize
+    // projection from the scan beats checkpoint-writing the tokenized
+    // corpus ~1.8× (the rank-1-MF / token-budget-base lesson, third
+    // confirmation); at 500k docs the gap is ~10% the same way, and the
+    // ingest mode is staging-insensitive (48.9 vs 47.0 s — its tokenized
+    // SHARD is small). In reliable checkpoint mode staging would also
+    // write the whole tokenized corpus to the checkpoint dir per call —
+    // the dominant I/O at 100 TB.
+    val t = df
       .select(col(idCol).as("id"), TextOps.tokens(col(textCol)).as("toks"))
-    val t = if (stageTokens) t0.staged else t0
     val wins = t
       .select(col("id"),
         posexplode(TextOps.wordShingles(col("toks"), width))
@@ -1837,24 +1817,13 @@ object Dedup {
       idCol: String,
       textCol: String,
       width: Int = 8
-  ): DataFrame =
-    removeDupSpansAgainstImpl(corpusFps, newDocs, idCol, textCol, width,
-      stageTokens = DefaultStageTokens)
-
-  private[graft] def removeDupSpansAgainstImpl(
-      corpusFps: DataFrame,
-      newDocs: DataFrame,
-      idCol: String,
-      textCol: String,
-      width: Int,
-      stageTokens: Boolean
   ): DataFrame = {
     require(width >= 2, s"width must be >= 2, got $width")
     require(corpusFps.columns.contains("fp"),
       "corpusFps must carry the spanFingerprints 'fp' column")
-    val t0 = newDocs
+    // unstaged tokens, as in [[removeDupSpans]] (BENCH_NOTES r12)
+    val t = newDocs
       .select(col(idCol).as("id"), TextOps.tokens(col(textCol)).as("toks"))
-    val t = if (stageTokens) t0.staged else t0
     val wins = t
       .select(col("id"),
         posexplode(TextOps.wordShingles(col("toks"), width))

@@ -258,9 +258,13 @@ object Similarity {
     * Wall grows sub-linearly in nprobe until candidate volume dominates.
     * On corpora with REAL cluster structure (the common production case)
     * the same targets land at several-fold smaller scan fractions — q41's
-    * reference point is 0.92 recall@5 at 25 % scan; re-measure with
-    * `ProfKnn`'s `PROF_RECALL_SWEEP` before committing to a budget.
-    * `KnnJoinSpec` pins the C/2 and 5C/8 rows on the fixture corpus.
+    * reference point is 0.92 recall@5 at 25 % scan; re-measure on your
+    * own corpus before committing to a budget: take [[bruteForceTopK]]
+    * over a sample of query ids as ground truth, and recall@k is the
+    * fraction of its (query_id, neighbor_id) rows that a `left_semi`
+    * join finds in this operator's output for the same ids, swept over
+    * nprobe. `KnnJoinSpec` pins the C/2 and 5C/8 rows on the fixture
+    * corpus the same way (against [[knnJoinBrute]]).
     * `maxCellSize` is the skew valve for degenerate centroid sets (all
     * vectors in one cell ⇒ the join degrades toward n²): oversized cells
     * are excluded from the CANDIDATE side, so results lose those

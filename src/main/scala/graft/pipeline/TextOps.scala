@@ -482,29 +482,6 @@ object TextOps {
       salt: String = "",
       shardCol: Option[String] = None,
       buckets: Int = 1024
-  ): org.apache.spark.sql.DataFrame =
-    packSequencesImpl(df, idCol, textCol, window, salt, shardCol, buckets,
-      stageSlim = PackStageSlim)
-
-  /** Whether [[packSequences]] stages the slim (id, n_tokens, u, shard?)
-    * frame consumed by both phases — ON since r17: with the stage now
-    * PRE-PARTITIONED on the bucket key (so the phase-2 window also loses
-    * its exchange) the interleaved A/B flipped decisively in favor of
-    * staging (sf0.1: min 0.90 vs 0.98 s; ×10 docs: min 2.49 vs 4.46 s,
-    * mean 4.19 vs 6.64 — BENCH_NOTES r17; the r12 stage-slim null result
-    * predates the repartition and the native Hash32/tokenizer). Both
-    * arms stay measurable via [[packSequencesImpl]]. */
-  private[graft] val PackStageSlim = true
-
-  private[graft] def packSequencesImpl(
-      df: org.apache.spark.sql.DataFrame,
-      idCol: String,
-      textCol: String,
-      window: Int,
-      salt: String,
-      shardCol: Option[String],
-      buckets: Int,
-      stageSlim: Boolean
   ): org.apache.spark.sql.DataFrame = {
     require(window >= 1, s"window must be >= 1, got $window")
     require(buckets >= 2, s"buckets must be >= 2, got $buckets")
@@ -527,21 +504,28 @@ object TextOps {
     // silently unbox a null bucket sum to 0 — numerically the same
     // today, but an implicit dependency on JVM unboxing the seed
     // arithmetic must never carry
-    val base0 = df.filter(col(idCol).isNotNull)
+    val base = df.filter(col(idCol).isNotNull)
       .select((Seq(col(idCol).as("id"),
         coalesce(tokenCount(col(textCol)).cast("long"), lit(0L))
           .as("n_tokens"),
         u.as("__u")) ++ keep ++ shardKey): _*)
       .withColumn("__bkt",
         shiftright(col("__u") * lit(buckets.toLong), 32).cast("int"))
-    // staged form (r17): PRE-PARTITIONED on __bkt before the checkpoint
-    // (the CC edge-table pattern, guide §2.4) — hash(__bkt) satisfies the
-    // clustered distribution of BOTH consumers (the phase-1 (shard?, bkt)
-    // aggregate and the phase-2 window partitioned by the same keys), so
-    // the tokenize projection runs ONCE and the window reads the staged
-    // partitioning exchange-free, instead of two full tokenize passes
-    // plus a window exchange.
-    val base = if (stageSlim) base0.repartition(col("__bkt")).staged else base0
+      // STAGED and PRE-PARTITIONED on __bkt before the checkpoint (r17;
+      // the CC edge-table pattern, guide §2.4) — hash(__bkt) satisfies
+      // the clustered distribution of BOTH consumers (the phase-1
+      // (shard?, bkt) aggregate and the phase-2 window partitioned by the
+      // same keys), so the tokenize projection runs ONCE and the window
+      // reads the staged partitioning exchange-free, instead of two full
+      // tokenize passes plus a window exchange. (Exchange-free with AQE
+      // off only: under AQE the checkpoint records UnknownPartitioning
+      // and the window shuffles again — PipelineSpec pins both halves.)
+      // Interleaved A/B (sf0.1:
+      // min 0.90 vs 0.98 s; ×10 docs: min 2.49 vs 4.46 s, mean 4.19 vs
+      // 6.64 — BENCH_NOTES "Round-17"; the r12 stage-slim null result
+      // predates the repartition and the native Hash32/tokenizer).
+      .repartition(col("__bkt"))
+      .staged
     // phase 1: per-(shard, bucket) token sums → driver; exclusive prefix
     // per shard in bucket order = each bucket's exact global seed
     val gKeys = (if (shardKey.isEmpty) Nil else Seq("__shardKey")) :+ "__bkt"

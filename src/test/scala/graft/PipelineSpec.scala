@@ -995,6 +995,26 @@ class PipelineSpec extends SparkTestBase {
       .queryExecution.executedPlan.toString
     assert(!shardedPlan.contains("Exchange SinglePartition"),
       shardedPlan.take(3000))
+    // r17 §7: both phases read the ONE staged slim frame — the tokenize
+    // projection never re-runs from the source scan
+    assert(!plan.contains("Scan parquet"), plan.take(3000))
+    assert(!shardedPlan.contains("Scan parquet"), shardedPlan.take(3000))
+    // ... and the stage is pre-partitioned on the bucket key, so the
+    // phase-2 window needs no exchange at all (the seed map rides a
+    // broadcast) in both layouts. Pinned with AQE off, where the
+    // checkpoint keeps the staged hash partitioning; under AQE the
+    // checkpointed frame reports UnknownPartitioning and the window
+    // shuffles again.
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      for (shardCol <- Seq(None, Some("lang"))) {
+        val out = TextOps.packSequences(docs, "doc_id", "text", 128,
+          salt = "b", shardCol = shardCol)
+        assert(PlanStats.planStats(out).shuffles == 0,
+          out.queryExecution.executedPlan.toString.take(3000))
+      }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
   test("sequence packing: null ids dropped, non-string shards keyed consistently") {

@@ -1,0 +1,142 @@
+package graft
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.BinaryType
+
+import graft.PlanStats.{capturedQueries, planStats, shuffleKeys}
+import graft.pipeline.{Dedup, Similarity, TextOps}
+
+/** Plan-shape pins for the rounds-16/17 plan wins (OPTIMIZATION_r16.md /
+  * OPTIMIZATION_r17.md, section numbers cited per test). Each asserts on
+  * [[PlanStats]] counts, so reverting the win fails the test. Properties
+  * other suites already pin stay there: the kNN / BM25 WindowGroupLimit
+  * (RetrievalSpec), the bucketed-state single exchange and the pack
+  * window's missing exchange (PipelineSpec). */
+class PlanShapeSpec extends SparkTestBase {
+  import spark.implicits._
+
+  private lazy val docs = sf("sf0.001", "documents")
+  private lazy val embs = sf("sf0.001", "embeddings")
+
+  private def report(df: DataFrame) =
+    df.queryExecution.executedPlan.toString.take(3000)
+
+  test("simhash plans no exchange") {
+    // r16 §9: a per-row generator over the token array, not an explode of
+    // every token shuffled into a 16-aggregate groupBy
+    val out = Dedup.simhash(docs, "doc_id", "text")
+    val s = planStats(out)
+    assert(s.shuffles == 0 && s.broadcasts == 0, report(out))
+  }
+
+  test("text_analysis composition plans no lambda") {
+    // r17 §3–4: native tokenizer, set-membership count and char-length
+    // fold — the Bench text_analysis arm's projection, verbatim
+    val out = docs
+      .withColumn("__t", TextOps.tokens(col("text")))
+      .select(
+        col("doc_id"),
+        TextOps.langIdT(col("text"), col("__t")).as("lang"),
+        TextOps.qualityScoreT(col("text"), col("__t")).as("q"),
+        TextOps.fingerprint(col("text")).as("fp"))
+    val s = planStats(out)
+    assert(s.lambdas == 0 && s.codegenFallbacks == 0, report(out))
+    // the counter sees the interpreted spelling the native tokenizer
+    // replaced
+    val hof = docs.select(
+      filter(split(lower(col("text")), "\\s+"), t => length(t) > 0).as("t"))
+    assert(planStats(hof).lambdas == 1)
+  }
+
+  // one multi-round CC run on a 13-node chain, every query it executed
+  // captured; checkpointEvery = 1 makes every round's pointer-jump plan an
+  // eager checkpoint, so no round's join tree hides behind a cache scan
+  private lazy val chainRun = capturedQueries(spark) {
+    val pairs = (0L until 12L).map(i => (i, i + 1, 1.0))
+      .toDF("id1", "id2", "jaccard")
+    val cl = Dedup.duplicateClusters(pairs, checkpointEvery = 1).collect()
+    assert(cl.length == 13 && cl.forall(_.getLong(1) == 0L))
+  }
+  // the convergence probes: `head` over the label-sum aggregate, one
+  // before the loop and one per round
+  private def probes(run: Seq[(String, QueryExecution)]) =
+    run.collect { case ("head", qe) => qe.executedPlan }
+
+  test("duplicateClusters plans the propagate join once per round") {
+    // r17 §5: the propagate aggregate is staged before the pointer-jump
+    // self-join, so each round runs exactly two join plans — the staged
+    // propagate and the jump over its materialized blocks — each with ONE
+    // join. Unstaged, the jump plan carried the propagate subtree on both
+    // sides (three joins, the propagate ran twice).
+    val rounds = probes(chainRun).size - 1
+    assert(rounds >= 3, s"a 13-node chain needs several rounds, got $rounds")
+    val joins = chainRun.map { case (_, qe) =>
+      planStats(qe.executedPlan).joinCount
+    }
+    assert(joins.max == 1, joins)
+    assert(joins.count(_ > 0) == 2 * rounds, joins)
+  }
+
+  test("integral-id convergence probe is a 1-row aggregate with no join") {
+    // r16 §1: compare monotone label sums, not updated ⋈ labels
+    val ps = probes(chainRun)
+    assert(ps.size >= 2)
+    ps.foreach { p =>
+      val s = planStats(p)
+      assert(s.joinCount == 0 && s.hashAggregates > 0, p.toString)
+      val keys = PlanStats.collect(p) {
+        case a: HashAggregateExec => a.groupingExpressions
+      }
+      assert(keys.forall(_.isEmpty), p.toString)
+    }
+    // r17 §2 type gate: string ids fall back to the changed-row join probe
+    // (the sum probe would throw under ANSI or converge early without it)
+    val strRun = capturedQueries(spark) {
+      val pairs = (0 until 4).map(i => (s"n$i", s"n${i + 1}", 1.0))
+        .toDF("id1", "id2", "jaccard")
+      Dedup.duplicateClusters(pairs, checkpointEvery = 1).collect()
+    }
+    assert(probes(strRun).isEmpty)
+    assert(strRun.exists { case (fn, qe) =>
+      fn == "count" && planStats(qe.executedPlan).joinCount == 1 })
+  }
+
+  test("dedupAgainstState and semDedupAgainst pick the top-1 match without a Window") {
+    // r16 §2: min_by argmax aggregate instead of a row_number rank window
+    val corpus = docs.filter(col("doc_id") % 10 =!= 0)
+    val shard = docs.filter(col("doc_id") % 10 === 0)
+    val mh = Dedup.dedupAgainstState(
+      Dedup.minhashDedupState(corpus, "doc_id", "text", n = 2), shard,
+      "doc_id", "text", n = 2, threshold = 0.4)
+    val vcorpus = embs.filter(col("vec_id") % 10 =!= 0)
+    val vshard = embs.filter(col("vec_id") % 10 === 0)
+    val sd = Similarity.semDedupAgainst(
+      Similarity.semDedupState(vcorpus, "vec_id", "embedding",
+        k = 8, iters = 2, dim = 64),
+      vshard, "vec_id", "embedding", threshold = 0.45)
+    for (out <- Seq(mh, sd)) {
+      val s = planStats(out)
+      assert(s.windows == 0 && s.windowGroupLimits == 0, report(out))
+    }
+  }
+
+  test("span and line dedup shuffle the binary fingerprint key") {
+    // r16 §10: the internal window/line key is the 16-byte md5 digest,
+    // not its 32-char hex string
+    val ml = docs.select(col("doc_id"),
+      regexp_replace(col("text"), " ", "\n").as("text"))
+    for (out <- Seq(
+        Dedup.removeDupSpans(docs, "doc_id", "text", width = 5),
+        Dedup.dupSpans(docs, "doc_id", "text", width = 5),
+        Dedup.removeDupLines(ml, "doc_id", "text"))) {
+      val keyTypes = shuffleKeys(out.queryExecution.executedPlan).flatten
+        .collect { case a: Attribute if a.name == "k" => a.dataType }
+      assert(keyTypes.nonEmpty && keyTypes.forall(_ == BinaryType),
+        report(out))
+    }
+  }
+}
