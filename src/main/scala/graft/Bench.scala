@@ -14,7 +14,7 @@ import graft.reg.Dbreg
   * `SPARK_GRAFT_BENCH_ITERS` timed iterations (default 5 since round 7 —
   * the r5/r6 steal lesson: 3 samples leave a ~30% chance every iteration
   * of a query lands on a steal burst; 5 keeps the min honest) reporting
-  * the per-query MIN.
+  * the per-query MIN (`spread` adds each arm's min, median and max).
   * The reference reports the median, but this host has bursty CPU steal
   * (measured wall-time swings of 10-70x across otherwise identical JVMs —
   * BENCH_NOTES.md §noise); the min is the standard noise-robust wall-time
@@ -26,6 +26,16 @@ import graft.reg.Dbreg
 object Bench {
   private val Iters =
     sys.env.get("SPARK_GRAFT_BENCH_ITERS").map(_.toInt).getOrElse(5)
+
+  /** One finished arm: its timed iterations, ascending, and the
+    * structural counters of the last one. */
+  private final case class Arm(name: String, times: IndexedSeq[Double], prof: Seq[Long]) {
+    def min: Double = times.head
+    def median: Double = {
+      val n = times.length
+      if (n % 2 == 1) times(n / 2) else (times(n / 2 - 1) + times(n / 2)) / 2.0
+    }
+  }
 
   /** Per-arm structural counters (jobs / stages / tasks / shuffle-write
     * bytes / input bytes) via a SparkListener, embedded in the bench
@@ -482,17 +492,18 @@ object Bench {
         }
       }
       if (failed.contains(name)) None
-      else Some((name, times.min, prof)) // min — see protocol note above
+      else Some(Arm(name, times.sorted.toIndexedSeq, prof))
     }
     val results = timed(selected)
     val curResults = timed(selectedCur)
     val mntResults = timed(selectedMnt)
 
-    def js(rs: Seq[(String, Double, Seq[Long])]) =
-      rs.map { case (k, v, _) => "\"" + k + f"\":$v%.4f" }.mkString("{", ",", "}")
-    def profJs(rs: Seq[(String, Double, Seq[Long])]) =
-      rs.map { case (k, _, p) =>
-        "\"" + k + "\":{\"jobs\":" + p(0) + ",\"stages\":" + p(1) +
+    def js(rs: Seq[Arm]) =
+      rs.map(a => "\"" + a.name + f"\":${a.min}%.4f").mkString("{", ",", "}")
+    def profJs(rs: Seq[Arm]) =
+      rs.map { a =>
+        val p = a.prof
+        "\"" + a.name + "\":{\"jobs\":" + p(0) + ",\"stages\":" + p(1) +
           ",\"tasks\":" + p(2) + ",\"shuffle_write_bytes\":" + p(3) +
           ",\"input_bytes\":" + p(4) + "}"
       }.mkString("{", ",", "}")
@@ -504,25 +515,31 @@ object Bench {
     }.mkString("\"", "", "\"")
     val errorsJs = failed.map { case (k, e) => "\"" + k + "\":" + jsonStr(e) }
       .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    val curTotal = curResults.map(_._2).sum
-    val mntTotal = mntResults.map(_._2).sum
+    // arm → [min, median, max] seconds over the timed iterations
+    def spreadJs(rs: Seq[Arm]) =
+      rs.map(a => "\"" + a.name + "\":" +
+        Seq(a.min, a.median, a.times.last).map(v => f"$v%.4f").mkString("[", ",", "]"))
+        .mkString("{", ",", "}")
+    val total = results.map(_.min).sum
+    val curTotal = curResults.map(_.min).sum
+    val mntTotal = mntResults.map(_.min).sum
     val all = results ++ curResults ++ mntResults
-    // the round-13 rich line, unchanged keys + additive prof/cpus/errors
+    // the round-13 rich line, unchanged keys + additive prof/spread/cpus/errors
     // (old consumers that tolerated curation/maint tolerate these too)
-    println(f"""{"metric":"total","value":$total%.4f,"unit":"sec","queries":${js(results)},"curation":${js(curResults)},"curation_total":$curTotal%.4f,"maint":${js(mntResults)},"maint_total":$mntTotal%.4f,"sf":"$sfDir","cpus":$cpus,"prof":${profJs(all)},"errors":$errorsJs}""")
+    println(f"""{"metric":"total","value":$total%.4f,"unit":"sec","queries":${js(results)},"curation":${js(curResults)},"curation_total":$curTotal%.4f,"maint":${js(mntResults)},"maint_total":$mntTotal%.4f,"sf":"$sfDir","cpus":$cpus,"prof":${profJs(all)},"spread":${spreadJs(all)},"errors":$errorsJs}""")
     // FLAT single-line JSON (r17, VERDICT r16 item 1 — the driver's
     // comparator could not parse the nested line for two rounds): every
     // arm name → seconds in ONE flat object, no nesting, printed as the
     // final stdout line AND written to bench_out.json so sbt log framing
     // can never corrupt it.
-    val flat = (all.map { case (k, v, _) => "\"" + k + f"\":$v%.4f" } ++
+    val flat = (all.map(a => "\"" + a.name + f"\":${a.min}%.4f") ++
       Seq(f""""total":$total%.4f""", f""""curation_total":$curTotal%.4f""",
         f""""maint_total":$mntTotal%.4f""", s""""cpus":$cpus""",
         s""""sf":"$sfDir"""")).mkString("{", ",", "}")
     java.nio.file.Files.write(
       java.nio.file.Paths.get("bench_out.json"),
-      (flat.dropRight(1) + s""","prof":${profJs(all)},"errors":$errorsJs}""" + "\n")
+      (flat.dropRight(1) +
+        s""","prof":${profJs(all)},"spread":${spreadJs(all)},"errors":$errorsJs}""" + "\n")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     println(flat)
     spark.stop()

@@ -207,7 +207,9 @@ object LinAlg {
     new TDistribution(df).inverseCumulativeProbability(1.0 - (1.0 - level) / 2.0)
 
   /** Sandwich variance estimators (reference dbreg.R:1754-1803).
-    * iid: σ²(XᵀX)⁻¹; HC1: (N/df)·A⁻¹MA⁻¹; CR1: (G/(G−1))(N/(N−K))·A⁻¹MA⁻¹.
+    * iid: σ²(XᵀX)⁻¹; HC1: (N/df)·A⁻¹MA⁻¹; CR1: (G/(G−1))(N/(N−K))·A⁻¹MA⁻¹,
+    * with N−K floored at 1 like every residual df here. CR1 needs at least
+    * two clusters: G/(G−1) is undefined for one.
     */
   def vcovIid(xtxInv: DenseMatrix[Double], rss: Double, dfRes: Double): DenseMatrix[Double] =
     xtxInv * (rss / dfRes)
@@ -227,7 +229,9 @@ object LinAlg {
       nClusters: Double,
       nParams: Double
   ): DenseMatrix[Double] = {
-    val scale = (nClusters / (nClusters - 1.0)) * (nObs / (nObs - nParams))
+    require(nClusters >= 2,
+      s"clustered standard errors need at least 2 clusters, got ${nClusters.toLong}")
+    val scale = (nClusters / (nClusters - 1.0)) * (nObs / math.max(nObs - nParams, 1.0))
     (xtxInv * meat * xtxInv) * scale
   }
 

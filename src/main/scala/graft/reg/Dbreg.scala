@@ -1,11 +1,8 @@
 package graft.reg
 
-import graft.Staging.StagedFrame
-import breeze.linalg.{DenseMatrix, DenseVector}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-
 
 import graft.formula.{Formula, Vcov}
 import graft.linalg.LinAlg
@@ -32,10 +29,11 @@ import graft.model.ModelMatrix.MMCol
   *  - `auto`     — cost-based chooser using cheap probe aggregations
   *
   * Scale notes: no step ever collects row-level data; every collect is a
-  * 1-row moment vector, a ≤`compressNmax`-cell table, or a per-cluster score
-  * table. Group-mean tables are cached (they are reused by the vcov second
-  * pass) and broadcast when small, so the big-table joins are broadcast hash
-  * joins with no shuffle of the fact table.
+  * 1-row moment vector, a ≤`compressNmax`-cell table, a ≤64-level mean
+  * table, or (CompressDriver only) a per-cluster score table. Group-mean
+  * tables are cached (the vcov pass reuses them) and attach by tier
+  * (`withMeanColumns`): ≤64 levels as a literal lookup, up to 2M levels by
+  * broadcast hash join, above that by a shuffle join of the fact table.
   */
 object Dbreg {
 
@@ -153,108 +151,45 @@ object Dbreg {
       .filter(needed.map(col(_).isNotNull).reduce(_ && _))
     val d = buildDesign(base, f, groupCol +: f.fe,
       intercept = f.intercept && feOpt.isEmpty)
-    val p = d.xNames.length
-    val y = col(Y)
-    def x(i: Int) = col(d.xNames(i))
+    val xs = d.xNames.map(col)
+    // with an FE the within moments come from per-cell raw moments (no
+    // demean join): one hash aggregate keyed (group, fe) over the corpus,
+    // then a tiny per-group aggregate over the G×L cell rows. The
+    // join-based spelling costs a second corpus pass plus a per-row hash
+    // probe (broadcast) or a corpus sort (merge join) — measured 17-20 s
+    // at 180M rows where this is ~2 s.
     val grouped = feOpt match {
-      case None =>
-        val aggs = scala.collection.mutable.ArrayBuffer[Column]()
-        aggs += count(lit(1)).as("_n")
-        aggs += sum(y).as("_sy")
-        aggs += sum(y * y).as("_syy")
-        for (i <- 0 until p) {
-          aggs += sum(x(i)).as(s"_sx$i")
-          aggs += sum(x(i) * y).as(s"_sxy$i")
-        }
-        for (i <- 0 until p; j <- i until p)
-          aggs += sum(x(i) * x(j)).as(s"_sxx_${i}_$j")
-        d.df.groupBy(col(groupCol)).agg(aggs.head, aggs.tail.toSeq: _*)
-      case Some(fe) =>
-        // NO demean join: the within (demeaned) moments follow from
-        // per-cell RAW moments via the centering identity
-        //   Σ (a − ā_c)(b − b̄_c) = Σ_cells (S_ab,c − S_a,c·S_b,c / n_c)
-        // — the compress strategy's trick applied per group. One
-        // partial+final hash aggregate keyed (group, fe) over the corpus,
-        // then a tiny per-group aggregate over the G×L cell rows. The
-        // join-based spelling costs a second corpus pass plus a per-row
-        // hash probe (broadcast) or a corpus sort (merge join) — measured
-        // 17-20 s at 180M rows where this is ~2 s.
-        val cellAggs = scala.collection.mutable.ArrayBuffer[Column]()
-        cellAggs += count(lit(1)).as("_cn")
-        cellAggs += sum(y).as("_csy")
-        cellAggs += sum(y * y).as("_csyy")
-        for (i <- 0 until p) {
-          cellAggs += sum(x(i)).as(s"_csx$i")
-          cellAggs += sum(x(i) * y).as(s"_csxy$i")
-        }
-        for (i <- 0 until p; j <- i until p)
-          cellAggs += sum(x(i) * x(j)).as(s"_csxx_${i}_$j")
-        val cells = d.df.groupBy(col(groupCol), col(fe))
-          .agg(cellAggs.head, cellAggs.tail.toSeq: _*)
-        val cn = col("_cn").cast("double")
-        val gAggs = scala.collection.mutable.ArrayBuffer[Column]()
-        gAggs += sum(col("_cn")).as("_n")
-        gAggs += sum(lit(0.0)).as("_sy") // demeaned y sums to zero per cell
-        gAggs += sum(col("_csyy") - col("_csy") * col("_csy") / cn).as("_syy")
-        gAggs += count(lit(1)).as("_L") // one row per (group, fe) cell
-        for (i <- 0 until p)
-          gAggs += sum(col(s"_csxy$i") - col(s"_csx$i") * col("_csy") / cn).as(s"_sxy$i")
-        for (i <- 0 until p; j <- i until p)
-          gAggs += sum(col(s"_csxx_${i}_$j") - col(s"_csx$i") * col(s"_csx$j") / cn)
-            .as(s"_sxx_${i}_$j")
-        cells.groupBy(col(groupCol)).agg(gAggs.head, gAggs.tail.toSeq: _*)
+      case None => MomentsKernel.aggregate(d.df, Seq(col(groupCol)), col(Y), xs)
+      case Some(fe) => MomentsKernel.keyedWithin(d.df, groupCol, fe, col(Y), xs)
     }
-    require(maxGroups >= 1L, s"maxGroups must be >= 1, got $maxGroups")
-
-    val spark = df.sparkSession
-    import spark.implicits._
-    // optional guard: one cheap count over the cached moment table (G small
-    // rows) — the base scan/agg runs once; the solve below reuses the cache
-    val moments =
-      if (maxGroups < Long.MaxValue) {
-        // lazy staged truncation (Staging.stage), not persist: the guard count materializes
-        // the moment table once and the solve below reuses the blocks; a
-        // persist could never be unpersisted (the result is lazy) and
-        // would leak a CacheManager entry per call
-        val m = grouped.staged
-        val g = m.count()
-        require(g <= maxGroups,
-          s"$g groups exceeds maxGroups=$maxGroups; raise the guard or pre-filter")
-        m
-      } else grouped
+    val moments = MomentsKernel.capGroups(grouped, maxGroups)
 
     // executor-side per-group solve: a narrow flatMap over the moment rows.
     // Each row is one group's sufficient statistics (O(p²) doubles); the
     // Cholesky/QR solve is local to it, so the output is a distributed
     // DataFrame and G scales to millions without driver memory growth.
+    val spark = df.sparkSession
+    import spark.implicits._
     val displayNames = d.displayNames
-    val xNames = d.xNames
+    val pN = d.xNames.length
     val hasFe = feOpt.isDefined
     val out = moments.flatMap { r =>
-      def dd(name: String): Double = r.getAs[Any](name) match {
-        case null => 0.0
-        case v: Number => v.doubleValue
-      }
-      val pN = xNames.length
       val g = String.valueOf(r.getAs[Any](groupCol))
-      val n = r.getAs[Long]("_n").toDouble
-      val xtx = breeze.linalg.DenseMatrix.tabulate(pN, pN)((i, j) =>
-        if (i <= j) dd(s"_sxx_${i}_$j") else dd(s"_sxx_${j}_$i"))
-      val xty = breeze.linalg.DenseVector.tabulate(pN)(i => dd(s"_sxy$i"))
-      val solved = LinAlg.solveDetecting(xtx, xty)
+      val m = MomentsKernel.readRaw(r, pN)
+      val n = m.n
+      val solved = LinAlg.solveDetecting(m.sxx, m.sxy)
       val beta = solved.beta
       val keep = solved.keepIdx
-      val syy = dd("_syy"); val sy = dd("_sy")
       val rss = {
-        val xtyK = breeze.linalg.DenseVector(keep.map(xty(_)).toArray)
+        val xtyK = breeze.linalg.DenseVector(keep.map(m.sxy(_)).toArray)
         val xtxK = breeze.linalg.DenseMatrix.tabulate(keep.length, keep.length)(
-          (i, j) => xtx(keep(i), keep(j)))
-        syy - 2.0 * beta.dot(xtyK) + beta.dot(xtxK * beta)
+          (i, j) => m.sxx(keep(i), keep(j)))
+        m.syy - 2.0 * beta.dot(xtyK) + beta.dot(xtxK * beta)
       }
       // FE path: moments are demeaned, so syy IS the within TSS and the
       // absorbed FE levels spend df (mirrors fitDemean's dfResOf)
-      val dfFe = if (hasFe) dd("_L") else 0.0
-      val tss = if (hasFe) syy else syy - sy * sy / n
+      val dfFe = if (hasFe) MomentsKernel.double(r, MomentsKernel.Levels) else 0.0
+      val tss = if (hasFe) m.syy else m.syy - m.sy * m.sy / n
       val dfRes = math.max(n - keep.length - dfFe, 1.0)
       val xtxInv = solved.xtxInv
       keep.zipWithIndex.map { case (origIdx, ki) =>
@@ -1007,6 +942,7 @@ object Dbreg {
       keptX.zipWithIndex.foldLeft(col(Y).cast("double")) { case (acc, (nm, i)) =>
         acc - lit(beta(i)) * col(nm).cast("double")
       }
+    val keptXd = keptX.map(col(_).cast("double"))
 
     val (vmat, vtype, nClusters) = v match {
       case Vcov.Iid =>
@@ -1025,17 +961,17 @@ object Dbreg {
                 "__g_rssg",
                 col("__g_syy") - lit(2.0) * col("__g_yhat") * col("__g_sy") +
                   col("__g_n") * col("__g_yhat") * col("__g_yhat"))
-            MomentsKernel.meatTriangle(cells, col("__g_rssg"), keptX, intercept = false)
+            MomentsKernel.hc1Meat(cells, col("__g_rssg"), keptXd)
           case None =>
             val e = resid(d.df)
             // WLS score = w·e·x ⇒ HC1 meat scale = (w·e)²
             val s = weightCol.map(wc => e * col(wc).cast("double")).getOrElse(e)
-            MomentsKernel.meatTriangle(d.df, s * s, keptX, intercept = false)
+            MomentsKernel.hc1Meat(d.df, s * s, keptXd)
         }
         (LinAlg.vcovHc1(xtxInv, meat, nobsOrig.toDouble, dfRes), "hc1", None)
 
       case Vcov.Cluster(cl) =>
-        val scores = compressCells match {
+        val (g, meat) = compressCells match {
           case Some(cc) =>
             // cluster×cell stats, ŷ from the cell's x values (A12)
             val gc = cc.base
@@ -1049,32 +985,15 @@ object Dbreg {
             val yhat = keptX.zipWithIndex
               .map { case (nm, i) => lit(beta(i)) * col(nm).cast("double") }
               .reduce(_ + _)
-            val withResid = withDesign
-              .withColumn("__g_rsum", col("__g_sy") - col("__g_n") * yhat)
-            withResid
-              .groupBy(col(cl))
-              .agg(
-                sum(col("__g_rsum") * col(keptX.head)).as(s"__s0"),
-                keptX.tail.zipWithIndex.map { case (nm, i) =>
-                  sum(col("__g_rsum") * col(nm)).as(s"__s${i + 1}")
-                }: _*)
+            MomentsKernel.cr1Meat(withDesign, col(cl),
+              col("__g_sy") - col("__g_n") * yhat, keptX.map(col))
           case None =>
-            val e0 = resid(d.df)
+            val e = resid(d.df)
             // WLS cluster score = Σ_g w·e·x
-            val e = weightCol.map(wc => e0 * col(wc).cast("double")).getOrElse(e0)
-            d.df
-              .groupBy(col(cl))
-              .agg(
-                sum(e * col(keptX.head)).as("__s0"),
-                keptX.tail.zipWithIndex.map { case (nm, i) =>
-                  sum(e * col(nm)).as(s"__s${i + 1}")
-                }: _*)
+            MomentsKernel.cr1Meat(d.df, col(cl),
+              weightCol.map(wc => e * col(wc).cast("double")).getOrElse(e),
+              keptX.map(col))
         }
-        val sNames = keptX.indices.map(i => s"__s$i")
-        val cached = scores.persist(StorageLevel.MEMORY_AND_DISK)
-        val g = cached.count()
-        val meat = MomentsKernel.meatTriangle(cached, lit(1.0), sNames, intercept = false)
-        cached.unpersist()
         val nested =
           if (ssc == "nested") nestedBase.map(countNestedFeLevels(_, f.fe, cl)).getOrElse(0.0)
           else 0.0

@@ -350,27 +350,15 @@ object Glm {
     val xs = kept.map(nm => exprByName(nm).cast("double"))
     val inv = res.vcov
     val n = res.nobs
-    val meatAndScale: (DenseMatrix[Double], Double) = v match {
+    val vc = v match {
       case Vcov.Hc1 =>
-        val aggs = scala.collection.mutable.ArrayBuffer[Column]()
-        for (i <- 0 until p; j <- i until p)
-          aggs += sum(wt * r * r * xs(i) * xs(j)).as(s"_m_${i}_$j")
-        val row = base.agg(aggs.head, aggs.tail.toSeq: _*).collect()(0)
-        (upperFromRow(row, p), n / math.max(n - p, 1.0))
+        val meat = MomentsKernel.hc1Meat(base, wt * r * r, xs)
+        LinAlg.vcovHc1(inv, meat, n, math.max(n - p, 1.0))
       case Vcov.Cluster(c) =>
-        val sAggs = (0 until p).map(i => sum(u * xs(i)).as(s"_s$i"))
-        val sg = base.groupBy(col(c)).agg(sAggs.head, sAggs.tail: _*)
-        val aggs = scala.collection.mutable.ArrayBuffer[Column]()
-        aggs += count(lit(1)).cast("double").as("_G")
-        for (i <- 0 until p; j <- i until p)
-          aggs += sum(col(s"_s$i") * col(s"_s$j")).as(s"_m_${i}_$j")
-        val row = sg.agg(aggs.head, aggs.tail.toSeq: _*).collect()(0)
-        val g = row.getAs[Double]("_G")
-        (upperFromRow(row, p), (g / (g - 1.0)) * (n / math.max(n - p, 1.0)))
+        val (g, meat) = MomentsKernel.cr1Meat(base, col(c), u, xs)
+        LinAlg.vcovCr1(inv, meat, n, g.toDouble, p)
       case Vcov.Iid => throw new IllegalStateException("unreachable")
     }
-    val (meat, scale) = meatAndScale
-    val vc = (inv * meat * inv) * scale
     val norm = new NormalDistribution(0.0, 1.0)
     val table = res.coeftable.zipWithIndex.map { case (r, j) =>
       val se = math.sqrt(math.max(vc(j, j), 0.0))
@@ -379,15 +367,6 @@ object Glm {
       r.copy(stdError = se, statistic = z, pValue = pv)
     }
     res.copy(coeftable = table, vcov = vc)
-  }
-
-  private def upperFromRow(row: org.apache.spark.sql.Row, p: Int): DenseMatrix[Double] = {
-    def dd(name: String): Double = row.getAs[Any](name) match {
-      case null => 0.0
-      case x: Number => x.doubleValue
-    }
-    DenseMatrix.tabulate(p, p)((i, j) =>
-      if (i <= j) dd(s"_m_${i}_$j") else dd(s"_m_${j}_$i"))
   }
 
   /** Grouped GLM: one IRLS fit PER GROUP — the "per-domain quality
@@ -524,30 +503,19 @@ object Glm {
     }
 
     def momentAgg(wz: DataFrame): DataFrame = {
-      def xc(i: Int) = col(xNames(i))
-      val w2 = col("_w2"); val z = col("_z")
-      val aggs = scala.collection.mutable.ArrayBuffer[Column]()
-      aggs += sum(col("_wt")).as("_n")
-      aggs += sum(col("_devt")).as("_dev")
-      aggs += sum(col("_wt") * col("_yb")).as("_swy")
-      aggs += sum(col("_wt") * col("_ybb")).as("_syy")
-      aggs += sum(col("_ylogy")).as("_sylogy")
-      for (i <- 0 until p) {
-        aggs += sum(w2 * xc(i) * z).as(s"_sxy$i")
-        for (j <- i until p) aggs += sum(w2 * xc(i) * xc(j)).as(s"_sxx_${i}_$j")
-      }
-      wz.groupBy(col("_g")).agg(aggs.head, aggs.tail.toSeq: _*)
+      val aggs = Seq(
+        sum(col("_wt")).as("_wn"),
+        sum(col("_devt")).as("_dev"),
+        sum(col("_wt") * col("_yb")).as("_swy"),
+        sum(col("_wt") * col("_ybb")).as("_swyy"),
+        sum(col("_ylogy")).as("_sylogy")) ++
+        MomentsKernel.normalAggs(col("_z"), xNames.map(col), col("_w2"))
+      wz.groupBy(col("_g")).agg(aggs.head, aggs.tail: _*)
     }
 
-    def solveRow(r: org.apache.spark.sql.Row): (LinAlg.SolveOutcome, Double, Double) = {
-      def dd(name: String): Double = r.getAs[Any](name) match {
-        case null => 0.0
-        case v: Number => v.doubleValue
-      }
-      val xtx = breeze.linalg.DenseMatrix.tabulate(p, p)((i, j) =>
-        if (i <= j) dd(s"_sxx_${i}_$j") else dd(s"_sxx_${j}_$i"))
-      val xty = breeze.linalg.DenseVector.tabulate(p)(i => dd(s"_sxy$i"))
-      (LinAlg.solveDetecting(xtx, xty), dd("_n"), dd("_dev"))
+    def solveRow(r: org.apache.spark.sql.Row): LinAlg.SolveOutcome = {
+      val (xtx, xty) = MomentsKernel.readNormal(r, p)
+      LinAlg.solveDetecting(xtx, xty)
     }
 
     var betas: DataFrame = null
@@ -555,7 +523,7 @@ object Glm {
       val src = if (k == 1) work else work.join(betas, "_g")
       val mom = momentAgg(withWZ(src, haveBeta = k > 1))
       betas = mom.map { r =>
-        val (sol, _, _) = solveRow(r)
+        val sol = solveRow(r)
         val full = Array.fill(p)(0.0)
         sol.keepIdx.zipWithIndex.foreach { case (orig, ki) => full(orig) = sol.beta(ki) }
         (r.getAs[String]("_g"), full)
@@ -568,12 +536,10 @@ object Glm {
     val thetaLocal = theta
     lastMom.flatMap { r =>
       val g = r.getAs[String]("_g")
-      val (sol, n, dev) = solveRow(r)
-      def dd(nm: String): Double = r.getAs[Any](nm) match {
-        case null => 0.0
-        case v: Number => v.doubleValue
-      }
-      val swy = dd("_swy"); val syy = dd("_syy"); val sylogy = dd("_sylogy")
+      val sol = solveRow(r)
+      def dd(nm: String): Double = MomentsKernel.double(r, nm)
+      val n = dd("_wn"); val dev = dd("_dev")
+      val swy = dd("_swy"); val syy = dd("_swyy"); val sylogy = dd("_sylogy")
       val yb = swy / n
       val nullDev = fam match {
         case "binomial" =>

@@ -24,7 +24,7 @@ import graft.model.ModelMatrix
   * first-stage partial F statistics are then O(p³) driver algebra with NO
   * second scan. HC1/cluster sandwiches take exactly one extra scan, with
   * x̂ = Zγ̂ spelled as literal-coefficient column expressions (the engine's
-  * literal-β residual trick, MomentsKernel.meatTriangle).
+  * literal-β residual trick, MomentsKernel.hc1Meat and cr1Meat).
   */
 object Iv {
 
@@ -191,26 +191,10 @@ object Iv {
             .reduce(_ + _)
         v match {
           case Vcov.Hc1 =>
-            val aggs = scala.collection.mutable.ArrayBuffer[Column]()
-            for (i <- 0 until pk; j <- i until pk)
-              aggs += sum(u * u * xhat(i) * xhat(j)).as(s"_m_${i}_$j")
-            val row = jointC.agg(aggs.head, aggs.tail.toSeq: _*).collect()(0)
-            val meat = LinAlg.symmetricFromUpper(pk,
-              (for (i <- 0 until pk; j <- i until pk) yield
-                row.getAs[Double](s"_m_${i}_$j")).toArray)
-            LinAlg.vcovHc1(sol.xtxInv, meat, n, dfRes)
+            LinAlg.vcovHc1(sol.xtxInv, MomentsKernel.hc1Meat(jointC, u * u, xhat), n, dfRes)
           case Vcov.Cluster(c) =>
-            val sAggs = (0 until pk).map(i => sum(u * xhat(i)).as(s"_s$i"))
-            val sg = jointC.groupBy(col(c)).agg(sAggs.head, sAggs.tail: _*)
-            val aggs = scala.collection.mutable.ArrayBuffer[Column]()
-            aggs += count(lit(1)).cast("double").as("_G")
-            for (i <- 0 until pk; j <- i until pk)
-              aggs += sum(col(s"_s$i") * col(s"_s$j")).as(s"_m_${i}_$j")
-            val row = sg.agg(aggs.head, aggs.tail.toSeq: _*).collect()(0)
-            val meat = LinAlg.symmetricFromUpper(pk,
-              (for (i <- 0 until pk; j <- i until pk) yield
-                row.getAs[Double](s"_m_${i}_$j")).toArray)
-            LinAlg.vcovCr1(sol.xtxInv, meat, n, row.getAs[Double]("_G"), pk)
+            val (g, meat) = MomentsKernel.cr1Meat(jointC, col(c), u, xhat)
+            LinAlg.vcovCr1(sol.xtxInv, meat, n, g.toDouble, pk)
           case Vcov.Iid => throw new IllegalStateException("unreachable")
         }
     }

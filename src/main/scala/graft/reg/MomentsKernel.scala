@@ -1,8 +1,10 @@
 package graft.reg
 
 import breeze.linalg.{DenseMatrix, DenseVector}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+
+import graft.linalg.LinAlg
 
 /** Result of a one-pass moment aggregation: everything needed to solve the
   * normal equations. `xtx`/`xty` include the intercept row when requested.
@@ -19,14 +21,27 @@ private[graft] final case class MomentsResult(
     plan: String = "" // formatted physical plan of the aggregation (sql_only analogue)
 )
 
-/** Single-pass sufficient-statistics aggregation (reference dbreg.R:724-757).
+/** The sufficient-statistics kernel every estimator shares (reference
+  * dbreg.R:724-757): the upper triangle of [1, X, y]ᵀW[1, X, y] and the
+  * HC1 / CR1 sandwich meats. This is the only code that names a triangle
+  * column or reads one back.
   *
-  * Emits the full upper triangle of [1, X, y]ᵀW[1, X, y] as p(p+1)/2 + 2p + 3
+  *  - aggregates: [[rawAggs]] (n, Σy, Σy², Σx, Σxy, Σxxᵀ; global or keyed
+  *    via [[aggregate]], within-FE via [[keyedWithin]]), [[normalAggs]]
+  *    (the weighted XᵀWX / XᵀWy pair alone) and [[triangle]]
+  *    (Σ scale·xᵢ·xⱼ);
+  *  - readers: [[readRaw]], [[readNormal]], [[readTriangle]] and [[double]]
+  *    turn one aggregate row into symmetric matrices and vectors (null, the
+  *    sum over no rows, reads as 0). They touch nothing but the row, so
+  *    they are safe inside an executor-side `flatMap` over keyed rows;
+  *  - meats: [[hc1Meat]] and [[cr1Meat]], one query each.
+  *
+  * Up to [[FusedThreshold]] regressors the triangle is p(p+1)/2 + 2p + 3
   * `sum` columns in ONE `df.agg` — Catalyst executes it as a partial+final
   * hash aggregate with whole-stage codegen, so the cost is one scan
-  * regardless of p (fine for p ≲ 100; a fused TypedImperativeAggregate is a
-  * possible later optimization, SURVEY.md §4.3). All inputs are cast to
-  * double before multiplying (mirrors the reference's CAST AS FLOAT,
+  * regardless of p. Wider designs switch to the fused one-buffer aggregate
+  * (graft.functions.MomentsAgg). [[compute]] casts all inputs to double
+  * before multiplying (mirrors the reference's CAST AS FLOAT,
   * dbreg.R:958-962).
   */
 private[graft] object MomentsKernel {
@@ -35,6 +50,203 @@ private[graft] object MomentsKernel {
     * switch to the fused TypedImperativeAggregate (graft.functions.MomentsAgg)
     * which carries the whole triangle in one buffer per partition. */
   val FusedThreshold = 24
+
+  /** Column names of one raw-moments aggregate. */
+  final case class Layout(
+      n: String,
+      sy: String,
+      syy: String,
+      sx: Int => String,
+      sxy: Int => String,
+      sxx: (Int, Int) => String)
+
+  private def prefixed(p: String) = Layout(s"${p}n", s"${p}sy", s"${p}syy",
+    i => s"${p}sx$i", i => s"${p}sxy$i", (i, j) => s"${p}sxx_${i}_$j")
+
+  /** The engine's own names (`_n`, `_sy`, …, `_sxx_i_j`). */
+  val Keyed: Layout = prefixed("_")
+  private val Cells: Layout = prefixed("_c")
+  /** The public names of `StreamingReg.momentAggs`. */
+  val Streamed: Layout = Layout("n", "sum_y", "sum_y_sq",
+    i => s"sum_x$i", i => s"sum_x${i}_y", (i, j) => s"sum_x${i}_x$j")
+
+  /** The [[keyedWithin]] column counting each key's (key, fe) cells: the
+    * FE levels the within transform absorbs. */
+  val Levels = "_L"
+
+  /** Raw sums of one aggregate row: n (Σw, or the row count), Σy, Σy²,
+    * Σx, Σxy and the symmetric Σxxᵀ — additive across disjoint inputs. */
+  final case class RawMoments(
+      n: Double,
+      sy: Double,
+      syy: Double,
+      sx: DenseVector[Double],
+      sxy: DenseVector[Double],
+      sxx: DenseMatrix[Double]) {
+    def +(o: RawMoments): RawMoments = RawMoments(n + o.n, sy + o.sy,
+      syy + o.syy, sx + o.sx, sxy + o.sxy, sxx + o.sxx)
+    def -(o: RawMoments): RawMoments = RawMoments(n - o.n, sy - o.sy,
+      syy - o.syy, sx - o.sx, sxy - o.sxy, sxx - o.sxx)
+
+    /** [1, X]ᵀ[1, X] and [1, X]ᵀy: row/column 0 carries n and Σx. */
+    def withIntercept: (DenseMatrix[Double], DenseVector[Double]) = {
+      val p = sx.length
+      val m = DenseMatrix.zeros[Double](p + 1, p + 1)
+      m(0, 0) = n
+      for (i <- 0 until p) { m(0, i + 1) = sx(i); m(i + 1, 0) = sx(i) }
+      for (i <- 0 until p; j <- 0 until p) m(i + 1, j + 1) = sxx(i, j)
+      (m, DenseVector.vertcat(DenseVector(sy), sxy))
+    }
+  }
+
+  // ------------------------------------------------------------ aggregates
+
+  private def upper(name: (Int, Int) => String, p: Int)(
+      cell: (Int, Int) => Column): Seq[Column] =
+    for (i <- 0 until p; j <- i until p) yield sum(cell(i, j)).as(name(i, j))
+
+  private def tagged(tag: String): (Int, Int) => String =
+    (i, j) => s"_${tag}_${i}_$j"
+
+  /** n, Σy, Σy², then (Σxᵢ, Σxᵢy) per regressor, then Σxᵢxⱼ (i ≤ j); with
+    * a weight every term is `term·w` and n is Σw. */
+  def rawAggs(
+      y: Column,
+      xs: Seq[Column],
+      w: Option[Column] = None,
+      names: Layout = Keyed
+  ): Seq[Column] = {
+    def ww(c: Column): Column = w.map(c * _).getOrElse(c)
+    val p = xs.length
+    Seq(
+      w.map(sum(_)).getOrElse(count(lit(1)).cast("double")).as(names.n),
+      sum(ww(y)).as(names.sy),
+      sum(ww(y * y)).as(names.syy)) ++
+      (0 until p).flatMap(i => Seq(
+        sum(ww(xs(i))).as(names.sx(i)),
+        sum(ww(xs(i) * y)).as(names.sxy(i)))) ++
+      upper(names.sxx, p)((i, j) => ww(xs(i) * xs(j)))
+  }
+
+  /** The weighted normal equations alone: Σxᵢy·w, then Σxᵢxⱼ·w. */
+  def normalAggs(y: Column, xs: Seq[Column], w: Column): Seq[Column] =
+    xs.indices.map(i => sum(xs(i) * y * w).as(Keyed.sxy(i))) ++
+      upper(Keyed.sxx, xs.length)((i, j) => xs(i) * xs(j) * w)
+
+  /** [[rawAggs]] over all of `df` (no keys) or per key. */
+  def aggregate(
+      df: DataFrame,
+      keys: Seq[Column],
+      y: Column,
+      xs: Seq[Column],
+      names: Layout = Keyed
+  ): DataFrame = {
+    val aggs = rawAggs(y, xs, names = names)
+    if (keys.isEmpty) df.agg(aggs.head, aggs.tail: _*)
+    else df.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** Per-`key` moments of y and `xs` demeaned within each (key, fe) cell,
+    * plus [[Levels]], without a demean join: the centering identity
+    *   Σ (a − ā_c)(b − b̄_c) = Σ_cells (S_ab,c − S_a,c·S_b,c / n_c)
+    * turns one keyed aggregate of raw cell moments into the within
+    * moments (the compress strategy's trick, per key). Demeaned y and x
+    * sum to zero per cell, so Σy and Σx are 0. */
+  def keyedWithin(
+      df: DataFrame,
+      key: String,
+      fe: String,
+      y: Column,
+      xs: Seq[Column]
+  ): DataFrame = {
+    val p = xs.length
+    val c = Cells
+    val cells = aggregate(df, Seq(col(key), col(fe)), y, xs, c)
+    def centered(ab: String, a: String, b: String): Column =
+      col(ab) - col(a) * col(b) / col(c.n)
+    val aggs = Seq(
+      sum(col(c.n)).as(Keyed.n),
+      sum(lit(0.0)).as(Keyed.sy),
+      sum(centered(c.syy, c.sy, c.sy)).as(Keyed.syy),
+      count(lit(1)).as(Levels)) ++
+      (0 until p).flatMap(i => Seq(
+        sum(lit(0.0)).as(Keyed.sx(i)),
+        sum(centered(c.sxy(i), c.sx(i), c.sy)).as(Keyed.sxy(i)))) ++
+      upper(Keyed.sxx, p)((i, j) => centered(c.sxx(i, j), c.sx(i), c.sx(j)))
+    cells.groupBy(col(key)).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** Σ scale·xᵢ·xⱼ (i ≤ j) under `tag`, evaluated as (scale·xᵢ)·xⱼ;
+    * without a scale Σ xᵢ·xⱼ. */
+  def triangle(tag: String, xs: Seq[Column], scale: Option[Column] = None)
+      : Seq[Column] =
+    upper(tagged(tag), xs.length)((i, j) =>
+      scale.map(_ * xs(i)).getOrElse(xs(i)) * xs(j))
+
+  // --------------------------------------------------------------- readers
+
+  /** A numeric column of `row` as a double; null (a sum over no rows) is 0. */
+  def double(row: Row, name: String): Double = row.getAs[Any](name) match {
+    case null => 0.0
+    case v: Number => v.doubleValue
+  }
+
+  private def readUpper(row: Row, name: (Int, Int) => String, p: Int)
+      : DenseMatrix[Double] =
+    LinAlg.symmetricFromUpper(p,
+      (for (i <- 0 until p; j <- i until p) yield double(row, name(i, j))).toArray)
+
+  def readRaw(row: Row, p: Int, names: Layout = Keyed): RawMoments =
+    RawMoments(double(row, names.n), double(row, names.sy), double(row, names.syy),
+      DenseVector.tabulate(p)(i => double(row, names.sx(i))),
+      DenseVector.tabulate(p)(i => double(row, names.sxy(i))),
+      readUpper(row, names.sxx, p))
+
+  /** XᵀWX and XᵀWy of a [[normalAggs]] (or [[rawAggs]]) row. */
+  def readNormal(row: Row, p: Int): (DenseMatrix[Double], DenseVector[Double]) =
+    (readUpper(row, Keyed.sxx, p),
+      DenseVector.tabulate(p)(i => double(row, Keyed.sxy(i))))
+
+  def readTriangle(row: Row, tag: String, p: Int): DenseMatrix[Double] =
+    readUpper(row, tagged(tag), p)
+
+  /** The packed [[graft.functions.MomentsAgg]] buffer: n, Σy, Σy², Σx, Σxy,
+    * then the Σxxᵀ upper triangle row-major. */
+  private def fromPacked(arr: scala.collection.Seq[Double], p: Int): RawMoments = {
+    val a = arr.toArray
+    RawMoments(a(0), a(1), a(2),
+      DenseVector(a.slice(3, 3 + p)), DenseVector(a.slice(3 + p, 3 + 2 * p)),
+      LinAlg.symmetricFromUpper(p, a.drop(3 + 2 * p)))
+  }
+
+  // ---------------------------------------------------------------- meats
+
+  /** HC1 meat Σ scale·xxᵀ over `df` (scale = e² for OLS, rss_g for
+    * compress cells): one aggregate, one row. */
+  def hc1Meat(df: DataFrame, scale: Column, xs: Seq[Column]): DenseMatrix[Double] = {
+    val aggs = triangle("m", xs, Some(scale))
+    readTriangle(df.agg(aggs.head, aggs.tail: _*).collect()(0), "m", xs.length)
+  }
+
+  /** CR1 meat: per-cluster scores s_g = Σ_{i∈g} score·xᵢ (a keyed aggregate
+    * with map-side combine), then the cluster count G and Σ_g s_g s_gᵀ
+    * from ONE aggregate over the score table — one query, nothing cached. */
+  def cr1Meat(
+      df: DataFrame,
+      cluster: Column,
+      score: Column,
+      xs: Seq[Column]
+  ): (Long, DenseMatrix[Double]) = {
+    val sNames = xs.indices.map(i => s"_s$i")
+    val sAggs = xs.indices.map(i => sum(score * xs(i)).as(sNames(i)))
+    val scores = df.groupBy(cluster).agg(sAggs.head, sAggs.tail: _*)
+    val row = scores
+      .agg(count(lit(1)).as("_G"), triangle("m", sNames.map(col)): _*)
+      .collect()(0)
+    (row.getAs[Long]("_G"), readTriangle(row, "m", xs.length))
+  }
+
+  // ---------------------------------------------------------- global solve
 
   def compute(
       df: DataFrame,
@@ -45,155 +257,44 @@ private[graft] object MomentsKernel {
       extraAggs: Seq[(String, Column)] = Nil,
       forceFused: Option[Boolean] = None
   ): MomentsResult = {
-    if (forceFused.getOrElse(xNames.length > FusedThreshold))
-      return computeFused(df, yName, xNames, intercept, weightName, extraAggs)
     val p = xNames.length
-    val y = col(yName).cast("double")
+    val fused = forceFused.getOrElse(p > FusedThreshold)
     val w = weightName.map(c => col(c).cast("double"))
-    def ww(c: Column): Column = w.map(c * _).getOrElse(c)
-    def x(i: Int): Column = col(xNames(i)).cast("double")
-
-    val aggs = scala.collection.mutable.ArrayBuffer[Column]()
-    aggs += count(lit(1)).as("_nrows")
-    aggs += (w match {
-      case Some(wc) => sum(wc)
-      case None => count(lit(1)).cast("double")
-    }).as("_n")
-    aggs += sum(ww(y)).as("_sy")
-    aggs += sum(ww(y * y)).as("_syy")
-    for (i <- 0 until p) {
-      aggs += sum(ww(x(i))).as(s"_sx$i")
-      aggs += sum(ww(x(i) * y)).as(s"_sxy$i")
-    }
-    for (i <- 0 until p; j <- i until p)
-      aggs += sum(ww(x(i) * x(j))).as(s"_sxx_${i}_$j")
-    extraAggs.foreach { case (nm, c) => aggs += c.as(nm) }
-
-    val aggDf = df.agg(aggs.head, aggs.tail.toSeq: _*)
-    val planStr = aggDf.queryExecution.explainString(
-      org.apache.spark.sql.execution.SimpleMode)
-    val row = aggDf.collect()(0)
-    def d(name: String): Double = row.getAs[Any](name) match {
-      case null => 0.0
-      case v: Double => v
-      case v: Number => v.doubleValue
-    }
-
-    val nRows = row.getAs[Long]("_nrows")
-    val n = d("_n")
-    val sumY = d("_sy")
-    val sumYSq = d("_syy")
-
-    val dim = if (intercept) p + 1 else p
-    val off = if (intercept) 1 else 0
-    val xtx = DenseMatrix.zeros[Double](dim, dim)
-    val xty = DenseVector.zeros[Double](dim)
-    if (intercept) {
-      xtx(0, 0) = n
-      xty(0) = sumY
-      for (i <- 0 until p) {
-        val s = d(s"_sx$i")
-        xtx(0, i + off) = s; xtx(i + off, 0) = s
-      }
-    }
-    for (i <- 0 until p) {
-      xty(i + off) = d(s"_sxy$i")
-      for (j <- i until p) {
-        val s = d(s"_sxx_${i}_$j")
-        xtx(i + off, j + off) = s; xtx(j + off, i + off) = s
-      }
-    }
-    val names =
-      (if (intercept) Array("(Intercept)") else Array.empty[String]) ++ xNames
-    val extras = extraAggs.map { case (nm, _) => nm -> d(nm) }.toMap
-    MomentsResult(names, xtx, xty, nRows, n, sumY, sumYSq, extras, planStr)
-  }
-
-  /** Fused one-buffer variant (wide p): single custom aggregate instead of
-    * p(p+1)/2 sum columns. Same semantics, same partial+final execution. */
-  private def computeFused(
-      df: DataFrame,
-      yName: String,
-      xNames: Seq[String],
-      intercept: Boolean,
-      weightName: Option[String],
-      extraAggs: Seq[(String, Column)]
-  ): MomentsResult = {
-    val p = xNames.length
-    val w = weightName.map(col(_).cast("double")).getOrElse(lit(1.0))
-    val mcol = graft.functions.MomentsAgg(w, col(yName), xNames.map(col)).as("_m")
-    val aggs = Seq(mcol, count(lit(1)).as("_nrows")) ++
+    val moments =
+      if (fused)
+        Seq(graft.functions.MomentsAgg(w.getOrElse(lit(1.0)), col(yName),
+          xNames.map(col)).as("_m"))
+      else
+        rawAggs(col(yName).cast("double"), xNames.map(col(_).cast("double")), w)
+    val aggs = (count(lit(1)).as("_nrows") +: moments) ++
       extraAggs.map { case (nm, c) => c.as(nm) }
     val aggDf = df.agg(aggs.head, aggs.tail: _*)
     val planStr = aggDf.queryExecution.explainString(
       org.apache.spark.sql.execution.SimpleMode)
     val row = aggDf.collect()(0)
-    val arr = row.getAs[scala.collection.Seq[Double]]("_m")
-    val nRows = row.getAs[Long]("_nrows")
-    def d(name: String): Double = row.getAs[Any](name) match {
-      case null => 0.0
-      case v: Double => v
-      case v: Number => v.doubleValue
-    }
-
-    val n = arr(0); val sumY = arr(1); val sumYSq = arr(2)
-    val dim = if (intercept) p + 1 else p
-    val off = if (intercept) 1 else 0
-    val xtx = DenseMatrix.zeros[Double](dim, dim)
-    val xty = DenseVector.zeros[Double](dim)
-    if (intercept) {
-      xtx(0, 0) = n; xty(0) = sumY
-      for (i <- 0 until p) { val s = arr(3 + i); xtx(0, i + off) = s; xtx(i + off, 0) = s }
-    }
-    var k = 3 + 2 * p
-    for (i <- 0 until p) {
-      xty(i + off) = arr(3 + p + i)
-      for (j <- i until p) {
-        val s = arr(k); k += 1
-        xtx(i + off, j + off) = s; xtx(j + off, i + off) = s
-      }
-    }
+    val raw =
+      if (fused) fromPacked(row.getAs[scala.collection.Seq[Double]]("_m"), p)
+      else readRaw(row, p)
+    val (xtx, xty) = if (intercept) raw.withIntercept else (raw.sxx, raw.sxy)
     val names =
       (if (intercept) Array("(Intercept)") else Array.empty[String]) ++ xNames
-    val extras = extraAggs.map { case (nm, _) => nm -> d(nm) }.toMap
-    MomentsResult(names, xtx, xty, nRows, n, sumY, sumYSq, extras, planStr)
+    val extras = extraAggs.map { case (nm, _) => nm -> double(row, nm) }.toMap
+    MomentsResult(names, xtx, xty, row.getAs[Long]("_nrows"), raw.n, raw.sy,
+      raw.syy, extras, planStr)
   }
 
-  /** Meat triangle Σ s²·xᵢxⱼ over `df` given a per-row scale column
-    * (e² for HC1, rss_g for compress-HC1). Intercept treated as x ≡ 1.
-    * One scan, same codegen'd shape as `compute`. */
-  def meatTriangle(
-      df: DataFrame,
-      scale: Column,
-      xNames: Seq[String],
-      intercept: Boolean
-  ): DenseMatrix[Double] = {
-    val p = xNames.length
-    def x(i: Int): Column = col(xNames(i)).cast("double")
-    val aggs = scala.collection.mutable.ArrayBuffer[Column]()
-    if (intercept) {
-      aggs += sum(scale).as("_m_c_c")
-      for (i <- 0 until p) aggs += sum(scale * x(i)).as(s"_m_c_$i")
+  /** Runs the optional `maxGroups` guard of the grouped fits: one count
+    * over the keyed moment table, staged (not persisted, so no cache entry
+    * outlives the lazy result) so the solve reuses its blocks. */
+  def capGroups(moments: DataFrame, maxGroups: Long): DataFrame = {
+    require(maxGroups >= 1L, s"maxGroups must be >= 1, got $maxGroups")
+    if (maxGroups == Long.MaxValue) moments
+    else {
+      val m = graft.Staging.stage(moments)
+      val g = m.count()
+      require(g <= maxGroups,
+        s"$g groups exceeds maxGroups=$maxGroups; raise the guard or pre-filter")
+      m
     }
-    for (i <- 0 until p; j <- i until p)
-      aggs += sum(scale * x(i) * x(j)).as(s"_m_${i}_$j")
-    val row = df.agg(aggs.head, aggs.tail.toSeq: _*).collect()(0)
-    def d(name: String): Double = row.getAs[Any](name) match {
-      case null => 0.0
-      case v: Double => v
-      case v: Number => v.doubleValue
-    }
-    val dim = if (intercept) p + 1 else p
-    val off = if (intercept) 1 else 0
-    val m = DenseMatrix.zeros[Double](dim, dim)
-    if (intercept) {
-      m(0, 0) = d("_m_c_c")
-      for (i <- 0 until p) { val v = d(s"_m_c_$i"); m(0, i + off) = v; m(i + off, 0) = v }
-    }
-    for (i <- 0 until p; j <- i until p) {
-      val v = d(s"_m_${i}_$j")
-      m(i + off, j + off) = v; m(j + off, i + off) = v
-    }
-    m
   }
 }

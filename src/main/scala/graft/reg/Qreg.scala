@@ -174,25 +174,12 @@ object Qreg {
     val res = residual(beta)
     val pin = when(res >= 0, lit(tau) * res).otherwise(lit(tau - 1.0) * res)
     val inside = when(abs(res) <= lit(h), 1.0).otherwise(0.0)
-    def x(i: Int): Column = col(keptX(i)).cast("double")
-    val aggs = scala.collection.mutable.ArrayBuffer[Column]()
-    aggs += sum(pin).as("_pin")
-    for (i <- 0 until p; j <- i until p) {
-      aggs += sum(inside * x(i) * x(j)).as(s"_a_${i}_$j")
-      aggs += sum(x(i) * x(j)).as(s"_b_${i}_$j")
-    }
-    val row = d.df.agg(aggs.head, aggs.tail.toSeq: _*).collect()(0)
-    def g(nm: String): Double = row.getAs[Any](nm) match {
-      case null => 0.0
-      case v: Double => v
-      case v: Number => v.doubleValue
-    }
-    val aM = DenseMatrix.zeros[Double](p, p)
-    val bM = DenseMatrix.zeros[Double](p, p)
-    for (i <- 0 until p; j <- i until p) {
-      aM(i, j) = g(s"_a_${i}_$j") / (2.0 * h); aM(j, i) = aM(i, j)
-      bM(i, j) = tau * (1.0 - tau) * g(s"_b_${i}_$j"); bM(j, i) = bM(i, j)
-    }
+    val xs = keptX.map(col(_).cast("double"))
+    val aggs = sum(pin).as("_pin") +:
+      (MomentsKernel.triangle("a", xs, Some(inside)) ++ MomentsKernel.triangle("b", xs))
+    val row = d.df.agg(aggs.head, aggs.tail: _*).collect()(0)
+    val aM = MomentsKernel.readTriangle(row, "a", p) / (2.0 * h)
+    val bM = MomentsKernel.readTriangle(row, "b", p) * (tau * (1.0 - tau))
     val aSolve = LinAlg.solveDetecting(aM, DenseVector.zeros[Double](p))
     require(aSolve.dropIdx.isEmpty,
       "Powell bread Σ1{|r|≤h}·xxᵀ is singular: no residual mass within the " +
@@ -212,7 +199,7 @@ object Qreg {
       lit(beta(i)) * d.cols(orig).col.cast("double")
     }.reduce(_ + _)
     QregFit(rows, tau, iters, converged || tol == 0.0, m0.nRows,
-      g("_pin") / n, h, dropped, fitCol)
+      MomentsKernel.double(row, "_pin") / n, h, dropped, fitCol)
   }
 
   /** Per-group quantile fits (conditional τ-quantiles by domain — the
@@ -264,56 +251,28 @@ object Qreg {
     val spark = df.sparkSession
     import spark.implicits._
 
-    def xc(i: Int) = col(xNames(i))
-
-    // keyed moments of w·[X y] (w = lit(1) for the OLS init); init also
-    // carries Σy² for the per-group residual scale → Powell bandwidth
-    def momentAgg(src: DataFrame, w: Column, withSyy: Boolean): DataFrame = {
-      val aggs = scala.collection.mutable.ArrayBuffer[Column]()
-      aggs += count(lit(1)).cast("double").as("_n")
-      if (withSyy) aggs += sum(col("_yb") * col("_yb")).as("_syy")
-      for (i <- 0 until p) {
-        aggs += sum(w * xc(i) * col("_yb")).as(s"_sxy$i")
-        for (j <- i until p) aggs += sum(w * xc(i) * xc(j)).as(s"_sxx_${i}_$j")
-      }
-      src.groupBy(col("_g")).agg(aggs.head, aggs.tail.toSeq: _*)
-    }
-
-    def solveRow(r: org.apache.spark.sql.Row): (LinAlg.SolveOutcome, Double) = {
-      def dd(name: String): Double = r.getAs[Any](name) match {
-        case null => 0.0
-        case v: Number => v.doubleValue
-      }
-      val xtx = DenseMatrix.tabulate(p, p)((i, j) =>
-        if (i <= j) dd(s"_sxx_${i}_$j") else dd(s"_sxx_${j}_$i"))
-      val xty = DenseVector.tabulate(p)(i => dd(s"_sxy$i"))
-      (LinAlg.solveDetecting(xtx, xty), dd("_n"))
-    }
+    val xs = xNames.map(col)
 
     // per-group OLS init: β₀ plus the Powell bandwidth from the init rss
-    val init = momentAgg(rowFrame, lit(1.0), withSyy = true)
+    val init = MomentsKernel.aggregate(rowFrame, Seq(col("_g")), col("_yb"), xs)
     var betas: DataFrame = init.map { r =>
-      val (sol, n) = solveRow(r)
-      def dd(nm: String): Double = r.getAs[Any](nm) match {
-        case null => 0.0
-        case v: Number => v.doubleValue
-      }
+      val m = MomentsKernel.readRaw(r, p)
+      val sol = LinAlg.solveDetecting(m.sxx, m.sxy)
       val full = Array.fill(p)(0.0)
       sol.keepIdx.zipWithIndex.foreach { case (orig, ki) => full(orig) = sol.beta(ki) }
-      val xtyK = DenseVector(sol.keepIdx.map(i => dd(s"_sxy$i")).toArray)
-      val xtxK = DenseMatrix.tabulate(sol.keepIdx.length, sol.keepIdx.length)((i, j) => {
-        val (a, b) = (sol.keepIdx(i), sol.keepIdx(j))
-        if (a <= b) dd(s"_sxx_${a}_$b") else dd(s"_sxx_${b}_$a")
-      })
+      val keep = sol.keepIdx
+      val xtyK = DenseVector(keep.map(m.sxy(_)).toArray)
+      val xtxK = DenseMatrix.tabulate(keep.length, keep.length)((i, j) =>
+        m.sxx(keep(i), keep(j)))
       val rss = math.max(
-        dd("_syy") - 2.0 * (sol.beta dot xtyK) + (sol.beta dot (xtxK * sol.beta)), 0.0)
-      val dfRes = math.max(n - sol.keepIdx.length, 1.0)
-      val h = math.sqrt(rss / dfRes) * math.pow(math.max(n, 1.0), -1.0 / 3.0)
-      (r.getAs[String]("_g"), full, h, sol.keepIdx.toArray)
+        m.syy - 2.0 * (sol.beta dot xtyK) + (sol.beta dot (xtxK * sol.beta)), 0.0)
+      val dfRes = math.max(m.n - keep.length, 1.0)
+      val h = math.sqrt(rss / dfRes) * math.pow(math.max(m.n, 1.0), -1.0 / 3.0)
+      (r.getAs[String]("_g"), full, h, keep.toArray)
     }.toDF("_g", "_b", "_h", "_kept").staged
 
     def residual: Column =
-      col("_yb") - (0 until p).map(i => xc(i) * element_at(col("_b"), i + 1))
+      col("_yb") - (0 until p).map(i => xs(i) * element_at(col("_b"), i + 1))
         .reduce(_ + _)
 
     for (_ <- 1 to maxIter) {
@@ -321,10 +280,12 @@ object Qreg {
       val r = residual
       val w = when(r >= 0, lit(tau)).otherwise(lit(1.0 - tau)) /
         greatest(abs(r), lit(eps))
-      val mom = momentAgg(src.withColumn("__qw", w), col("__qw"), withSyy = false)
+      val aggs = MomentsKernel.normalAggs(col("_yb"), xs, col("__qw"))
+      val mom = src.withColumn("__qw", w).groupBy(col("_g")).agg(aggs.head, aggs.tail: _*)
         .join(betas.select(col("_g"), col("_h")), "_g")
       betas = mom.map { r2 =>
-        val (sol, _) = solveRow(r2)
+        val (xtx, xty) = MomentsKernel.readNormal(r2, p)
+        val sol = LinAlg.solveDetecting(xtx, xty)
         val full = Array.fill(p)(0.0)
         sol.keepIdx.zipWithIndex.foreach { case (orig, ki) => full(orig) = sol.beta(ki) }
         (r2.getAs[String]("_g"), full, r2.getAs[Double]("_h"), sol.keepIdx.toArray)
@@ -336,25 +297,17 @@ object Qreg {
     val r = residual
     val pin = when(r >= 0, lit(tau) * r).otherwise(lit(tau - 1.0) * r)
     val inside = when(abs(r) <= col("_h"), 1.0).otherwise(0.0)
-    val aggs = scala.collection.mutable.ArrayBuffer[Column]()
-    aggs += count(lit(1)).cast("double").as("_n")
-    aggs += sum(pin).as("_pin")
-    aggs += first(col("_h")).as("_hh")
-    aggs += first(col("_kept")).as("_keptg")
-    for (i <- 0 until p) {
-      aggs += first(element_at(col("_b"), i + 1)).as(s"_beta$i")
-      for (j <- i until p) {
-        aggs += sum(inside * xc(i) * xc(j)).as(s"_a_${i}_$j")
-        aggs += sum(xc(i) * xc(j)).as(s"_b_${i}_$j")
-      }
-    }
+    val aggs = Seq(
+      count(lit(1)).cast("double").as("_n"),
+      sum(pin).as("_pin"),
+      first(col("_h")).as("_hh"),
+      first(col("_kept")).as("_keptg")) ++
+      (0 until p).map(i => first(element_at(col("_b"), i + 1)).as(s"_beta$i")) ++
+      MomentsKernel.triangle("a", xs, Some(inside)) ++ MomentsKernel.triangle("b", xs)
     val names = displayNames
     val tauL = tau
-    src.groupBy(col("_g")).agg(aggs.head, aggs.tail.toSeq: _*).flatMap { row =>
-      def dd(nm: String): Double = row.getAs[Any](nm) match {
-        case null => 0.0
-        case v: Number => v.doubleValue
-      }
+    src.groupBy(col("_g")).agg(aggs.head, aggs.tail: _*).flatMap { row =>
+      def dd(nm: String): Double = MomentsKernel.double(row, nm)
       val g = row.getAs[String]("_g")
       val n = dd("_n"); val h = dd("_hh")
       val beta = Array.tabulate(p)(i => dd(s"_beta$i"))
@@ -365,14 +318,11 @@ object Qreg {
       // every term's SE)
       val kept: Array[Int] = row.getAs[scala.collection.Seq[Int]]("_keptg").toArray
       val pk = kept.length
-      val aM = DenseMatrix.tabulate(pk, pk)((i, j) => {
-        val (a, b) = (math.min(kept(i), kept(j)), math.max(kept(i), kept(j)))
-        dd(s"_a_${a}_$b") / (2.0 * h)
-      })
-      val bM = DenseMatrix.tabulate(pk, pk)((i, j) => {
-        val (a, b) = (math.min(kept(i), kept(j)), math.max(kept(i), kept(j)))
-        tauL * (1.0 - tauL) * dd(s"_b_${a}_$b")
-      })
+      val a = MomentsKernel.readTriangle(row, "a", p)
+      val b = MomentsKernel.readTriangle(row, "b", p)
+      val aM = DenseMatrix.tabulate(pk, pk)((i, j) => a(kept(i), kept(j)) / (2.0 * h))
+      val bM = DenseMatrix.tabulate(pk, pk)((i, j) =>
+        tauL * (1.0 - tauL) * b(kept(i), kept(j)))
       val ses: Array[Double] =
         if (h <= 0 || pk == 0) Array.fill(pk)(Double.NaN)
         else

@@ -1,8 +1,7 @@
 package graft.reg
 
-import graft.Staging.StagedFrame
 import breeze.linalg.{DenseMatrix, DenseVector}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.formula.Formula
 import graft.linalg.LinAlg
@@ -190,66 +189,22 @@ object Ridge {
       .filter(f.allInputCols.map(col(_).isNotNull).reduce(_ && _))
     val d = Dbreg.buildDesign(base, f, Seq(idCol), intercept = false)
     val p = d.xNames.length
-    val y = col(Dbreg.Y)
-    def x(i: Int) = col(d.xNames(i))
     val fold = graft.pipeline.TextOps
       .hash32(concat(lit(salt), col(idCol).cast("string"))) % folds
 
-    val aggs = scala.collection.mutable.ArrayBuffer[Column]()
-    aggs += count(lit(1)).as("_n")
-    aggs += sum(y).as("_sy")
-    aggs += sum(y * y).as("_syy")
-    for (i <- 0 until p) {
-      aggs += sum(x(i)).as(s"_sx$i")
-      aggs += sum(x(i) * y).as(s"_sxy$i")
-    }
-    for (i <- 0 until p; j <- i until p)
-      aggs += sum(x(i) * x(j)).as(s"_sxx_${i}_$j")
-    val perFold = d.df.withColumn("_fold", fold)
-      .groupBy(col("_fold")).agg(aggs.head, aggs.tail.toSeq: _*)
+    val perFold = MomentsKernel.aggregate(d.df.withColumn("_fold", fold),
+      Seq(col("_fold")), col(Dbreg.Y), d.xNames.map(col))
       .collect().sortBy(_.getAs[Long]("_fold"))
     require(perFold.length >= 2,
       s"data hashed into ${perFold.length} non-empty fold(s); need >= 2")
-
-    final case class Sums(n: Double, nRows: Long, sy: Double, syy: Double,
-        sx: DenseVector[Double], sxy: DenseVector[Double],
-        sxx: DenseMatrix[Double]) {
-      def -(o: Sums) = Sums(n - o.n, nRows - o.nRows, sy - o.sy, syy - o.syy,
-        sx - o.sx, sxy - o.sxy, sxx - o.sxx)
-      def +(o: Sums) = Sums(n + o.n, nRows + o.nRows, sy + o.sy, syy + o.syy,
-        sx + o.sx, sxy + o.sxy, sxx + o.sxx)
-      /** Raw intercept-augmented triangle (the pathFromTriangle layout). */
-      def triangle: (DenseMatrix[Double], DenseVector[Double]) = {
-        val m = DenseMatrix.zeros[Double](p + 1, p + 1)
-        m(0, 0) = n
-        for (i <- 0 until p) { m(0, i + 1) = sx(i); m(i + 1, 0) = sx(i) }
-        for (i <- 0 until p; j <- 0 until p) m(i + 1, j + 1) = sxx(i, j)
-        val v = DenseVector.zeros[Double](p + 1)
-        v(0) = sy
-        for (i <- 0 until p) v(i + 1) = sxy(i)
-        (m, v)
-      }
-    }
-    def sumsOf(r: org.apache.spark.sql.Row): Sums = {
-      def dd(nm: String): Double = r.getAs[Any](nm) match {
-        case null => 0.0
-        case v: Number => v.doubleValue
-      }
-      val nR = r.getAs[Long]("_n")
-      Sums(nR.toDouble, nR, dd("_sy"), dd("_syy"),
-        DenseVector.tabulate(p)(i => dd(s"_sx$i")),
-        DenseVector.tabulate(p)(i => dd(s"_sxy$i")),
-        DenseMatrix.tabulate(p, p)((i, j) =>
-          if (i <= j) dd(s"_sxx_${i}_$j") else dd(s"_sxx_${j}_$i")))
-    }
-    val foldSums = perFold.map(sumsOf)
+    val foldSums = perFold.map(MomentsKernel.readRaw(_, p))
     val total = foldSums.reduce(_ + _)
 
     val cvSse = Array.fill(lambdas.length)(0.0)
     foldSums.foreach { fs =>
       val tr = total - fs
-      val (m, v) = tr.triangle
-      val fits = pathFromTriangle(d.displayNames, m, v, tr.syy, tr.nRows,
+      val (m, v) = tr.withIntercept
+      val fits = pathFromTriangle(d.displayNames, m, v, tr.syy, tr.n.round,
         lambdas, standardize)
       fits.zipWithIndex.foreach { case (ft, li) =>
         val c0 = ft.estimates(0) // intercept
@@ -261,11 +216,11 @@ object Ridge {
       }
     }
     val bestI = cvSse.indices.minBy(i => (cvSse(i), i))
-    val (tm, tv) = total.triangle
-    val best = pathFromTriangle(d.displayNames, tm, tv, total.syy, total.nRows,
+    val (tm, tv) = total.withIntercept
+    val best = pathFromTriangle(d.displayNames, tm, tv, total.syy, total.n.round,
       Seq(lambdas(bestI)), standardize).head
     CvResult(lambdas.toIndexedSeq, cvSse.toIndexedSeq, lambdas(bestI), best,
-      folds, total.nRows)
+      folds, total.n.round)
   }
 
   /** One ridge fit PER GROUP — per-domain shrinkage at millions of groups.
@@ -285,7 +240,6 @@ object Ridge {
   ): DataFrame = {
     import org.apache.spark.sql.functions._
     require(lambda >= 0.0, s"negative lambda: $lambda")
-    require(maxGroups >= 1L)
     val f = Formula.parse(formula)
     require(f.fe.isEmpty, "grouped ridge does not absorb fixed effects")
     require(f.intercept, "grouped ridge requires an intercept (centered form)")
@@ -294,67 +248,22 @@ object Ridge {
     val base = df.select(needed.map(col): _*)
       .filter(needed.map(col(_).isNotNull).reduce(_ && _))
     val d = Dbreg.buildDesign(base, f, Seq(groupCol), intercept = false)
-    val p = d.xNames.length
-    val y = col(Dbreg.Y)
-    def x(i: Int) = col(d.xNames(i))
-    val aggs = scala.collection.mutable.ArrayBuffer[Column]()
-    aggs += count(lit(1)).as("_n")
-    aggs += sum(y).as("_sy")
-    aggs += sum(y * y).as("_syy")
-    for (i <- 0 until p) {
-      aggs += sum(x(i)).as(s"_sx$i")
-      aggs += sum(x(i) * y).as(s"_sxy$i")
-    }
-    for (i <- 0 until p; j <- i until p)
-      aggs += sum(x(i) * x(j)).as(s"_sxx_${i}_$j")
-    val grouped = d.df.groupBy(col(groupCol)).agg(aggs.head, aggs.tail.toSeq: _*)
+    val moments = MomentsKernel.capGroups(MomentsKernel.aggregate(d.df,
+      Seq(col(groupCol)), col(Dbreg.Y), d.xNames.map(col)), maxGroups)
 
     val spark = df.sparkSession
     import spark.implicits._
-    val moments =
-      if (maxGroups < Long.MaxValue) {
-        val m = grouped.staged
-        val g = m.count()
-        require(g <= maxGroups,
-          s"$g groups exceeds maxGroups=$maxGroups; raise the guard or pre-filter")
-        m
-      } else grouped
-
     val displayNames = d.displayNames
-    val xNames = d.xNames
+    val pN = d.xNames.length
     val lam = lambda
     val std = standardize
     moments.flatMap { r =>
-      def dd(name: String): Double = r.getAs[Any](name) match {
-        case null => 0.0
-        case v: Number => v.doubleValue
-      }
-      val pN = xNames.length
       val g = String.valueOf(r.getAs[Any](groupCol))
-      val n = r.getAs[Long]("_n").toDouble
-      val sy = dd("_sy")
-      val sx = DenseVector.tabulate(pN)(i => dd(s"_sx$i"))
-      val a = DenseMatrix.tabulate(pN, pN)((i, j) => {
-        val raw = if (i <= j) dd(s"_sxx_${i}_$j") else dd(s"_sxx_${j}_$i")
-        raw - sx(i) * sx(j) / n
-      })
-      val b = DenseVector.tabulate(pN)(i => dd(s"_sxy$i") - sx(i) * sy / n)
-      val m = a.copy
-      var j = 0
-      while (j < pN) {
-        m(j, j) += (if (std) lam * a(j, j) / n else lam); j += 1
-      }
-      val s = LinAlg.solveDetecting(m, b)
-      val beta = DenseVector.zeros[Double](pN)
-      s.keepIdx.zipWithIndex.foreach { case (k, i) => beta(k) = s.beta(i) }
-      var tr = 0.0
-      for (i <- s.keepIdx.indices; k <- s.keepIdx.indices)
-        tr += s.xtxInv(i, k) * a(s.keepIdx(k), s.keepIdx(i))
-      val intercept = sy / n - (0 until pN).map(i => beta(i) * sx(i) / n).sum
-      ("(Intercept)", intercept) +:
-        (0 until pN).map(i => (displayNames(i), beta(i))) map {
-          case (t, e) => (g, t, e, n.round, tr + 1.0)
-        }
+      val m = MomentsKernel.readRaw(r, pN)
+      val (xtx, xty) = m.withIntercept
+      val fit = pathFromTriangle(displayNames, xtx, xty, m.syy, m.n.round,
+        Seq(lam), std).head
+      fit.terms.zip(fit.estimates).map { case (t, e) => (g, t, e, fit.nobs, fit.dfEff) }
     }.toDF("group", "term", "estimate", "n", "df_eff")
   }
 }

@@ -153,25 +153,12 @@ object Rlm {
     val aW = when(inside, 1.0).otherwise(0.0)
     val psi = when(inside, res).otherwise(lit(band) * signum(res))
     val bW = psi * psi
-    def x(i: Int): Column = col(keptX(i)).cast("double")
-    val aggs = scala.collection.mutable.ArrayBuffer[Column]()
-    aggs += sum(aW).as("_in")
-    for (i <- 0 until p; j <- i until p) {
-      aggs += sum(aW * x(i) * x(j)).as(s"_a_${i}_$j")
-      aggs += sum(bW * x(i) * x(j)).as(s"_b_${i}_$j")
-    }
-    val row = d.df.agg(aggs.head, aggs.tail.toSeq: _*).collect()(0)
-    def g(nm: String): Double = row.getAs[Any](nm) match {
-      case null => 0.0
-      case v: Double => v
-      case v: Number => v.doubleValue
-    }
-    val aM = DenseMatrix.zeros[Double](p, p)
-    val bM = DenseMatrix.zeros[Double](p, p)
-    for (i <- 0 until p; j <- i until p) {
-      aM(i, j) = g(s"_a_${i}_$j"); aM(j, i) = aM(i, j)
-      bM(i, j) = g(s"_b_${i}_$j"); bM(j, i) = bM(i, j)
-    }
+    val xs = keptX.map(col(_).cast("double"))
+    val aggs = sum(aW).as("_in") +:
+      (MomentsKernel.triangle("a", xs, Some(aW)) ++ MomentsKernel.triangle("b", xs, Some(bW)))
+    val row = d.df.agg(aggs.head, aggs.tail: _*).collect()(0)
+    val aM = MomentsKernel.readTriangle(row, "a", p)
+    val bM = MomentsKernel.readTriangle(row, "b", p)
     val aSolve = LinAlg.solveDetecting(aM, DenseVector.zeros[Double](p))
     require(aSolve.dropIdx.isEmpty,
       "sandwich bread Xᵀdiag(ψ′)X is singular: too few rows inside the band")
@@ -187,7 +174,7 @@ object Rlm {
       CoefRow(keptNames(i), est, se, t, pv)
     }
     RlmFit(rows, sigma, k, iters, converged || tol == 0.0, m0.nRows,
-      g("_in") / n, dropped)
+      MomentsKernel.double(row, "_in") / n, dropped)
   }
 
   /** The whole fixed-iteration fit rendered as ONE runnable SQL statement

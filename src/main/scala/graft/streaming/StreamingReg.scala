@@ -1,11 +1,12 @@
 package graft.streaming
 
-import breeze.linalg.{DenseMatrix, DenseVector}
+import breeze.linalg.DenseVector
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.GroupState
 
 import graft.linalg.LinAlg
+import graft.reg.MomentsKernel
 
 /** Streaming extensions (beyond the reference's batch-only surface,
   * SURVEY.md §2.10): the moments strategy's sufficient statistics are plain
@@ -15,50 +16,27 @@ import graft.linalg.LinAlg
   */
 object StreamingReg {
 
-  /** Column list of the [1, X, y] moment sums for `y ~ xs` (upper triangle).
+  /** Column list of the [1, X, y] moment sums for `y ~ xs` (upper triangle):
+    * `n`, `sum_y`, `sum_y_sq`, `sum_x<i>`, `sum_x<i>_y`, `sum_x<i>_x<j>`.
     * Works on both batch and streaming DataFrames. */
-  def momentAggs(y: String, xs: Seq[String]): Seq[Column] = {
-    val yc = col(y).cast("double")
-    def x(i: Int) = col(xs(i)).cast("double")
-    val p = xs.length
-    Seq(
-      count(lit(1)).cast("double").as("n"),
-      sum(yc).as("sum_y"),
-      sum(yc * yc).as("sum_y_sq")) ++
-      (0 until p).flatMap(i =>
-        Seq(sum(x(i)).as(s"sum_x$i"), sum(x(i) * yc).as(s"sum_x${i}_y"))) ++
-      (for (i <- 0 until p; j <- i until p)
-        yield sum(x(i) * x(j)).as(s"sum_x${i}_x$j"))
-  }
+  def momentAggs(y: String, xs: Seq[String]): Seq[Column] =
+    MomentsKernel.rawAggs(col(y).cast("double"), xs.map(col(_).cast("double")),
+      names = MomentsKernel.Streamed)
 
   /** Incremental sufficient statistics for `y ~ xs`, optionally keyed.
     * On a streaming input use output mode "complete" (no watermark) or key
     * by a window column with a watermark for bounded state. */
-  def momentsStream(df: DataFrame, y: String, xs: Seq[String], keys: Seq[Column] = Nil): DataFrame = {
-    val aggs = momentAggs(y, xs)
-    if (keys.isEmpty) df.agg(aggs.head, aggs.tail: _*)
-    else df.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
-  }
+  def momentsStream(df: DataFrame, y: String, xs: Seq[String], keys: Seq[Column] = Nil): DataFrame =
+    MomentsKernel.aggregate(df, keys, col(y).cast("double"),
+      xs.map(col(_).cast("double")), MomentsKernel.Streamed)
+
+  private def moments(row: Row, p: Int) =
+    MomentsKernel.readRaw(row, p, MomentsKernel.Streamed)
 
   /** Solve OLS (with intercept) from one row of [[momentsStream]] output —
     * call from `foreachBatch` or on a memory-sink table. */
   def solve(row: Row, p: Int): DenseVector[Double] = {
-    def d(name: String) = row.getAs[Any](name) match {
-      case null => 0.0
-      case v: Number => v.doubleValue
-    }
-    val dim = p + 1
-    val xtx = DenseMatrix.zeros[Double](dim, dim)
-    val xty = DenseVector.zeros[Double](dim)
-    xtx(0, 0) = d("n"); xty(0) = d("sum_y")
-    for (i <- 0 until p) {
-      xtx(0, i + 1) = d(s"sum_x$i"); xtx(i + 1, 0) = xtx(0, i + 1)
-      xty(i + 1) = d(s"sum_x${i}_y")
-      for (j <- i until p) {
-        val v = d(s"sum_x${i}_x$j")
-        xtx(i + 1, j + 1) = v; xtx(j + 1, i + 1) = v
-      }
-    }
+    val (xtx, xty) = moments(row, p).withIntercept
     LinAlg.solveWithFallback(xtx, xty).beta
   }
 
@@ -73,25 +51,10 @@ object StreamingReg {
       lambdas: Seq[Double],
       standardize: Boolean = true
   ): Seq[graft.reg.Ridge.RidgeFit] = {
-    def d(name: String) = row.getAs[Any](name) match {
-      case null => 0.0
-      case v: Number => v.doubleValue
-    }
-    val p = xs.length
-    val dim = p + 1
-    val xtx = DenseMatrix.zeros[Double](dim, dim)
-    val xty = DenseVector.zeros[Double](dim)
-    xtx(0, 0) = d("n"); xty(0) = d("sum_y")
-    for (i <- 0 until p) {
-      xtx(0, i + 1) = d(s"sum_x$i"); xtx(i + 1, 0) = xtx(0, i + 1)
-      xty(i + 1) = d(s"sum_x${i}_y")
-      for (j <- i until p) {
-        val v = d(s"sum_x${i}_x$j")
-        xtx(i + 1, j + 1) = v; xtx(j + 1, i + 1) = v
-      }
-    }
+    val m = moments(row, xs.length)
+    val (xtx, xty) = m.withIntercept
     graft.reg.Ridge.pathFromTriangle(xs.toIndexedSeq, xtx, xty,
-      d("sum_y_sq"), d("n").round, lambdas, standardize)
+      m.syy, m.n.round, lambdas, standardize)
   }
 
   /** Watermarked tumbling-window aggregation over an event stream — the

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.binsreg.Dbbinsreg
 import graft.operators.{AsOf, Baskets, Events, Features, Graphs, RangeJoin}
 import graft.pipeline.{Dedup, Dsir, Phrase, Similarity, TextOps}
-import graft.reg.{Dbreg, Glm}
+import graft.reg.{Dbreg, Glm, Iv}
 import graft.sources.ScaleOps
 
 /** Degenerate-input sweep: every major entry point over EMPTY (and
@@ -128,6 +128,28 @@ class EmptyInputSpec extends SparkTestBase {
     // per-group shape has no global moment row to refuse on
     assert(Dbreg.fitGrouped("y ~ x", emptyPanel, "g").count() === 0L)
     assert(Glm.fitGrouped("y ~ x", emptyPanel, "g", maxIter = 2).count() === 0L)
+  }
+
+  test("clustered standard errors refuse a single cluster") {
+    // CR1 scales by G/(G−1): one cluster would report Inf/NaN SEs
+    val one = (0 until 40).map { i =>
+      val x = (i % 5).toDouble
+      (1.0 + 0.5 * x + (i % 3) * 0.1, x, x + (i % 2), "only", (i % 2).toDouble)
+    }.toDF("y", "x", "z", "g", "yb")
+    def refuses(fit: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](fit)
+      assert(e.getMessage.contains("at least 2 clusters"), e.getMessage)
+    }
+    refuses(Dbreg.fit("y ~ x", one, vcov = "~g", strategy = "moments"))
+    refuses(Dbreg.fit("y ~ x", one, vcov = "~g", strategy = "compress"))
+    refuses(Glm.fit("yb ~ x", one, family = "binomial", strategy = "irls",
+      vcov = "~g"))
+    refuses(Iv.fit("y ~ x", one, endog = Seq("x"), instruments = Seq("z"),
+      vcov = "~g"))
+    // two clusters are enough
+    val two = one.withColumn("g", when(col("x") < 2.0, "a").otherwise("b"))
+    assert(Dbreg.fit("y ~ x", two, vcov = "~g", strategy = "moments").nClusters
+      .contains(2L))
   }
 
   test("round-8 operators: knn self-join empty corpus, qreg/cqr refusals") {

@@ -1,18 +1,21 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.Attribute
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.catalyst.expressions.{Attribute, IsNotNull}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.BinaryType
 
 import graft.PlanStats.{capturedQueries, planStats, shuffleKeys}
 import graft.pipeline.{Dedup, Similarity, TextOps}
+import graft.reg.Dbreg
 
 /** Plan-shape pins for the rounds-16/17 plan wins (OPTIMIZATION_r16.md /
-  * OPTIMIZATION_r17.md, section numbers cited per test). Each asserts on
-  * [[PlanStats]] counts, so reverting the win fails the test. Properties
+  * OPTIMIZATION_r17.md, section numbers cited per test) and for the
+  * regression engine's cluster meat, demean attach tiers and scan pruning.
+  * Each asserts on [[PlanStats]] counts, so reverting the win fails the
+  * test. Properties
   * other suites already pin stay there: the kNN / BM25 WindowGroupLimit
   * (RetrievalSpec), the bucketed-state single exchange and the pack
   * window's missing exchange (PipelineSpec). */
@@ -138,5 +141,74 @@ class PlanShapeSpec extends SparkTestBase {
       assert(keyTypes.nonEmpty && keyTypes.forall(_ == BinaryType),
         report(out))
     }
+  }
+
+  // ---------------------------------------------------------- regression
+
+  private def panel(levels: Int, perLevel: Int) =
+    (0 until levels * perLevel).map { i =>
+      val x = (i * 7 % 11).toDouble
+      (1.0 + 0.5 * x + (i % levels) * 0.01 + (i % 3) * 0.1, x, i % levels)
+    }.toDF("y", "x", "fe")
+
+  test("moments cluster meat is one query with no cached score table") {
+    // the per-cluster score aggregate feeds G and Σ sₖsₖᵀ in the same
+    // query; persisting it first (then count + meat) cost two jobs and a
+    // cache
+    val df = panel(4, 30).withColumn("g", col("fe") % 3)
+    val run = capturedQueries(spark) {
+      Dbreg.fit("y ~ x", df, vcov = "~g", strategy = "moments"); ()
+    }
+    def byG(p: SparkPlan) = PlanStats.collect(p) {
+      case a: HashAggregateExec if a.groupingExpressions.exists {
+        case at: Attribute => at.name == "g"; case _ => false } => a
+    }
+    val scoreQueries = run.filter { case (_, qe) => byG(qe.executedPlan).nonEmpty }
+    assert(scoreQueries.size == 1, run.map(_._1))
+    run.foreach { case (fn, qe) =>
+      assert(planStats(qe.executedPlan).cachedScans == 0, s"$fn: ${qe.executedPlan}")
+    }
+  }
+
+  test("demean attaches FE means without a join up to 64 levels, by broadcast above") {
+    // Dbreg.withMeanColumns tiers: ≤64 levels a literal lookup, up to 2M
+    // levels an explicit broadcast (asserted with the size-based
+    // auto-broadcast off, so the hint, not the table size, decides)
+    def joins(levels: Int): Seq[Map[String, Int]] = {
+      val df = panel(levels, 4)
+      val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      try capturedQueries(spark) {
+        Dbreg.fit("y ~ x | fe", df, strategy = "demean"); ()
+      }.map { case (_, qe) => planStats(qe.executedPlan).joins }
+      finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
+    val inline = joins(64)
+    assert(inline.forall(_.isEmpty), inline)
+    val broadcast = joins(65)
+    assert(broadcast.exists(_.nonEmpty), broadcast)
+    assert(broadcast.flatMap(_.keys).toSet == Set("BroadcastHashJoin"), broadcast)
+  }
+
+  test("a moments fit on parquet reads only the model columns, IsNotNull pushed") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-scan").toString
+    try {
+      panel(4, 10).withColumn("g", col("fe") % 2)
+        .withColumn("note", concat(lit("row "), col("fe").cast("string")))
+        .write.mode("overwrite").parquet(dir)
+      val pq = spark.read.parquet(dir)
+      val run = capturedQueries(spark) {
+        Dbreg.fit("y ~ x", pq, strategy = "moments"); ()
+      }
+      val scans = run.flatMap { case (_, qe) => PlanStats.fileScans(qe.executedPlan) }
+      assert(scans.nonEmpty, run.map(_._1))
+      scans.foreach { s =>
+        assert(s.requiredSchema.fieldNames.toSet == Set("y", "x"), s.requiredSchema)
+        val notNull = s.dataFilters.flatMap(_.collect {
+          case IsNotNull(a: Attribute) => a.name
+        }).toSet
+        assert(Set("y", "x").subsetOf(notNull), s.dataFilters)
+      }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 }

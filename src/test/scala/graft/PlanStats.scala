@@ -4,9 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, HigherOrderFunction}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
@@ -19,7 +20,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * SortMergeJoin, …) to its count. `lambdas` counts higher-order-function
   * expressions (the interpreted `x -> …` lambdas); `codegenFallbacks`
   * counts every expression that runs interpreted inside codegen (HOFs
-  * included). */
+  * included). `cachedScans` counts reads of a persisted frame. */
 final case class PlanStats(
     shuffles: Int,
     broadcasts: Int,
@@ -28,7 +29,8 @@ final case class PlanStats(
     windowGroupLimits: Int,
     hashAggregates: Int,
     lambdas: Int,
-    codegenFallbacks: Int
+    codegenFallbacks: Int,
+    cachedScans: Int
 ) {
   def joinCount: Int = joins.values.sum
 }
@@ -55,8 +57,14 @@ object PlanStats extends AdaptiveSparkPlanHelper {
       windowGroupLimits = nodes.count(_.isInstanceOf[WindowGroupLimitExec]),
       hashAggregates = nodes.count(_.isInstanceOf[HashAggregateExec]),
       lambdas = exprs.count(_.isInstanceOf[HigherOrderFunction]),
-      codegenFallbacks = exprs.count(_.isInstanceOf[CodegenFallback]))
+      codegenFallbacks = exprs.count(_.isInstanceOf[CodegenFallback]),
+      cachedScans = nodes.count(_.isInstanceOf[InMemoryTableScanExec]))
   }
+
+  /** Every file-source scan in `plan`: its `requiredSchema` is the
+    * ReadSchema, its `dataFilters` the filters pushed to the reader. */
+  def fileScans(plan: SparkPlan): Seq[FileSourceScanExec] =
+    collect(plan) { case s: FileSourceScanExec => s }
 
   /** The partitioning key expressions of every shuffle in `plan`. */
   def shuffleKeys(plan: SparkPlan): Seq[Seq[Expression]] =
