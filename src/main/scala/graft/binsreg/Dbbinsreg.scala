@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.formula.Formula
 import graft.linalg.LinAlg
+import graft.model.ModelFrame
 import graft.reg.{Dbreg, DbregResult}
 
 /** Binscatter (binned regression) on Spark DataFrames — the Spark-native
@@ -267,10 +268,7 @@ object Dbbinsreg {
     }
     val controls = f.terms.tail
     val clusterCol = if (vcov.startsWith("~")) Seq(vcov.drop(1).trim) else Nil
-    val needed = (f.allInputCols ++ clusterCol).distinct
-    val base = df
-      .select(needed.map(col): _*)
-      .filter(needed.map(col(_).isNotNull).reduce(_ && _))
+    val base = ModelFrame.prepare(df, f, clusterCol)
 
     val x = col(xvar).cast("double")
 

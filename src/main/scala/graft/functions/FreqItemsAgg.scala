@@ -176,7 +176,7 @@ object FreqItemsAgg {
   final class Buffer(val counts: mutable.HashMap[String, Long], var err: Long)
 
   /** UTF-8 byte-order less-than (SQL binary collation). */
-  private[functions] def byteLt(a: String, b: String): Boolean =
+  private[graft] def byteLt(a: String, b: String): Boolean =
     UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b)) < 0
 
   /** Aggregate Column: `freq_items(tokensOrToken, capacity)` →

@@ -1,10 +1,11 @@
 package graft.model
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.formula.Term
+import graft.functions.FreqItemsAgg
 
 /** Formula term → Spark `Column` design-matrix compiler.
   *
@@ -23,10 +24,7 @@ object ModelMatrix {
     * (display-normalized to `:` later, reference utils.R:6). */
   final case class MMCol(name: String, col: Column)
 
-  final case class Expansion(
-      cols: List[MMCol],
-      factorLevels: Map[String, Seq[String]]
-  )
+  final case class Expansion(cols: List[MMCol])
 
   /** Structural form of one design column: a product of atoms. Both the
     * Spark `Column` renderer (below) and the SQL-text renderer
@@ -44,10 +42,7 @@ object ModelMatrix {
 
   final case class DesignCol(name: String, atoms: List[Atom])
 
-  final case class StructExpansion(
-      cols: List[DesignCol],
-      factorLevels: Map[String, Seq[String]]
-  )
+  final case class StructExpansion(cols: List[DesignCol])
 
   /** A factor column is string-, boolean-typed (reference
     * sql_model_matrix.R:87-98 treats character/factor/logical as factors). */
@@ -61,11 +56,11 @@ object ModelMatrix {
     * column (Dbbinsreg's `__binf` bin labels) already knows the exact,
     * sorted level set — probing it back out of the data costs one
     * distinct-collect job per fit for information the caller had in hand.
-    * `withLevelHint` brackets a fit so [[expand]] reads the hinted vars'
+    * `withLevelHint` brackets a fit so [[levels]] reads the hinted vars'
     * levels instead of probing (r16, guide §2.4: remove the redundant
     * pass). Thread-scoped (plan construction is synchronous on the calling
     * thread) and exception-safe via DynamicVariable.withValue; hints must
-    * be the SORTED distinct level list — exactly what [[factorLevels]]
+    * be the SORTED distinct level list — exactly what the probe
     * would have returned. */
   private val levelHints =
     new scala.util.DynamicVariable[Map[String, Seq[String]]](Map.empty)
@@ -73,18 +68,51 @@ object ModelMatrix {
   private[graft] def withLevelHint[T](hints: Map[String, Seq[String]])(body: => T): T =
     levelHints.withValue(levelHints.value ++ hints)(body)
 
-  /** Distinct non-null levels, capped + sorted (reference probes
-    * `SELECT DISTINCT v FROM (… LIMIT 100000) ORDER BY v`). One small
-    * collect per factor var; levels are assumed stable for the fit. */
-  def factorLevels(df: DataFrame, v: String, maxLevels: Int = 100000): Seq[String] =
-    df.limit(maxLevels)
-      .select(col(v).cast(StringType).as(v))
-      .where(col(v).isNotNull)
-      .distinct()
-      .orderBy(v)
-      .collect()
-      .map(_.getString(0))
-      .toSeq
+  /** Default cap on the levels one factor may expand into. */
+  private[graft] val DefaultMaxLevels = 100000
+
+  /** [[levels]] of one factor (reference `SELECT DISTINCT v … ORDER BY v`). */
+  def factorLevels(df: DataFrame, v: String, maxLevels: Int = DefaultMaxLevels): Seq[String] =
+    levels(df, Seq(v), maxLevels)(v)
+
+  /** Distinct non-null levels of each of `vars` (hinted ones skip the
+    * probe), sorted in Spark's string order, from ONE aggregate: a
+    * Misra-Gries summary of `maxLevels + 1` counters per var, so memory is
+    * bounded and the answer exact up to `maxLevels`. A var with more levels
+    * refuses — a regressor should be absorbed as a fixed effect; one of
+    * `absorbed` (already a fixed effect) needs a strategy without dummies. */
+  private[graft] def levels(
+      df: DataFrame,
+      vars: Seq[String],
+      maxLevels: Int = DefaultMaxLevels,
+      absorbed: Seq[String] = Nil
+  ): Map[String, Seq[String]] = {
+    require(maxLevels >= 1 && maxLevels < Int.MaxValue, s"maxLevels out of range: $maxLevels")
+    val hints = levelHints.value
+    val probe = vars.distinct.filterNot(hints.contains)
+    val probed: Map[String, Seq[String]] =
+      if (probe.isEmpty) Map.empty
+      else {
+        val aggs = probe.flatMap { v =>
+          val s = col(v).cast(StringType)
+          Seq(FreqItemsAgg(s, maxLevels + 1), count(s))
+        }
+        val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
+        probe.zipWithIndex.map { case (v, i) =>
+          val items = row.getSeq[Row](2 * i)
+          // the kept counts add up to the non-null rows only when the
+          // summary evicted nothing (an eviction round can empty it)
+          require(items.length <= maxLevels &&
+            items.map(_.getLong(1)).sum == row.getLong(2 * i + 1),
+            s"'$v' has more than $maxLevels levels, too many for dummy columns; " +
+              (if (absorbed.contains(v)) "raise compressNmax or use" // already a fixed effect
+               else s"absorb it as a fixed effect (`| $v`) with") +
+              " the demean, mundlak or hdfe strategy")
+          v -> items.map(_.getString(0)).sortWith(FreqItemsAgg.byteLt).toSeq
+        }.toMap
+      }
+    vars.distinct.map(v => v -> hints.getOrElse(v, probed(v))).toMap
+  }
 
   /** Expand formula terms into the structural (renderer-independent) form,
     * given pre-discovered factor levels. All drop-ref / intercept semantics
@@ -125,7 +153,7 @@ object ModelMatrix {
     // de-duplicate by name, preserving first occurrence (mirrors R terms())
     val seen = scala.collection.mutable.LinkedHashMap.empty[String, DesignCol]
     cols.foreach(c => if (!seen.contains(c.name)) seen(c.name) = c)
-    StructExpansion(seen.values.toList, levels)
+    StructExpansion(seen.values.toList)
   }
 
   /** Render one atom as a Spark `Column`. */
@@ -146,17 +174,14 @@ object ModelMatrix {
       df: DataFrame,
       terms: List[Term],
       feVars: Seq[String],
-      maxLevels: Int = 100000,
+      maxLevels: Int = DefaultMaxLevels,
       intercept: Boolean = true,
       expandMains: Boolean = true
   ): Expansion = {
-    val vars = terms.flatMap(_.parts).distinct
-    val hints = levelHints.value
-    val levels: Map[String, Seq[String]] =
-      vars.filter(isFactor(df, _))
-        .map(v => v -> hints.getOrElse(v, factorLevels(df, v, maxLevels))).toMap
-    val st = expandStructure(terms, levels, feVars, intercept, expandMains)
-    Expansion(st.cols.map(renderCol), st.factorLevels)
+    val factors = terms.flatMap(_.parts).distinct.filter(isFactor(df, _))
+    val st = expandStructure(terms, levels(df, factors, maxLevels), feVars, intercept,
+      expandMains)
+    Expansion(st.cols.map(renderCol))
   }
 
   /** Factor → dummy list (drop first level when dropRef); numeric passes

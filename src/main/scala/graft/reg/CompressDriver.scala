@@ -4,9 +4,10 @@ import breeze.linalg.{DenseMatrix, DenseVector}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-import graft.formula.{Formula, Term, Vcov}
+import graft.formula.{Formula, Vcov}
 import graft.linalg.LinAlg
 import graft.model.ModelMatrix
+import graft.model.ModelMatrix.{Atom, ConstAtom, DesignCol, DummyAtom, NumericAtom, RawAtom}
 
 /** Driver-side sparse WLS over compressed cells, for high-cardinality
   * fixed effects where the distributed moment triangle would need too many
@@ -16,7 +17,9 @@ import graft.model.ModelMatrix
   * The collect is bounded: ≤ `compressNmax` cells × (key columns + 3
   * statistics). Each cell contributes a SPARSE design vector (numeric x's,
   * one dummy per factor term, one dummy per FE), so XᵀX accumulation costs
-  * cells × nnz² with nnz ≈ #terms + #FE, not cells × P².
+  * cells × nnz² with nnz ≈ #terms + #FE, not cells × P². The layout is
+  * the dense path's (`termCols` = intercept + terms, `feCols` = FE dummies,
+  * from Dbreg.fitCompress), so both paths expand a formula identically.
   */
 private[graft] object CompressDriver {
 
@@ -25,6 +28,8 @@ private[graft] object CompressDriver {
       base: DataFrame,
       comp: DataFrame,
       cellKeys: Seq[String],
+      termCols: List[DesignCol],
+      feCols: List[DesignCol],
       v: Vcov,
       ssc: String,
       compressNmax: Long
@@ -37,92 +42,27 @@ private[graft] object CompressDriver {
       case c => c
     }
 
-    // ---- driver-side design metadata ----
-    val factorLevels: Map[String, Array[String]] =
-      (f.xvars.filter(ModelMatrix.isFactor(base, _)) ++ f.fe).distinct.map { c =>
-        c -> comp.select(col(c).cast("string")).where(col(c).isNotNull)
-          .distinct().orderBy(col(c).cast("string")).collect().map(_.getString(0))
-      }.toMap
-
-    // column layout: (Intercept)? ++ expanded x terms ++ FE dummies
-    val names = scala.collection.mutable.ArrayBuffer.empty[String]
-    // evaluators: each returns list of (colIdx, value) contributions for a row
-    val evals = scala.collection.mutable.ArrayBuffer.empty[Row => Seq[(Int, Double)]]
-
-    if (f.intercept) {
-      val idx = names.length; names += "(Intercept)"
-      evals += ((_: Row) => Seq(idx -> 1.0))
-    }
     def numVal(r: Row, c: String): Double = r.getAs[Any](c) match {
       case null => 0.0
       case x: Number => x.doubleValue
       case x => x.toString.toDouble
     }
     def strVal(r: Row, c: String): String = String.valueOf(r.getAs[Any](c))
-
-    // per-term expansion mirroring ModelMatrix, including the drop-ref rule
-    // (F4): a factor inside an interaction keeps ALL its levels unless it is
-    // an FE var or the complementary term is itself in the model; in a
-    // no-intercept formula the first factor main term keeps all levels.
-    val allLabels: Set[String] = f.terms.map(t => t.parts.mkString(":")).toSet
-    val firstFactorMain: Option[String] =
-      if (f.intercept) None
-      else f.terms.collectFirst {
-        case t if !t.isInteraction && f.xvars.contains(t.parts.head) &&
-          factorLevels.contains(t.parts.head) => t.parts.head
-      }
-    val seenNames = scala.collection.mutable.HashSet.empty[String]
-    f.terms.foreach { term =>
-      val partKinds: List[Either[String, (String, Array[String])]] = term.parts.map { p =>
-        factorLevels.get(p) match {
-          case Some(lv) if f.xvars.contains(p) => Right((p, lv))
-          case _ => Left(p)
-        }
-      }
-      val factorParts = partKinds.collect { case Right(x) => x }
-      def emit(nm: String, fn: Row => Double): Unit =
-        if (!seenNames.contains(nm)) { // dedupe across terms (mirrors terms())
-          seenNames += nm
-          val idx = names.length
-          names += nm
-          evals += ((r: Row) => { val vv = fn(r); if (vv == 0.0) Nil else Seq(idx -> vv) })
-        }
-      if (factorParts.isEmpty) {
-        emit(term.parts.mkString(":"), (r: Row) => term.parts.map(numVal(r, _)).product)
-      } else {
-        def rec(kinds: List[Either[String, (String, Array[String])]]): List[(String, Row => Double)] =
-          kinds match {
-            case Nil => List(("", (_: Row) => 1.0))
-            case Left(p) :: rest =>
-              rec(rest).map { case (nm, fn) =>
-                (if (nm.isEmpty) p else s"$p:$nm", (r: Row) => numVal(r, p) * fn(r))
-              }
-            case Right((p, lv)) :: rest =>
-              val dropRef =
-                if (term.isInteraction)
-                  f.fe.contains(p) ||
-                    allLabels.contains(term.parts.filterNot(_ == p).sorted.mkString(":"))
-                else !firstFactorMain.contains(p)
-              val kept = if (dropRef) lv.drop(1) else lv
-              for {
-                l <- kept.toList
-                (nm, fn) <- rec(rest)
-              } yield (
-                if (nm.isEmpty) s"$p$l" else s"$p$l:$nm",
-                (r: Row) => (if (strVal(r, p) == l) 1.0 else 0.0) * fn(r))
-          }
-        rec(partKinds).foreach { case (nm, fn) => emit(nm, fn) }
-      }
+    def atomVal(r: Row, a: Atom): Double = a match {
+      case NumericAtom(c) => numVal(r, c)
+      case DummyAtom(c, lvl) => if (strVal(r, c) == lvl) 1.0 else 0.0
+      case ConstAtom(x) => x
+      case RawAtom(c) => numVal(r, c)
     }
-    // FE dummies (drop first level each; intercept carries the base)
-    val feLookups = f.fe.map { fe =>
-      val lv = factorLevels(fe)
-      val start = names.length
-      lv.drop(1).foreach(l => names += s"$fe$l")
-      val pos: Map[String, Int] = lv.drop(1).zipWithIndex.map { case (l, i) => l -> (start + i) }.toMap
-      (fe, pos)
+    // the term columns evaluate their atoms on the cell row (the product
+    // associates like ModelMatrix.renderCol); each FE contributes at most
+    // one nonzero, found by a level → column lookup
+    val feLookups: Seq[(String, Map[String, Int])] = f.fe.map { fe =>
+      fe -> feCols.zipWithIndex.collect {
+        case (DesignCol(_, List(DummyAtom(`fe`, lvl))), i) => lvl -> (termCols.size + i)
+      }.toMap
     }
-
+    val names = (termCols ++ feCols).map(_.name).toIndexedSeq
     val p = names.length
 
     // ---- collect cells and accumulate sparse normal equations ----
@@ -131,9 +71,12 @@ private[graft] object CompressDriver {
     val xty = DenseVector.zeros[Double](p)
     var sumSyy = 0.0; var sumSy = 0.0; var nOrig = 0.0
     def designOf(r: Row): Seq[(Int, Double)] = {
-      val fromTerms = evals.flatMap(_(r))
+      val fromTerms = termCols.zipWithIndex.flatMap { case (dc, i) =>
+        val x = dc.atoms.map(atomVal(r, _)).reduceRight(_ * _)
+        if (x == 0.0) None else Some(i -> x)
+      }
       val fromFe = feLookups.flatMap { case (fe, pos) => pos.get(strVal(r, fe)).map(_ -> 1.0) }
-      fromTerms.toSeq ++ fromFe
+      fromTerms ++ fromFe
     }
     rows.foreach { r =>
       val n = r.getAs[Double]("__g_n")
@@ -232,11 +175,7 @@ private[graft] object CompressDriver {
       collinDropped = solved.dropIdx.map(i => ModelMatrix.displayName(names(i))),
       nClusters = nClusters,
       compressionRatio = Some(nCells.toDouble / math.max(nOrig, 1.0)),
-      queryPlan = comp.queryExecution.explainString(
-        org.apache.spark.sql.execution.SimpleMode),
-      feTerms = feLookups.flatMap { case (fe, pos) =>
-        pos.keys.map(l => s"$fe$l")
-      }
+      feTerms = feCols.map(c => ModelMatrix.displayName(c.name))
     )
   }
 }

@@ -105,7 +105,7 @@ object Conformal {
       .select(abs(col(f.y).cast("double") - col("fit")).as("__r"))
       // NaN would sort ABOVE every real residual (Spark's NaN ordering)
       // and silently displace the order statistic — treat it as missing,
-      // exactly as the training side's na.drop does
+      // exactly as the training side's ModelFrame.prepare does
       .filter(col("__r").isNotNull && !isnan(col("__r")))
     val nCal = resid.count()
     val k = math.ceil((1.0 - alpha) * (nCal + 1.0)).toLong
@@ -172,8 +172,8 @@ object Conformal {
         lo.fitCol - col(f.y).cast("double"),
         col(f.y).cast("double") - hi.fitCol).as("__s"))
       // NaN sorts above every real score and would corrupt the exact
-      // k-th order statistic — treat as missing (the training-side
-      // na.drop convention)
+      // k-th order statistic — treat as missing (the training side's
+      // ModelFrame.prepare rule)
       .filter(col("__s").isNotNull && !isnan(col("__s")))
     val nCal = score.count()
     val k = math.ceil((1.0 - alpha) * (nCal + 1.0)).toLong

@@ -6,7 +6,8 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.formula.{Formula, Vcov}
 import graft.linalg.LinAlg
-import graft.model.ModelMatrix
+import graft.model.{ModelFrame, ModelMatrix}
+import graft.model.ModelFrame.{Design, Y, buildDesign}
 import graft.model.ModelMatrix.MMCol
 
 /** OLS / fixed-effects regression on Spark DataFrames.
@@ -79,18 +80,8 @@ object Dbreg {
       hdfeMaxSweeps: Int = 60
   ): DbregResult = {
     val clusterCol = v match { case Vcov.Cluster(c) => Some(c); case _ => None }
-    // P1/P2: prune to the columns the model touches, drop missings
-    val needed = (f.allInputCols ++ clusterCol ++ weights).distinct
-    needed.foreach { c =>
-      require(df.columns.contains(c), s"column '$c' not found in DataFrame")
-    }
-    val filterCols = needed
-    val base0 = df
-      .select(needed.map(col): _*)
-      .filter(filterCols.map(col(_).isNotNull).reduce(_ && _))
-    // analytic weights (beyond-reference extension): rows with w <= 0 are
-    // dropped, mirroring fixest's handling of non-positive weights
-    val base = weights.fold(base0)(w => base0.filter(col(w) > 0.0))
+    // analytic weights (beyond-reference): rows with w <= 0 drop, as in fixest
+    val base = ModelFrame.prepare(df, f, clusterCol.toSeq, weights)
 
     weights.foreach { _ =>
       require(f.fe.isEmpty && (strategy == "auto" || strategy == "moments"),
@@ -145,10 +136,7 @@ object Dbreg {
     require(f.fe.size <= 1,
       s"fitGrouped supports at most one fixed effect, got ${f.fe.size}")
     val feOpt = f.fe.headOption
-    val needed = (f.allInputCols :+ groupCol).distinct
-    needed.foreach(c => require(df.columns.contains(c), s"column '$c' not found"))
-    val base = df.select(needed.map(col): _*)
-      .filter(needed.map(col(_).isNotNull).reduce(_ && _))
+    val base = ModelFrame.prepare(df, f, Seq(groupCol))
     val d = buildDesign(base, f, groupCol +: f.fe,
       intercept = f.intercept && feOpt.isEmpty)
     val xs = d.xNames.map(col)
@@ -218,10 +206,7 @@ object Dbreg {
     * GROUP BY (x…, fe…) with n / Σy / Σy² / ȳ / √n weights. */
   def compressedData(formula: String, df: DataFrame): DataFrame = {
     val f = Formula.parse(formula)
-    val needed = f.allInputCols.distinct
-    val base = df
-      .select(needed.map(col): _*)
-      .filter(needed.map(col(_).isNotNull).reduce(_ && _))
+    val base = ModelFrame.prepare(df, f)
     val cellKeys = (f.xvars ++ f.fe).distinct
     base
       .groupBy(cellKeys.map(col): _*)
@@ -327,39 +312,6 @@ object Dbreg {
       .getAs[Long]("k") == 1L
 
   // ------------------------------------------------------------- strategies
-
-  /** Internal design bundle: `df` holds `__g_y` plus design columns with
-    * safe internal names; display names run parallel. The intercept is an
-    * explicit constant column so that collinearity dropping and the meat
-    * passes treat it uniformly. */
-  private[reg] final case class Design(
-      df: DataFrame,
-      xNames: IndexedSeq[String],
-      displayNames: IndexedSeq[String],
-      cols: List[MMCol]
-  )
-
-  private[reg] val Y = "__g_y"
-
-  private[reg] def buildDesign(
-      base: DataFrame,
-      f: Formula,
-      carry: Seq[String],
-      intercept: Boolean
-  ): Design = {
-    // drop-ref behavior follows the FORMULA's intercept (user's `0 +`), while
-    // `intercept` only controls the explicit constant column (strategies like
-    // demean absorb it and pass false here).
-    val mm = ModelMatrix.expand(base, f.terms, f.fe, intercept = f.intercept)
-    val all: List[MMCol] =
-      (if (intercept && f.intercept) List(MMCol("(Intercept)", lit(1.0))) else Nil) ++ mm.cols
-    val xNames = all.indices.map(i => s"__g_x$i")
-    val cols = carry.map(col) ++
-      Seq(col(f.y).cast("double").as(Y)) ++
-      all.zipWithIndex.map { case (c, i) => c.col.cast("double").as(xNames(i)) }
-    Design(base.select(cols: _*), xNames,
-      all.map(c => ModelMatrix.displayName(c.name)).toIndexedSeq, all)
-  }
 
   /** Attach a plain linear predictor (moments/compress/mundlak shape):
     * termCols maps kept display names to expressions over new data. */
@@ -829,36 +781,25 @@ object Dbreg {
     // cell count comes free from the moments pass (mom.nRows) — the first
     // action below materializes the cache; no separate count job
 
-    // design columns over the cells: x expansion + FE dummies
-    val mm = ModelMatrix.expand(comp, f.terms, f.fe, intercept = f.intercept)
-    // ALL FE levels (no 100k cap: dummies must cover every group), fetched
-    // for every FE in ONE aggregation job via collect_set over the cells
-    val feLevels: Map[String, Seq[String]] =
-      if (f.fe.isEmpty) Map.empty
-      else {
-        val aggs = f.fe.map(fe => collect_set(col(fe).cast("string")).as(fe))
-        val row = comp.agg(aggs.head, aggs.tail: _*).collect()(0)
-        f.fe.map(fe =>
-          fe -> row.getAs[scala.collection.Seq[String]](fe).sorted.toSeq).toMap
-      }
-    val feDummies: List[MMCol] = f.fe.flatMap { fe =>
-      val lvls = feLevels(fe)
-      if (lvls.length < 2) Nil
-      else
-        lvls.tail.map { lvl =>
-          MMCol(s"$fe$lvl", when(col(fe).cast("string") === lit(lvl), 1.0).otherwise(0.0))
-        }
-    }.toList
-    val all: List[MMCol] =
-      (if (f.intercept) List(MMCol("(Intercept)", lit(1.0))) else Nil) ++ mm.cols ++ feDummies
-    if (all.size > MaxDesignCols) {
+    // design columns over the cells: x expansion + FE dummies, every level
+    // from ONE probe (more than compressNmax levels ⇒ more cells too)
+    val factors = f.xvars.filter(ModelMatrix.isFactor(comp, _))
+    val levels = ModelMatrix.levels(comp, factors ++ f.fe,
+      math.min(math.max(compressNmax, ModelMatrix.DefaultMaxLevels), Int.MaxValue - 1L).toInt,
+      absorbed = f.fe)
+    val termCols = ModelFrame.designCols(f, factors.map(v => v -> levels(v)).toMap,
+      intercept = true)
+    val feCols = ModelFrame.feDummyCols(f.fe, levels)
+    if (termCols.size + feCols.size > MaxDesignCols) {
       // high-cardinality FE: p(p+1)/2 agg columns would swamp codegen —
       // switch to the driver-side sparse WLS over collected cells (the
       // reference's own client-side path, bounded by compressNmax)
-      val res = CompressDriver.fit(f, base, comp, cellKeys, v, ssc, compressNmax)
+      val res = CompressDriver.fit(f, base, comp, cellKeys, termCols, feCols, v, ssc,
+        compressNmax)
       comp.unpersist()
       return res
     }
+    val all = (termCols ++ feCols).map(ModelMatrix.renderCol)
     val xNames = all.indices.map(i => s"__g_x$i")
     val designed = comp.select(
       (cellKeys.map(col) ++ Seq(col("__g_n"), col("__g_sy"), col("__g_syy"), col(Y)) ++
@@ -888,7 +829,7 @@ object Dbreg {
     withLinearPredictor(
       res.copy(
         compressionRatio = Some(nCells.toDouble / math.max(nOrig, 1L)),
-        feTerms = feDummies.map(c => ModelMatrix.displayName(c.name))),
+        feTerms = feCols.map(c => ModelMatrix.displayName(c.name))),
       all.map(c => ModelMatrix.displayName(c.name) -> c.col).toMap)
   }
 
@@ -1018,8 +959,7 @@ object Dbreg {
       tss = tss,
       fe = f.fe,
       collinDropped = dropped,
-      nClusters = nClusters,
-      queryPlan = mom.plan
+      nClusters = nClusters
     )
   }
 

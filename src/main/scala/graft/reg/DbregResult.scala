@@ -32,7 +32,6 @@ final case class DbregResult(
     nClusters: Option[Long] = None,
     compressionRatio: Option[Double] = None,
     @transient predictor: Option[Predictor] = None,
-    queryPlan: String = "", // physical plan of the main aggregation (sql_only analogue)
     feTerms: Seq[String] = Nil, // FE dummy terms (compress), for fe= filtering
     // hdfe only: alternating-projection sweeps run, and whether the loop
     // stopped on tolerance (false = maxSweeps exhausted first — the

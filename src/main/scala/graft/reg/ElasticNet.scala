@@ -4,6 +4,8 @@ import breeze.linalg.{DenseMatrix, DenseVector}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.formula.Formula
+import graft.model.ModelFrame
+import graft.model.ModelFrame.Y
 
 /** Elastic-net (lasso / L1+L2) regression by cyclic coordinate descent on
   * the moments kernel — the companion to [[Ridge]]: ONE pass over the
@@ -76,14 +78,8 @@ object ElasticNet {
       "elastic net does not absorb fixed effects; include them as dummies")
     require(f.intercept, "elastic net requires an intercept (centered form)")
 
-    val needed = f.allInputCols
-    needed.foreach(c => require(df.columns.contains(c), s"column '$c' not found"))
-    val base = df
-      .select(needed.map(org.apache.spark.sql.functions.col): _*)
-      .na.drop(needed)
-
-    val d = Dbreg.buildDesign(base, f, Nil, intercept = false)
-    val mom = MomentsKernel.compute(d.df, Dbreg.Y, d.xNames, intercept = true)
+    val d = ModelFrame.design(df, f, intercept = false)
+    val mom = MomentsKernel.compute(d.df, Y, d.xNames, intercept = true)
     val p = d.xNames.length
     val n = mom.n
     require(mom.nRows > 1, s"need >1 rows, got ${mom.nRows}")

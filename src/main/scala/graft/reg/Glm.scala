@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.formula.{Formula, Vcov}
 import graft.linalg.LinAlg
-import graft.model.ModelMatrix
+import graft.model.ModelFrame
 
 /** GLM fit result — the IRLS analogue of [[DbregResult]]. Tiny,
   * driver-resident; `coeftable` statistics are Wald z (normal reference
@@ -226,25 +226,16 @@ object Glm {
       "GLM does not support fixed effects (| fe): absorb small factors as RHS dummies")
 
     val clusterCol = v match { case Vcov.Cluster(c) => Some(c); case _ => None }
-    val needed = (f.allInputCols ++ weights ++ offset ++ clusterCol).distinct
-    needed.foreach(c => require(df.columns.contains(c), s"column '$c' not found"))
-    val base0 = df
-      .select(needed.map(col): _*)
-      .filter(needed.map(col(_).isNotNull).reduce(_ && _))
-    val base = weights.fold(base0)(w => base0.filter(col(w) > 0.0))
-
+    val base = ModelFrame.prepare(df, f, offset.toSeq ++ clusterCol, weights)
     // Design: explicit intercept column + expanded terms (dummies,
     // interactions, drop-ref), all cast to double — same algebra as Dbreg.
-    val mm = ModelMatrix.expand(base, f.terms, Nil, intercept = f.intercept)
-    val all: List[ModelMatrix.MMCol] =
-      (if (f.intercept) List(ModelMatrix.MMCol("(Intercept)", lit(1.0))) else Nil) ++ mm.cols
-    require(all.nonEmpty, "empty design")
-    require(all.length <= Dbreg.MaxDesignCols,
-      s"design too wide (${all.length} > ${Dbreg.MaxDesignCols})")
-    val xNames = all.indices.map(i => s"__g_x$i").toIndexedSeq
-    val displayNames = all.map(c => ModelMatrix.displayName(c.name)).toIndexedSeq
+    val d = ModelFrame.buildDesign(base, f, weights.toSeq ++ offset, intercept = true)
+    val xNames = d.xNames
+    require(xNames.nonEmpty, "empty design")
+    require(xNames.length <= Dbreg.MaxDesignCols,
+      s"design too wide (${xNames.length} > ${Dbreg.MaxDesignCols})")
 
-    val y = col(f.y).cast("double")
+    val y = col(ModelFrame.Y)
     val wt = weights.map(col(_).cast("double")).getOrElse(lit(1.0))
     // _ylogy (Σ w·y·ln y within the unit) makes the Poisson deviance
     // cell-exact: it is the one deviance term not linear in y.
@@ -266,9 +257,8 @@ object Glm {
       case _ => lit(0.0)
     }
     val off = offset.map(col(_).cast("double")).getOrElse(lit(0.0))
-    val rowFrame = base.select(
-      all.zipWithIndex.map { case (c, i) => c.col.cast("double").as(xNames(i)) } ++
-        Seq(wt.as("_wt"), y.as("_yb"), ylogy.as("_ylogy"), off.as("_off")): _*)
+    val rowFrame = d.df.select(
+      xNames.map(col) ++ Seq(wt.as("_wt"), y.as("_yb"), ylogy.as("_ylogy"), off.as("_off")): _*)
 
     val chosen = strategy match {
       case "auto" =>
@@ -295,10 +285,9 @@ object Glm {
       case _ => rowFrame
     }
 
-    val exprByName: Map[String, Column] =
-      all.map(c => ModelMatrix.displayName(c.name) -> c.col).toMap
+    val exprByName: Map[String, Column] = d.displayNames.zip(d.cols.map(_.col)).toMap
     val res0 =
-      try fitIrls(f, family, chosen, work, xNames, displayNames, exprByName,
+      try fitIrls(f, family, chosen, work, xNames, d.displayNames, exprByName,
         maxIter, tol, offset, theta)
       finally if (chosen == "compress") { work.unpersist(); () }
     v match {
@@ -406,20 +395,13 @@ object Glm {
     require(maxIter >= 1, "maxIter must be >= 1")
     val f = Formula.parse(formula)
     require(f.fe.isEmpty, "grouped GLM does not support fixed effects (| fe)")
-    val needed = (f.allInputCols :+ groupCol).distinct
-    needed.foreach(c => require(df.columns.contains(c), s"column '$c' not found"))
-    val base = df.select(needed.map(col): _*)
-      .filter(needed.map(col(_).isNotNull).reduce(_ && _))
-
-    val mm = ModelMatrix.expand(base, f.terms, Nil, intercept = f.intercept)
-    val all: List[ModelMatrix.MMCol] =
-      (if (f.intercept) List(ModelMatrix.MMCol("(Intercept)", lit(1.0))) else Nil) ++ mm.cols
-    require(all.nonEmpty, "empty design")
-    val xNames = all.indices.map(i => s"__g_x$i").toIndexedSeq
-    val displayNames = all.map(c => ModelMatrix.displayName(c.name)).toIndexedSeq
+    val d = ModelFrame.design(df, f, Seq(groupCol))
+    val xNames = d.xNames
+    val displayNames = d.displayNames
+    require(xNames.nonEmpty, "empty design")
     val p = xNames.length
 
-    val y = col(f.y).cast("double")
+    val y = col(ModelFrame.Y)
     // gamma: a y ≤ 0 row poisons its group's log-moment with NaN, so that
     // group reports NaN deviance/null-deviance/pseudo-R² (no extra
     // validation scan; other groups are unaffected)
@@ -432,11 +414,10 @@ object Glm {
             (y + lit(theta)) * log(y + lit(theta)))
       case _ => lit(0.0)
     }
-    val rowFrame = base.select(
+    val rowFrame = d.df.select(
       col(groupCol).cast("string").as("_g") +:
-        (all.zipWithIndex.map { case (c, i) => c.col.cast("double").as(xNames(i)) } ++
-          Seq(lit(1.0).as("_wt"), y.as("_yb"), (y * y).as("_ybb"),
-            ylogy.as("_ylogy"))): _*)
+        (xNames.map(col) ++ Seq(lit(1.0).as("_wt"), y.as("_yb"), (y * y).as("_ybb"),
+          ylogy.as("_ylogy"))): _*)
 
     val chosen = strategy match {
       case "auto" =>

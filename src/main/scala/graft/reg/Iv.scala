@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 
 import graft.formula.{Formula, Vcov}
 import graft.linalg.LinAlg
-import graft.model.ModelMatrix
+import graft.model.ModelFrame
+import graft.model.ModelFrame.Y
 
 /** Two-stage least squares (instrumental-variables) regression — a
   * beyond-reference extension of the engine's sufficient-statistics family
@@ -83,25 +84,17 @@ object Iv {
       "a column cannot be both endogenous and an instrument")
 
     val clusterCol = v match { case Vcov.Cluster(c) => Seq(c); case _ => Nil }
-    val needed = (f.allInputCols ++ instruments ++ clusterCol).distinct
-    needed.foreach(c => require(df.columns.contains(c), s"column '$c' not found"))
-    val base = df.select(needed.map(col): _*)
-      .filter(needed.filterNot(clusterCol.contains).map(col(_).isNotNull).reduce(_ && _))
-
-    val mm = ModelMatrix.expand(base, f.terms, Nil, intercept = f.intercept)
-    val all: List[ModelMatrix.MMCol] =
-      (if (f.intercept) List(ModelMatrix.MMCol("(Intercept)", lit(1.0))) else Nil) ++ mm.cols
-    val displayNames = all.map(c => ModelMatrix.displayName(c.name)).toIndexedSeq
+    val d = ModelFrame.design(df, f, instruments ++ clusterCol)
+    val displayNames = d.displayNames
     endog.foreach(e => require(displayNames.contains(e),
       s"endogenous column '$e' is not a term of the expanded design ($displayNames)"))
 
-    val p = all.length
+    val xNames = d.xNames
+    val p = xNames.length
     val m = instruments.length
-    val xNames = (0 until p).map(i => s"__iv_x$i")
     val zNames = (0 until m).map(i => s"__iv_z$i")
-    val joint = base.select(
-      (col(f.y).cast("double").as(Dbreg.Y) +:
-        all.zipWithIndex.map { case (c, i) => c.col.cast("double").as(xNames(i)) }) ++
+    val joint = d.df.select(
+      (col(Y) +: xNames.map(col)) ++
         instruments.zipWithIndex.map { case (z, i) => col(z).cast("double").as(zNames(i)) } ++
         clusterCol.map(col): _*)
 
@@ -116,7 +109,7 @@ object Iv {
     // the solve. Conditioning is then flat in n.
     val interceptSlot = if (f.intercept) Some(0) else None
     val demeanable: Seq[String] =
-      (Dbreg.Y +: xNames.zipWithIndex.collect {
+      (Y +: xNames.zipWithIndex.collect {
         case (nm, i) if !interceptSlot.contains(i) => nm
       }) ++ zNames
     val means: Map[String, Double] =
@@ -135,7 +128,7 @@ object Iv {
       }: _*)
 
     // ONE scan: the full (p+m)-wide triangle + y cross-moments
-    val mom = MomentsKernel.compute(jointC, Dbreg.Y, xNames ++ zNames, intercept = false)
+    val mom = MomentsKernel.compute(jointC, Y, xNames ++ zNames, intercept = false)
     require(mom.nRows > p, s"need more rows than parameters (n=${mom.nRows}, p=$p)")
 
     val endogIdx = endog.map(displayNames.indexOf).toIndexedSeq
@@ -186,7 +179,7 @@ object Iv {
         val xhat: IndexedSeq[Column] = keep.map { j =>
           (0 until k).map(r => zCols(r) * lit(gInvZtX(r, j))).reduce(_ + _)
         }.toIndexedSeq
-        val u = col(Dbreg.Y) -
+        val u = col(Y) -
           keep.zipWithIndex.map { case (j, i) => col(xNames(j)) * lit(beta(i)) }
             .reduce(_ + _)
         v match {
@@ -210,7 +203,7 @@ object Iv {
         val shifts = DenseVector.tabulate(pk)(j =>
           if (j == i0) 0.0 else means(xNames(keep(j))))
         val bO = beta.copy
-        bO(i0) = beta(i0) + means(Dbreg.Y) - (shifts dot beta)
+        bO(i0) = beta(i0) + means(Y) - (shifts dot beta)
         val aInv = DenseMatrix.eye[Double](pk)
         for (j <- 0 until pk if j != i0) aInv(i0, j) = -shifts(j)
         (bO, aInv * vc * aInv.t)

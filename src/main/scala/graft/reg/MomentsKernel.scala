@@ -10,15 +10,13 @@ import graft.linalg.LinAlg
   * normal equations. `xtx`/`xty` include the intercept row when requested.
   */
 private[graft] final case class MomentsResult(
-    names: Array[String],
     xtx: DenseMatrix[Double],
     xty: DenseVector[Double],
     nRows: Long,
     n: Double, // Σw (== nRows unweighted)
     sumY: Double,
     sumYSq: Double,
-    extra: Map[String, Double],
-    plan: String = "" // formatted physical plan of the aggregation (sql_only analogue)
+    extra: Map[String, Double]
 )
 
 /** The sufficient-statistics kernel every estimator shares (reference
@@ -268,19 +266,13 @@ private[graft] object MomentsKernel {
         rawAggs(col(yName).cast("double"), xNames.map(col(_).cast("double")), w)
     val aggs = (count(lit(1)).as("_nrows") +: moments) ++
       extraAggs.map { case (nm, c) => c.as(nm) }
-    val aggDf = df.agg(aggs.head, aggs.tail: _*)
-    val planStr = aggDf.queryExecution.explainString(
-      org.apache.spark.sql.execution.SimpleMode)
-    val row = aggDf.collect()(0)
+    val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
     val raw =
       if (fused) fromPacked(row.getAs[scala.collection.Seq[Double]]("_m"), p)
       else readRaw(row, p)
     val (xtx, xty) = if (intercept) raw.withIntercept else (raw.sxx, raw.sxy)
-    val names =
-      (if (intercept) Array("(Intercept)") else Array.empty[String]) ++ xNames
     val extras = extraAggs.map { case (nm, _) => nm -> double(row, nm) }.toMap
-    MomentsResult(names, xtx, xty, row.getAs[Long]("_nrows"), raw.n, raw.sy,
-      raw.syy, extras, planStr)
+    MomentsResult(xtx, xty, row.getAs[Long]("_nrows"), raw.n, raw.sy, raw.syy, extras)
   }
 
   /** Runs the optional `maxGroups` guard of the grouped fits: one count

@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
 import graft.Staging.StagedFrame
 import graft.formula.Formula
 import graft.linalg.LinAlg
-import graft.model.ModelMatrix
+import graft.model.ModelFrame
+import graft.model.ModelFrame.{Design, Y}
 
 /** Quantile regression (Koenker & Bassett 1978) via iteratively reweighted
   * least squares on the moments kernel — a beyond-reference extension of the
@@ -72,7 +73,7 @@ object Qreg {
     * economy the generated cqrSql oracle gets from its shared f0 CTE). */
   private[reg] final case class QregInit(
       f: Formula,
-      d: Dbreg.Design,
+      d: Design,
       m0: MomentsResult,
       s0: LinAlg.SolveOutcome)
 
@@ -80,15 +81,10 @@ object Qreg {
     val f = Formula.parse(formula)
     require(f.fe.isEmpty,
       "qreg does not absorb fixed effects; include them as dummies")
-    val needed = f.allInputCols
-    needed.foreach(c => require(df.columns.contains(c), s"column '$c' not found"))
-    val base = df
-      .select(needed.map(col): _*)
-      .na.drop(needed)
-    val d = Dbreg.buildDesign(base, f, Nil, intercept = f.intercept)
+    val d = ModelFrame.design(df, f)
     // initial OLS: one unweighted moments pass; collinear columns drop here
     // and stay dropped (check-loss weights cannot restore rank)
-    val m0 = MomentsKernel.compute(d.df, Dbreg.Y, d.xNames, intercept = false)
+    val m0 = MomentsKernel.compute(d.df, Y, d.xNames, intercept = false)
     QregInit(f, d, m0, LinAlg.solveDetecting(m0.xtx, m0.xty))
   }
 
@@ -137,7 +133,7 @@ object Qreg {
         "line coincides) — pass bandwidth explicitly if SEs are still wanted")
 
     def residual(beta: DenseVector[Double]): Column =
-      keptX.zipWithIndex.foldLeft(col(Dbreg.Y).cast("double")) {
+      keptX.zipWithIndex.foldLeft(col(Y).cast("double")) {
         case (acc, (xn, i)) => acc - lit(beta(i)) * col(xn).cast("double")
       }
 
@@ -150,7 +146,7 @@ object Qreg {
       val w = when(res >= 0, lit(tau)).otherwise(lit(1.0 - tau)) /
         greatest(abs(res), lit(eps))
       val work = d.df.withColumn("__qw", w)
-      val m = MomentsKernel.compute(work, Dbreg.Y, keptX, intercept = false,
+      val m = MomentsKernel.compute(work, Y, keptX, intercept = false,
         weightName = Some("__qw"))
       val s = LinAlg.solveDetecting(m.xtx, m.xty)
       require(s.dropIdx.isEmpty,
@@ -228,24 +224,14 @@ object Qreg {
     require(eps > 0)
     val f = Formula.parse(formula)
     require(f.fe.isEmpty, "grouped qreg does not support fixed effects (| fe)")
-    val needed = (f.allInputCols :+ groupCol).distinct
-    needed.foreach(c => require(df.columns.contains(c), s"column '$c' not found"))
-    val base = df.select(needed.map(col): _*)
-      .filter(needed.map(col(_).isNotNull).reduce(_ && _))
-
-    val mm = ModelMatrix.expand(base, f.terms, Nil, intercept = f.intercept)
-    val all: List[ModelMatrix.MMCol] =
-      (if (f.intercept) List(ModelMatrix.MMCol("(Intercept)", lit(1.0)))
-       else Nil) ++ mm.cols
-    require(all.nonEmpty, "empty design")
-    val xNames = all.indices.map(i => s"__g_x$i").toIndexedSeq
-    val displayNames = all.map(c => ModelMatrix.displayName(c.name)).toIndexedSeq
+    val d = ModelFrame.design(df, f, Seq(groupCol))
+    val xNames = d.xNames
+    val displayNames = d.displayNames
+    require(xNames.nonEmpty, "empty design")
     val p = xNames.length
 
-    val rowFrame = base.select(
-      col(groupCol).cast("string").as("_g") +:
-        (all.zipWithIndex.map { case (c, i) => c.col.cast("double").as(xNames(i)) } :+
-          col(f.y).cast("double").as("_yb")): _*)
+    val rowFrame = d.df.select(
+      col(groupCol).cast("string").as("_g") +: xNames.map(col) :+ col(Y).as("_yb"): _*)
       .staged // every step + the sandwich rescans this frame
 
     val spark = df.sparkSession

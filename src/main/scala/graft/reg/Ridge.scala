@@ -5,6 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.formula.Formula
 import graft.linalg.LinAlg
+import graft.model.ModelFrame
+import graft.model.ModelFrame.Y
 
 /** L2-regularized (ridge) regression on the moments kernel — a
   * beyond-reference extension of the engine's sufficient-statistics family
@@ -73,16 +75,10 @@ object Ridge {
       "ridge does not absorb fixed effects; include them as dummies")
     require(f.intercept, "ridge requires an intercept (centered form)")
 
-    val needed = f.allInputCols
-    needed.foreach(c => require(df.columns.contains(c), s"column '$c' not found"))
-    val base = df
-      .select(needed.map(org.apache.spark.sql.functions.col): _*)
-      .na.drop(needed)
-
     // design WITHOUT an explicit intercept column (centering absorbs it);
     // intercept=true on the kernel makes the column sums ride along in row 0
-    val d = Dbreg.buildDesign(base, f, Nil, intercept = false)
-    val mom = MomentsKernel.compute(d.df, Dbreg.Y, d.xNames, intercept = true)
+    val d = ModelFrame.design(df, f, intercept = false)
+    val mom = MomentsKernel.compute(d.df, Y, d.xNames, intercept = true)
     require(mom.nRows > 1, s"need >1 rows, got ${mom.nRows}")
     pathFromTriangle(d.displayNames, mom.xtx, mom.xty, mom.sumYSq, mom.nRows,
       lambdas, standardize)
@@ -183,17 +179,13 @@ object Ridge {
     val f = Formula.parse(formula)
     require(f.fe.isEmpty, "ridge does not absorb fixed effects")
     require(f.intercept, "ridge requires an intercept (centered form)")
-    val needed = (f.allInputCols :+ idCol).distinct
-    needed.foreach(c => require(df.columns.contains(c), s"column '$c' not found"))
-    val base = df.select(needed.map(col): _*)
-      .filter(f.allInputCols.map(col(_).isNotNull).reduce(_ && _))
-    val d = Dbreg.buildDesign(base, f, Seq(idCol), intercept = false)
+    val d = ModelFrame.design(df, f, Seq(idCol), intercept = false)
     val p = d.xNames.length
     val fold = graft.pipeline.TextOps
       .hash32(concat(lit(salt), col(idCol).cast("string"))) % folds
 
     val perFold = MomentsKernel.aggregate(d.df.withColumn("_fold", fold),
-      Seq(col("_fold")), col(Dbreg.Y), d.xNames.map(col))
+      Seq(col("_fold")), col(Y), d.xNames.map(col))
       .collect().sortBy(_.getAs[Long]("_fold"))
     require(perFold.length >= 2,
       s"data hashed into ${perFold.length} non-empty fold(s); need >= 2")
@@ -243,13 +235,9 @@ object Ridge {
     val f = Formula.parse(formula)
     require(f.fe.isEmpty, "grouped ridge does not absorb fixed effects")
     require(f.intercept, "grouped ridge requires an intercept (centered form)")
-    val needed = (f.allInputCols :+ groupCol).distinct
-    needed.foreach(c => require(df.columns.contains(c), s"column '$c' not found"))
-    val base = df.select(needed.map(col): _*)
-      .filter(needed.map(col(_).isNotNull).reduce(_ && _))
-    val d = Dbreg.buildDesign(base, f, Seq(groupCol), intercept = false)
+    val d = ModelFrame.design(df, f, Seq(groupCol), intercept = false)
     val moments = MomentsKernel.capGroups(MomentsKernel.aggregate(d.df,
-      Seq(col(groupCol)), col(Dbreg.Y), d.xNames.map(col)), maxGroups)
+      Seq(col(groupCol)), col(Y), d.xNames.map(col)), maxGroups)
 
     val spark = df.sparkSession
     import spark.implicits._

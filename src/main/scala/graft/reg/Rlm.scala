@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 
 import graft.formula.Formula
 import graft.linalg.LinAlg
+import graft.model.ModelFrame
+import graft.model.ModelFrame.Y
 
 /** Huber robust regression (M-estimation) via IRLS on the moments kernel —
   * a beyond-reference extension sharing the engine's one-scan-per-step
@@ -83,17 +85,11 @@ object Rlm {
     require(f.fe.isEmpty,
       "rlm does not absorb fixed effects; include them as dummies")
 
-    val needed = f.allInputCols
-    needed.foreach(c => require(df.columns.contains(c), s"column '$c' not found"))
-    val base = df
-      .select(needed.map(col): _*)
-      .na.drop(needed)
-
-    val d = Dbreg.buildDesign(base, f, Nil, intercept = f.intercept)
+    val d = ModelFrame.design(df, f)
 
     // initial OLS: one unweighted moments pass; collinear columns drop here
     // and stay dropped (the weights at any β cannot restore rank)
-    val m0 = MomentsKernel.compute(d.df, Dbreg.Y, d.xNames, intercept = false)
+    val m0 = MomentsKernel.compute(d.df, Y, d.xNames, intercept = false)
     val s0 = LinAlg.solveDetecting(m0.xtx, m0.xty)
     val keptX = s0.keepIdx.map(d.xNames)
     val keptNames = s0.keepIdx.map(d.displayNames)
@@ -111,7 +107,7 @@ object Rlm {
     val kap = kappa(k)
 
     def residual(beta: DenseVector[Double]): Column =
-      keptX.zipWithIndex.foldLeft(col(Dbreg.Y).cast("double")) {
+      keptX.zipWithIndex.foldLeft(col(Y).cast("double")) {
         case (acc, (xn, i)) => acc - lit(beta(i)) * col(xn).cast("double")
       }
 
@@ -129,7 +125,7 @@ object Rlm {
       val clip2 = {
         val a = least(abs(res), lit(band)); a * a
       }
-      val m = MomentsKernel.compute(work, Dbreg.Y, keptX, intercept = false,
+      val m = MomentsKernel.compute(work, Y, keptX, intercept = false,
         weightName = Some("__rw"), extraAggs = Seq("_clip2" -> sum(clip2)))
       val s = LinAlg.solveDetecting(m.xtx, m.xty)
       require(s.dropIdx.isEmpty,

@@ -227,7 +227,7 @@ object SqlGen {
   }
 
   /** Generate the strategy's SQL, discovering factor levels from `df` the
-    * same way the fit does (one small distinct per factor var). */
+    * same way the fit does (one level probe over every factor var). */
   def sqlOnly(
       formula: String,
       df: DataFrame,
@@ -235,10 +235,7 @@ object SqlGen {
       strategy: String
   ): String = {
     val f = Formula.parse(formula)
-    val levels = f.xvars
-      .filter(ModelMatrix.isFactor(df, _))
-      .map(v => v -> ModelMatrix.factorLevels(df, v))
-      .toMap
+    val levels = ModelMatrix.levels(df, f.xvars.filter(ModelMatrix.isFactor(df, _)))
     sqlOnlyWithLevels(formula, levels, table, strategy)
   }
 }

@@ -81,4 +81,38 @@ class CompressDriverSpec extends SparkTestBase {
     val c2 = Dbreg.fit("y ~ x1 + x1:grp | unit", df, strategy = "compress")
     assert(!c2.coef.contains("x1:grpg0") && c2.coef.contains("x1:grpg1"))
   }
+
+  test("driver path reuses the caller's level probe: y ~ x + fx | u + k in 3 queries") {
+    import spark.implicits._
+    // 1 + 1 + 3 + 139 + 7 = 151 design columns ⇒ driver path
+    val rng = new scala.util.Random(5)
+    val wide = (for (u <- 0 until 140; t <- 0 until 6) yield {
+      val x = ((u + 2 * t) % 5).toDouble
+      val fx = s"f${(u + t) % 4}"
+      val y = 0.6 * x + (u % 9) * 0.2 + ((u + t / 2) % 8) * 0.1 +
+        (if (fx == "f2") 0.5 else 0.0) + rng.nextGaussian() * 0.3
+      (y, x, fx, s"u$u", s"k${(u + t / 2) % 8}")
+    }).toDF("y", "x", "fx", "u", "k")
+    var r: graft.reg.DbregResult = null
+    val run = PlanStats.capturedQueries(spark) {
+      r = Dbreg.fit("y ~ x + fx | u + k", wide, vcov = "hc1", strategy = "compress"); ()
+    }
+    // one level probe over the cells, the nmax count, the cell collect
+    // (7 when fitCompress and the driver path each probed fx, u and k)
+    val actions = run.map(_._1)
+    assert(actions.size == 3, actions)
+    assert(r.coeftable.size == 151 && r.feTerms.size == 146)
+    // estimates and hc1 SEs of the driver path's former private
+    // expansion, which this layout must reproduce
+    val want = Map(
+      "(Intercept)" -> (-0.11904564556425938, 0.18610789105810002),
+      "x" -> (0.5905424253206527, 0.007543746340806485),
+      "fxf1" -> (-0.019822317180162127, 0.0311051397130506),
+      "fxf2" -> (0.4841243321801097, 0.03183556154342454),
+      "fxf3" -> (-0.03484201147459457, 0.030338741014441003))
+    want.foreach { case (t, (b, se)) =>
+      assert(math.abs(r.coef(t) - b) <= 1e-12 * math.abs(b), s"$t: ${r.coef(t)} vs $b")
+      assert(math.abs(r.se(t) - se) <= 1e-12 * se, s"$t: ${r.se(t)} vs $se")
+    }
+  }
 }

@@ -1,7 +1,8 @@
 package graft
 
 import breeze.linalg.{DenseMatrix, DenseVector, inv}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, concat, lit}
+import graft.model.ModelMatrix
 import graft.reg.Dbreg
 
 /** Differential tests: every strategy against a textbook dense OLS computed
@@ -365,6 +366,39 @@ class DbregSpec extends SparkTestBase {
     assert(fit.terms == Seq("(Intercept)", "x2", "fctb", "fctc"))
     assertClose(fit.coef("fctb"), beta(2), 1e-7, "beta fctb")
     assertClose(fit.se("fctc"), seIid(3), 1e-7, "se fctc")
+  }
+
+  test("the factor level probe caps levels, not rows") {
+    import spark.implicits._
+    // rows 40..50 hold a level no earlier row has: a row cap would code
+    // them as the reference level
+    val df = (0 until 50).map(i => if (i < 39) s"l${i % 3}" else "late").toDF("v")
+    assert(ModelMatrix.factorLevels(df, "v", maxLevels = 10) == Seq("l0", "l1", "l2", "late"))
+    val wide = (0 until 50).map(i => s"w${i % 11}").toDF("v")
+    val e = intercept[IllegalArgumentException](ModelMatrix.factorLevels(wide, "v", maxLevels = 10))
+    assert(e.getMessage.contains("more than 10 levels") && e.getMessage.contains("fixed effect"),
+      e.getMessage)
+    // an eviction round can empty the summary: 12 single-occurrence levels
+    // in one partition, and two disjoint partitions of 11 levels each
+    val ids = (n: Int, parts: Int) =>
+      spark.range(0, n, 1, parts).select(concat(lit("w"), col("id").cast("string")).as("v"))
+    for ((n, parts) <- Seq(12 -> 1, 22 -> 2)) {
+      val ev = intercept[IllegalArgumentException](
+        ModelMatrix.factorLevels(ids(n, parts), "v", maxLevels = 10))
+      assert(ev.getMessage.contains("more than 10 levels"), s"$n/$parts: ${ev.getMessage}")
+    }
+    // an absorbed var is already a fixed effect: point at the strategies instead
+    val fe = intercept[IllegalArgumentException](
+      ModelMatrix.levels(ids(12, 1), Seq("v"), maxLevels = 10, absorbed = Seq("v")))
+    assert(fe.getMessage.contains("more than 10 levels") && fe.getMessage.contains("demean") &&
+      !fe.getMessage.contains("fixed effect"), fe.getMessage)
+    // every factor from one aggregate
+    val two = df.withColumn("w", col("v").substr(1, 1))
+    val run = PlanStats.capturedQueries(spark) {
+      assert(ModelMatrix.levels(two, Seq("v", "w")) ==
+        Map("v" -> Seq("l0", "l1", "l2", "late"), "w" -> Seq("l"))); ()
+    }
+    assert(run.size == 1, run.map(_._1))
   }
 
   test("interaction numeric:factor matches dense") {

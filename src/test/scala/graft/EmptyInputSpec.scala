@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.binsreg.Dbbinsreg
 import graft.operators.{AsOf, Baskets, Events, Features, Graphs, RangeJoin}
 import graft.pipeline.{Dedup, Dsir, Phrase, Similarity, TextOps}
-import graft.reg.{Dbreg, Glm, Iv}
+import graft.reg.{Dbreg, ElasticNet, Glm, Iv, Qreg, Ridge, Rlm}
 import graft.sources.ScaleOps
 
 /** Degenerate-input sweep: every major entry point over EMPTY (and
@@ -150,6 +150,64 @@ class EmptyInputSpec extends SparkTestBase {
     val two = one.withColumn("g", when(col("x") < 2.0, "a").otherwise("b"))
     assert(Dbreg.fit("y ~ x", two, vcov = "~g", strategy = "moments").nClusters
       .contains(2L))
+  }
+
+  test("a NaN response or regressor row is dropped like a NULL one") {
+    // R's na.omit: a float column's NaN is missing, so every entry point
+    // fits the NaN-padded frame exactly as it fits the clean one
+    val cols = Seq("y", "x", "z", "g")
+    val clean = (0 until 60).map { i =>
+      val x = (i % 6).toDouble
+      (1.0 + 0.5 * x + ((i * 7) % 5) * 0.1, x, x + (i % 4), s"g${i % 3}")
+    }.toDF(cols: _*)
+    val dirty = clean.union(
+      Seq((Double.NaN, 1.0, 2.0, "g0"), (2.0, Double.NaN, 1.0, "g1")).toDF(cols: _*))
+    def same(fit: DataFrame => Map[String, Double]): Unit = {
+      val (want, got) = (fit(clean), fit(dirty))
+      assert(got.keySet == want.keySet, got)
+      want.foreach { case (k, w) =>
+        assert(math.abs(got(k) - w) <= 1e-9 * math.max(1.0, math.abs(w)), s"$k: ${got(k)} vs $w")
+      }
+    }
+    Seq("moments", "compress").foreach { s =>
+      same(d => Dbreg.fit("y ~ x", d, strategy = s).coef)
+    }
+    same(d => Glm.fit("y ~ x", d, family = "gaussian", strategy = "irls").coef)
+    same(d => Iv.fit("y ~ x", d, endog = Seq("x"), instruments = Seq("z")).coef)
+    same(d => Ridge.fit("y ~ x", d, lambda = 1.0).coef)
+    same(d => Qreg.fit("y ~ x", d, maxIter = 5, tol = 0.0).coef)
+    same(d => Dbbinsreg.fit("y ~ x", d, nbins = 3).points
+      .flatMap(p => Seq(s"x${p.bin}" -> p.x, s"fit${p.bin}" -> p.fit)).toMap)
+  }
+
+  test("every regression entry point refuses a missing column by name") {
+    val df = Seq((1.0, 2.0, 3.0, "a")).toDF("y", "x", "z", "g")
+    def refuses(fit: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](fit)
+      assert(e.getMessage.contains("column 'nope' not found"), e.getMessage)
+    }
+    val f = "y ~ x + nope"
+    refuses(Dbreg.fit(f, df, strategy = "moments"))
+    refuses(Dbreg.fit(f, df, strategy = "compress"))
+    refuses(Dbreg.fit("y ~ x", df, vcov = "~nope"))
+    refuses(Dbreg.fit("y ~ x", df, weights = Some("nope")))
+    refuses(Dbreg.fitGrouped(f, df, "g"))
+    refuses(Dbreg.fitGrouped("y ~ x", df, "nope"))
+    refuses(Dbreg.compressedData(f, df))
+    refuses(Glm.fit(f, df, family = "gaussian"))
+    refuses(Glm.fit("y ~ x", df, family = "gaussian", offset = Some("nope")))
+    refuses(Glm.fitGrouped(f, df, "g", family = "gaussian"))
+    refuses(Qreg.fit(f, df))
+    refuses(Qreg.fitGrouped(f, df, "g"))
+    refuses(Iv.fit(f, df, endog = Seq("x"), instruments = Seq("z")))
+    refuses(Iv.fit("y ~ x", df, endog = Seq("x"), instruments = Seq("nope")))
+    refuses(Rlm.fit(f, df))
+    refuses(Ridge.fit(f, df, lambda = 1.0))
+    refuses(Ridge.cv("y ~ x", df, "nope", Seq(1.0)))
+    refuses(Ridge.fitGrouped(f, df, "g", lambda = 1.0))
+    refuses(ElasticNet.fit(f, df, lambda = 0.1))
+    refuses(Dbbinsreg.fit(f, df))
+    refuses(Dbbinsreg.fit("y ~ x", df, vcov = "~nope"))
   }
 
   test("round-8 operators: knn self-join empty corpus, qreg/cqr refusals") {

@@ -172,4 +172,22 @@ class IvSpec extends SparkTestBase {
       Iv.fit("y ~ x", df, endog = Nil, instruments = Seq("z"))
     }
   }
+
+  test("a row with a NULL cluster is dropped like any incomplete row") {
+    val cols = Seq("y", "x", "z", "w", "g")
+    val df = panel(600).toDF(cols: _*)
+    // shifted responses, so keeping these rows would move the fit
+    val orphans = panel(60).map { case (y, x, z, w, _) => (y + 3.0, x, z, w, null: String) }
+    val withNull = df.union(orphans.toDF(cols: _*))
+    val got = Iv.fit("y ~ x + w", withNull, endog = Seq("x"), instruments = Seq("z"),
+      vcov = "~g")
+    val want = Iv.fit("y ~ x + w", df, endog = Seq("x"), instruments = Seq("z"),
+      vcov = "~g")
+    assert(got.nobs == want.nobs)
+    for ((a, b) <- got.coeftable.zip(want.coeftable)) {
+      assert(a.term == b.term)
+      assert(math.abs(a.estimate - b.estimate) <= 1e-9 * math.abs(b.estimate), s"$a vs $b")
+      assert(math.abs(a.stdError - b.stdError) <= 1e-9 * b.stdError, s"$a vs $b")
+    }
+  }
 }

@@ -9,7 +9,8 @@ import org.apache.spark.sql.types.BinaryType
 
 import graft.PlanStats.{capturedQueries, planStats, shuffleKeys}
 import graft.pipeline.{Dedup, Similarity, TextOps}
-import graft.reg.Dbreg
+import graft.binsreg.Dbbinsreg
+import graft.reg.{Dbreg, ElasticNet, Glm, Qreg, Ridge, Rlm}
 
 /** Plan-shape pins for the rounds-16/17 plan wins (OPTIMIZATION_r16.md /
   * OPTIMIZATION_r17.md, section numbers cited per test) and for the
@@ -197,17 +198,26 @@ class PlanShapeSpec extends SparkTestBase {
         .withColumn("note", concat(lit("row "), col("fe").cast("string")))
         .write.mode("overwrite").parquet(dir)
       val pq = spark.read.parquet(dir)
-      val run = capturedQueries(spark) {
-        Dbreg.fit("y ~ x", pq, strategy = "moments"); ()
-      }
-      val scans = run.flatMap { case (_, qe) => PlanStats.fileScans(qe.executedPlan) }
-      assert(scans.nonEmpty, run.map(_._1))
-      scans.foreach { s =>
-        assert(s.requiredSchema.fieldNames.toSet == Set("y", "x"), s.requiredSchema)
-        val notNull = s.dataFilters.flatMap(_.collect {
-          case IsNotNull(a: Attribute) => a.name
-        }).toSet
-        assert(Set("y", "x").subsetOf(notNull), s.dataFilters)
+      // every estimator enters through ModelFrame.prepare
+      val fits: Seq[(String, () => Any)] = Seq(
+        "Dbreg" -> (() => Dbreg.fit("y ~ x", pq, strategy = "moments")),
+        "Ridge" -> (() => Ridge.fit("y ~ x", pq, lambda = 1.0)),
+        "Rlm" -> (() => Rlm.fit("y ~ x", pq)),
+        "Qreg" -> (() => Qreg.fit("y ~ x", pq, maxIter = 2, tol = 0.0)),
+        "ElasticNet" -> (() => ElasticNet.fit("y ~ x", pq, lambda = 0.1)),
+        "Glm" -> (() => Glm.fit("y ~ x", pq, family = "gaussian", strategy = "irls")),
+        "Dbbinsreg" -> (() => Dbbinsreg.fit("y ~ x", pq, nbins = 3)))
+      fits.foreach { case (name, fit) =>
+        val run = capturedQueries(spark) { fit(); () }
+        val scans = run.flatMap { case (_, qe) => PlanStats.fileScans(qe.executedPlan) }
+        assert(scans.nonEmpty, s"$name: ${run.map(_._1)}")
+        scans.foreach { s =>
+          assert(s.requiredSchema.fieldNames.toSet == Set("y", "x"), s"$name: ${s.requiredSchema}")
+          val notNull = s.dataFilters.flatMap(_.collect {
+            case IsNotNull(a: Attribute) => a.name
+          }).toSet
+          assert(Set("y", "x").subsetOf(notNull), s"$name: ${s.dataFilters}")
+        }
       }
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }

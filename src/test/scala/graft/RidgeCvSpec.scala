@@ -75,4 +75,23 @@ class RidgeCvSpec extends SparkTestBase {
       Ridge.cv("y ~ x", df, "nope", Seq(1.0))
     }
   }
+
+  test("NULL ids are dropped, not dealt a fold of their own") {
+    val rows = (0 until 400).map { i =>
+      val x = (i % 19).toDouble
+      (s"id$i", 2.0 + 0.4 * x + ((i * 48271) % 13).toDouble - 6.0, x)
+    }
+    val df = rows.toDF("rid", "y", "x")
+    // far-off responses: as a fold of their own they would dominate the SSE
+    val orphans = (0 until 40).map(i => (null: String, 50.0 - i, (i % 19).toDouble))
+    val withNull = df.union(orphans.toDF("rid", "y", "x"))
+    val lambdas = Seq(0.0, 10.0, 100.0, 1000.0)
+    val got = Ridge.cv("y ~ x", withNull, "rid", lambdas, folds = 4)
+    val want = Ridge.cv("y ~ x", df, "rid", lambdas, folds = 4)
+    assert(got.nobs == want.nobs)
+    got.cvSse.zip(want.cvSse).foreach { case (a, b) =>
+      assert(math.abs(a - b) <= 1e-9 * b, s"cv sse $a vs $b")
+    }
+    assert(got.bestLambda == want.bestLambda)
+  }
 }
