@@ -18,7 +18,7 @@ object DemoVerify {
     println(Dbreg.fit("l_extendedprice ~ l_quantity", li, strategy = "moments"))
 
     println("\n=== 2. multi-x + FE, auto strategy, hc1 ===")
-    println(Dbreg.fit("l_extendedprice ~ l_quantity + l_discount | l_returnflag + l_linestatus", li, vcov = "hc1", verbose = true))
+    println(Dbreg.fit("l_extendedprice ~ l_quantity + l_discount | l_returnflag + l_linestatus", li, vcov = "hc1"))
 
     println("\n=== 3. clustered SEs, compress ===")
     println(Dbreg.fit("l_extendedprice ~ l_quantity | l_returnflag", li, vcov = "~l_linestatus", strategy = "compress"))

@@ -6,13 +6,16 @@ import org.apache.spark.sql.DataFrame
   *
   * Operators that return a frame the caller will read several times
   * (shingle tables, signature tables, IRLS working sets, compressed
-  * cells) truncate lineage so re-reads don't re-run the upstream plan.
-  * HOW they truncate is a deployment decision, not an operator decision:
+  * cells, the edge and rank tables iterative operators re-read every
+  * round) truncate lineage so re-reads don't re-run the upstream plan.
+  * HOW they truncate follows one rule for EVERY staged frame in the
+  * library: configuring a checkpoint dir IS the opt-in to cluster-safe
+  * staging.
   *
-  *   - single-node / ephemeral runs: `localCheckpoint` — blocks persist
-  *     executor-locally;
-  *   - long multi-executor jobs: a RELIABLE `checkpoint` into the
-  *     configured checkpoint dir — localCheckpoint blocks die with their
+  *   - no `sc.setCheckpointDir` (single-node / ephemeral runs):
+  *     `localCheckpoint` — blocks persist executor-locally;
+  *   - a checkpoint dir is set (long multi-executor jobs): a RELIABLE
+  *     `checkpoint` into that dir — localCheckpoint blocks die with their
   *     executor and have no lineage to recompute from, so executor loss
   *     (routine preemption at 1000-executor scale) would otherwise kill
   *     the job.
@@ -29,63 +32,16 @@ import org.apache.spark.sql.DataFrame
   * `dag-scheduler-event-loop` in getMissingParentStages). Eager
   * checkpointing materializes in a single controlled query before any
   * later query can embed the frame, so no concurrent submission can
-  * race the first `doCheckpoint`. For reliable mode eager is also
+  * race the first `doCheckpoint`. For reliable checkpoints eager is also
   * strictly cheaper: a lazily-marked reliable checkpoint recomputes the
   * whole plan in a second write-out job at first-action end.
-  *
-  * `spark.graft.checkpointMode` selects the policy for EVERY staged frame
-  * in the library (the same gate `Dedup.duplicateClusters` applies to its
-  * eager truncations):
-  *
-  *   - `auto` (default): reliable when `sc.setCheckpointDir` has been
-  *     called, local otherwise — configuring a checkpoint dir IS the
-  *     opt-in to cluster-safe staging;
-  *   - `local` / `reliable`: force one policy (reliable requires the dir);
-  *   - `off`: no truncation — callers re-run upstream plans on re-read
-  *     (debugging aid; also avoids all checkpoint-block lifecycle, e.g.
-  *     the context-cleaner/stage-metrics accumulator race on teardown).
   */
 object Staging {
 
-  def stage(df: DataFrame): DataFrame = {
-    val session = df.sparkSession
-    val mode = session.conf.get("spark.graft.checkpointMode", "auto")
-    val hasDir = session.sparkContext.getCheckpointDir.isDefined
-    mode match {
-      case "off" => df
-      case "local" => df.localCheckpoint(eager = true)
-      case "reliable" =>
-        require(hasDir,
-          "spark.graft.checkpointMode=reliable requires sc.setCheckpointDir(...)")
-        df.checkpoint(eager = true)
-      case "auto" =>
-        if (hasDir) df.checkpoint(eager = true)
-        else df.localCheckpoint(eager = true)
-      case other =>
-        throw new IllegalArgumentException(
-          s"unknown spark.graft.checkpointMode '$other' " +
-            "(expected auto | local | reliable | off)")
-    }
-  }
-
-  /** [[stage]] for frames an ITERATIVE operator re-reads every round
-    * (edge tables, rank/label carriers). `off` must not mean "no reuse"
-    * here: a loop referencing an unstaged frame k times per round
-    * re-plans AND re-executes the upstream subtree exponentially in the
-    * round count (measured 232 s vs 5 s composing connected components
-    * with a kNN pair producer), so in `off` mode this falls back to a
-    * lazy `persist(MEMORY_AND_DISK)` — blocks are reused while lineage
-    * stays visible (the mode's debugging intent); plan-TREE growth
-    * remains bounded only by the caller's own eager truncation cadence.
-    * Every other mode behaves exactly like [[stage]]. Callers may
-    * `unpersist()` the result when the loop ends (a no-op on
-    * checkpoint-backed frames). */
-  def stageForIteration(df: DataFrame): DataFrame = {
-    val staged = stage(df)
-    if (staged eq df)
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else staged
-  }
+  def stage(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
+      df.checkpoint(eager = true)
+    else df.localCheckpoint(eager = true)
 
   /** `df.staged` — drop-in for `df.localCheckpoint(false)` call sites. */
   implicit class StagedFrame(private val df: DataFrame) extends AnyVal {

@@ -52,12 +52,12 @@ object Features {
     * one 1-row aggregate broadcast back via a crossJoin; the clip is a
     * pure projection. Adds `outCol` (null stays null).
     *
-    * Two modes (the A8 probeMode precedent): `exact = true` (default)
-    * uses the exact `percentile` aggregate — the q60 quantile_cont
-    * parity, but it buffers every value per partition; `exact = false`
-    * swaps in `approx_percentile` (bounded GK sketch state,
-    * `accuracy`-controlled error) — the unbounded-scale path, since a
-    * clip bound off by a quantile hair is immaterial to tail-taming. */
+    * Two modes: `exact = true` (default) uses the exact `percentile`
+    * aggregate — the q60 quantile_cont parity, but it buffers every value
+    * per partition; `exact = false` swaps in `approx_percentile` (bounded
+    * GK sketch state, `accuracy`-controlled error) — the unbounded-scale
+    * path, since a clip bound off by a quantile hair is immaterial to
+    * tail-taming. */
   def winsorize(
       df: DataFrame,
       value: Column,
@@ -95,13 +95,12 @@ object Features {
     *
     * Built as one lazy plan: percentile aggregates with 1-row broadcast
     * crossJoins between the three stages — three scans, driver never sees
-    * a row. Two modes (the A8 probeMode precedent): `exact = true`
-    * (default) uses the exact `percentile` aggregate — the q60-pinned
-    * parity with DuckDB `quantile_cont`, but it buffers every value per
-    * partition; `exact = false` swaps in `approx_percentile` (bounded
-    * sketch state) — the unbounded-scale path; a median off by a quantile
-    * hair barely moves the MAD fence. Returns one row
-    * (median, mad, n_outliers, n). */
+    * a row. Two modes: `exact = true` (default) uses the exact
+    * `percentile` aggregate — the q60-pinned parity with DuckDB
+    * `quantile_cont`, but it buffers every value per partition;
+    * `exact = false` swaps in `approx_percentile` (bounded sketch state) —
+    * the unbounded-scale path; a median off by a quantile hair barely
+    * moves the MAD fence. Returns one row (median, mad, n_outliers, n). */
   def robustOutlierStats(
       df: DataFrame,
       value: Column,

@@ -44,13 +44,13 @@ object Graphs {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(damping > 0.0 && damping < 1.0, s"damping must be in (0,1), got $damping")
     require(checkpointEvery >= 1, s"checkpointEvery must be >= 1, got $checkpointEvery")
-    val e = Staging.stageForIteration(edges
+    val e = Staging.stage(edges
       .select(col(srcCol).as("__s"), col(dstCol).as("__d"))
       .filter(col("__s").isNotNull && col("__d").isNotNull)
       .distinct())
-    val nodes = Staging.stageForIteration(
+    val nodes = Staging.stage(
       e.select(col("__s").as("__n")).union(e.select(col("__d").as("__n"))).distinct())
-    val outDeg = Staging.stageForIteration(
+    val outDeg = Staging.stage(
       e.groupBy(col("__s")).agg(count(lit(1)).as("__deg")))
     // 1-row node count, attached by broadcast everywhere a /N appears
     // (NOT named __N: analysis is case-insensitive and would collide __n)
@@ -88,7 +88,7 @@ object Graphs {
       // truncate periodically or a 30-iteration production run walks an
       // exponential tree (the duplicateClusters clamp, Dedup.scala)
       if (i % checkpointEvery == 0 && i < iters)
-        ranks = Staging.stageForIteration(ranks)
+        ranks = Staging.stage(ranks)
     }
     ranks.select(col("__n").as("node"), col("__r").as("rank"))
   }
@@ -143,7 +143,7 @@ object Graphs {
   ): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(checkpointEvery >= 1, s"checkpointEvery must be >= 1, got $checkpointEvery")
-    val e = Staging.stageForIteration(edges
+    val e = Staging.stage(edges
       .select(col(srcCol).as("a"), col(dstCol).as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
       .union(edges.select(col(dstCol).as("a"), col(srcCol).as("b"))
@@ -164,7 +164,7 @@ object Graphs {
         .agg(max(struct(col("c"), (-col("lbl")).as("negl"))).as("__m"))
         .select(col("a").as("n"), (-col("__m.negl")).as("lbl"))
       labels =
-        if (i % checkpointEvery == 0 && i < iters) Staging.stageForIteration(top)
+        if (i % checkpointEvery == 0 && i < iters) Staging.stage(top)
         else top
     }
     labels.select(col("n").as("node"), col("lbl").as("label"))

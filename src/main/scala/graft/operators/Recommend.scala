@@ -62,7 +62,7 @@ object Recommend {
     var u: DataFrame = null
     for (_ <- 1 to iters) {
       def solve(fixed: DataFrame, joinKey: String, solveKey: String) =
-        graft.Staging.stageForIteration(
+        graft.Staging.stage(
           r.join(fixed, joinKey)
             .groupBy(col(solveKey))
             .agg(sum(col("__r") * col("__f")).as("__num"),

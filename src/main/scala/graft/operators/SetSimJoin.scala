@@ -43,7 +43,7 @@ object SetSimJoin {
     * `tokensCol` must be an `array<string>` expression over `df`'s rows
     * (duplicates collapse — set semantics). Returns (id1, id2, jaccard).
     *
-    * `positionalFilter` adds the PPJoin positional prune (Xiao et al.
+    * Candidates pass the PPJoin positional prune (Xiao et al.
     * WWW'08): a matched prefix token at (1-based) global-order positions
     * i in x and j in y bounds the overlap by 1 + min(|x|−i, |y|−j), and
     * Jaccard ≥ τ requires overlap ≥ α = ⌈τ/(1+τ)·(|x|+|y|)⌉ — candidate
@@ -60,8 +60,7 @@ object SetSimJoin {
       df: DataFrame,
       idCol: String,
       tokensCol: Column,
-      tau: Double,
-      positionalFilter: Boolean = true
+      tau: Double
   ): DataFrame = {
     require(tau > 0.0 && tau <= 1.0, s"tau must be in (0,1], got $tau")
     // NOTE for callers: pass `tokensCol` over a BOUND token attribute
@@ -103,18 +102,15 @@ object SetSimJoin {
       .filter(col("__pos") <=
         col("__sz") - ceil(lit(tau) * col("__sz")).cast("long") + lit(1))
       .select(col("id"), col("token"), col("__sz"), col("__pos")))
-    val joined = prefix.as("a").join(prefix.as("b"),
+    val cand = prefix.as("a").join(prefix.as("b"),
         col("a.token") === col("b.token") && col("a.id") < col("b.id"))
       .filter(least(col("a.__sz"), col("b.__sz")).cast("double") >=
         lit(tau) * greatest(col("a.__sz"), col("b.__sz")))
-    val pruned =
-      if (!positionalFilter) joined
-      else joined.filter(
+      .filter(
         (lit(1L) + least(col("a.__sz") - col("a.__pos"),
           col("b.__sz") - col("b.__pos"))).cast("double") >=
           ceil(lit(tau / (1.0 + tau)) *
             (col("a.__sz") + col("b.__sz")).cast("double") - lit(1e-9)))
-    val cand = pruned
       .select(col("a.id").as("id1"), col("b.id").as("id2"))
       .distinct()
     verify(sets, cand, tau)

@@ -15,12 +15,11 @@ import org.apache.spark.sql.functions._
   * partial+final hash aggregate keyed (label, token); everything after
   * that (label totals, vocabulary size, smoothing) derives from the
   * aggregated V×L table, never from a second corpus scan. Scoring is a
-  * token-keyed join of per-doc token counts against the model (broadcast
-  * by default — a vocabulary is small next to a corpus; pass
-  * `broadcastModel = false` for open-vocabulary regimes and let AQE pick),
-  * then one partial+final aggregate keyed on doc id. Label cardinality L
-  * is assumed model-sized (it pivots into L score columns), exactly like
-  * the factor-level discovery in [[graft.model.ModelMatrix]].
+  * token-keyed join of per-doc token counts against the broadcast model
+  * (a vocabulary is small next to a corpus), then one partial+final
+  * aggregate keyed on doc id. Label cardinality L is assumed model-sized
+  * (it pivots into L score columns), exactly like the factor-level
+  * discovery in [[graft.model.ModelMatrix]].
   */
 object Classify {
 
@@ -75,8 +74,7 @@ object Classify {
       idCol: String,
       textCol: String,
       labelCol: String,
-      alpha: Double = 1.0,
-      broadcastModel: Boolean = true
+      alpha: Double = 1.0
   ): DataFrame = {
     require(alpha > 0, s"alpha must be > 0, got $alpha")
     val model = nbModel(df, textCol, labelCol, alpha).staged
@@ -107,9 +105,9 @@ object Classify {
     // per-label unseen constant at score time. Pivot emits columns named by
     // the label VALUES in list order; the positional toDF rename keeps
     // arbitrary label strings from colliding with id/token/tf.
-    val wide0 = model.groupBy("token").pivot("label", labels).agg(first(col("loglik")))
-      .toDF("token" +: labels.map(l => s"__ll_$l"): _*)
-    val wide = if (broadcastModel) broadcast(wide0) else wide0
+    val wide = broadcast(model.groupBy("token").pivot("label", labels)
+      .agg(first(col("loglik")))
+      .toDF("token" +: labels.map(l => s"__ll_$l"): _*))
 
     val docTf = df
       .select(col(idCol).as("id"), explode(TextOps.tokens(col(textCol))).as("token"))

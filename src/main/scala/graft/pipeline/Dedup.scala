@@ -171,18 +171,6 @@ object Dedup {
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String, n: Int = 2): DataFrame =
     withSig(shingleArrays(df, idCol, textCol, n), Seq("id"))
 
-  /** Signature aggregation over a precomputed (id, shingle) set — lets
-    * callers compute/cache the shingle explosion once. */
-  def minhashSignaturesFrom(sh: DataFrame): DataFrame = {
-    val hx = sh.withColumn("x", TextOps.hash32(col("shingle")) % MinhashP)
-    val mins = (0 until NumHashes).map { i =>
-      min((col("x") * minhashA(i) + minhashB(i)) % MinhashP).as(s"h$i")
-    }
-    hx.groupBy("id")
-      .agg(mins.head, mins.tail: _*)
-      .select(col("id"), array((0 until NumHashes).map(i => col(s"h$i")): _*).as("sig"))
-  }
-
   /** LSH band buckets: (id, band, bucket-string). Docs sharing a bucket in
     * any band are candidate near-duplicates. */
   def lshBuckets(sigs: DataFrame): DataFrame = {
@@ -353,14 +341,13 @@ object Dedup {
     // but leaves the full upstream plan in every round's logical tree, so
     // composing CC with an expensive pair producer (kNN join, LSH) makes
     // the analyzer re-walk that subtree 2×4^k per round — measured 232 s
-    // vs 8 s on the q208 composition. stageForIteration handles the
-    // `off`-mode persist fallback so iterations still reuse blocks.
+    // vs 8 s on the q208 composition.
     // PRE-PARTITIONED on `b`, the per-round probe key: the propagate join
     // requires HashPartitioning(b), and the staged frame keeps its
     // partitioning (LogicalRDD preserves it; persist keeps the plan), so
     // EVERY round's join reads the edge table exchange-free — one staged
     // dup-sized shuffle replaces one per round (guide §2.4, r16).
-    val edges = Staging.stageForIteration(pairs
+    val edges = Staging.stage(pairs
       .select(col("id1").as("a"), col("id2").as("b"))
       .union(pairs.select(col("id2").as("a"), col("id1").as("b")))
       .repartition(col("b")))
@@ -421,7 +408,7 @@ object Dedup {
       // join sides read the materialized blocks; the kept hash(a)
       // partitioning also feeds the jump's build side (__lid = a)
       // exchange-free (r17, guide §2.4).
-      val prop = Staging.stageForIteration(edges
+      val prop = Staging.stage(edges
         .join(labels.withColumnRenamed("id", "nbr"), col("b") === col("nbr"))
         .select(col("a"), col("label"))
         .unionAll(labels.select(col("id").as("a"), col("label")))
@@ -437,12 +424,8 @@ object Dedup {
           least(prop("label"), coalesce(col("__llabel"), prop("label"))).as("label"))
       val ckptRound = (i + 1) % stretch == 0 || i + 1 == maxIter
       val updated =
-        if (ckptRound) {
-          // eager either way: materializes + cuts lineage. Reliable when a
-          // checkpoint dir is configured (survives executor loss at scale).
-          if (raw.sparkSession.sparkContext.getCheckpointDir.isDefined) raw.checkpoint()
-          else raw.localCheckpoint()
-        } else raw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        if (ckptRound) Staging.stage(raw) // materializes + cuts lineage
+        else raw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // sum probe: one 1-row agg that also materializes the persist.
       // Fallback (non-integral ids): changed-row join against the previous
       // labels — limit(1) short-circuits, so on persist rounds `updated`
@@ -457,17 +440,15 @@ object Dedup {
           .limit(1)
           .count() == 0L
       if (ckptRound) {
-        // `updated` is fully materialized with no lineage: every older frame
-        // (including earlier checkpoints and this round's prop cache) is
-        // now safe to release
-        (prop :: labelsHandle :: pendingRelease).foreach(_.unpersist())
+        // `updated` is fully materialized with no lineage: every older
+        // persisted frame is now safe to release
+        (labelsHandle :: pendingRelease).foreach(_.unpersist())
         pendingRelease = Nil
       } else {
         // the 1-row agg above fully materialized the lazily-persisted
-        // `updated`, but its blocks (and the prop cache backing them) still
-        // back later lineage until the next eager checkpoint truncates it;
-        // defer the release as before
-        pendingRelease = prop :: labelsHandle :: pendingRelease
+        // `updated`, but its blocks still back later lineage until the
+        // next eager checkpoint truncates it; defer the release as before
+        pendingRelease = labelsHandle :: pendingRelease
       }
       labelsHandle = updated
       labels = updated
@@ -475,10 +456,6 @@ object Dedup {
       prevSum = newSum
       i += 1
     }
-    // persist-fallback (off mode) blocks release here; checkpoint blocks
-    // are RDD-level (not CacheManager) — the context cleaner reclaims them
-    // once the frame drops out of scope, and unpersist() is a no-op on them
-    edges.unpersist()
     labels.select(col("id"), col("label").as("cluster"))
   }
 
@@ -1000,11 +977,9 @@ object Dedup {
     *
     * Scale shape: benchmark suites are tiny next to a training corpus
     * (thousands of docs vs billions), so the benchmark's distinct shingle
-    * set is broadcast by default and the corpus streams through a map-side
-    * left probe — the corpus shingles are never shuffled; the only shuffle
-    * is the final partial+final aggregate keyed on doc id. For an oversized
-    * benchmark set `broadcastBenchmark = false` keeps the same plan as a
-    * shingle-keyed shuffled join — still linear, never corpus×corpus.
+    * set is broadcast and the corpus streams through a map-side left
+    * probe — the corpus shingles are never shuffled; the only shuffle is
+    * the final partial+final aggregate keyed on doc id.
     *
     * Returns (id, n_shingles, n_contaminated, contamination) — one row per
     * corpus doc with ≥ 1 shingle (a doc shorter than n tokens has no
@@ -1016,14 +991,13 @@ object Dedup {
       benchmark: DataFrame,
       idCol: String,
       textCol: String,
-      n: Int = 2,
-      broadcastBenchmark: Boolean = true
+      n: Int = 2
   ): DataFrame =
     contaminationAgainst(
       // one anonymous ad-hoc suite: the aggregate measure never reads
       // the label, and the ephemeral state is not meant to be merged
       contaminationState(benchmark, idCol, textCol, n, suite = "adhoc"),
-      corpus, idCol, textCol, n, broadcastBenchmark)
+      corpus, idCol, textCol, n)
 
   /** Frozen benchmark-side state for [[contaminationAgainst]] — the
     * decontamination member of the frozen-state family (README state
@@ -1113,8 +1087,7 @@ object Dedup {
       shard: DataFrame,
       idCol: String,
       textCol: String,
-      n: Int = 2,
-      broadcastState: Boolean = true
+      n: Int = 2
   ): DataFrame = {
     require(Seq("shingle", "shingle_n").forall(state.shingles.columns.contains),
       s"state must carry (shingle, shingle_n), got ${state.shingles.columns.toSeq}")
@@ -1128,8 +1101,7 @@ object Dedup {
     // duplicate shingles, and a non-distinct probe side would silently
     // double-count matches; on a well-formed state this is a no-op agg
     // over the sliver
-    val bs0 = state.shingles.select(col("shingle")).distinct()
-    val bs = (if (broadcastState) broadcast(bs0) else bs0)
+    val bs = broadcast(state.shingles.select(col("shingle")).distinct())
       .withColumn("__hit", lit(1L))
     // state side is distinct ⇒ the left join preserves shard-shingle
     // multiplicity exactly; count/sum then aggregate per doc map-side first
@@ -1170,8 +1142,7 @@ object Dedup {
       shard: DataFrame,
       idCol: String,
       textCol: String,
-      n: Int = 2,
-      broadcastState: Boolean = true
+      n: Int = 2
   ): DataFrame = {
     require(Seq("shingle", "shingle_n", "suite_id")
         .forall(state.shingles.columns.contains),
@@ -1191,8 +1162,7 @@ object Dedup {
     val cs = shingleSets(shard, idCol, textCol, n)
     // defensive re-distinct per (shingle, suite): a hand-unioned state
     // could carry duplicate rows that would double-count that suite's hits
-    val bs0 = state.shingles.select(col("shingle"), col("suite_id")).distinct()
-    val bs = if (broadcastState) broadcast(bs0) else bs0
+    val bs = broadcast(state.shingles.select(col("shingle"), col("suite_id")).distinct())
     val totals = cs.groupBy("id").agg(count(lit(1)).as("n_shingles"))
     val hits = cs.join(bs, Seq("shingle"))
       .groupBy("id", "suite_id")
@@ -1222,13 +1192,10 @@ object Dedup {
     * pass through in output shape, `n_removed = 0`), matching the
     * aggregate form's "empty suite ⇒ zero contamination".
     *
-    * Scale shape: the suite sliver broadcasts (`broadcastState = false`
-    * degrades to a shuffled semi join for an oversized,
-    * contract-violating state — same escape hatch as
-    * [[contaminationAgainst]]) and the shard's window explode streams
-    * through a map-side LEFT SEMI probe — no corpus-side shuffle at all
-    * before the (id)-keyed mask aggregate; the rebuild is the one
-    * `array_except` hash-set projection. Note the scrub matches
+    * Scale shape: the suite sliver broadcasts and the shard's window
+    * explode streams through a map-side LEFT SEMI probe — no corpus-side
+    * shuffle at all before the (id)-keyed mask aggregate; the rebuild is
+    * the one `array_except` hash-set projection. Note the scrub matches
     * on the RAW shingle strings the state already stores (no md5 —
     * the state is the fingerprint), so one persisted state serves flag,
     * attribution, and scrub.
@@ -1241,8 +1208,7 @@ object Dedup {
       state: ContaminationState,
       shard: DataFrame,
       idCol: String,
-      textCol: String,
-      broadcastState: Boolean = true
+      textCol: String
   ): DataFrame = {
     val t = shard
       .select(col(idCol).as("id"), TextOps.tokens(col(textCol)).as("toks"))
@@ -1258,8 +1224,7 @@ object Dedup {
             posexplode(TextOps.wordShingles(col("toks"), width))
               .as(Seq("pos", "win")))
           .select(col("id"), col("pos").cast("long").as("pos"), col("win"))
-        val bs0 = state.shingles.select(col("shingle").as("win")).distinct()
-        val bs = if (broadcastState) broadcast(bs0) else bs0
+        val bs = broadcast(state.shingles.select(col("shingle").as("win")).distinct())
         val masked = wins.join(bs, Seq("win"), "left_semi")
         rebuildFromMasked(t, masked, width)
     }
@@ -1286,8 +1251,7 @@ object Dedup {
       state: ContaminationState,
       shard: DataFrame,
       idCol: String,
-      textCol: String,
-      broadcastState: Boolean = true
+      textCol: String
   ): DataFrame = {
     require(state.shingles.columns.contains("suite_id"),
       "state carries no suite_id provenance (persisted by a pre-" +
@@ -1304,9 +1268,8 @@ object Dedup {
               TextOps.tokens(col(textCol)), width)).as(Seq("pos", "win")))
           .select(col("id"), col("pos").cast("long").as("pos"), col("win"))
         // defensive per-(window, suite) distinct, as in contaminationBySuite
-        val bs0 = state.shingles
-          .select(col("shingle").as("win"), col("suite_id")).distinct()
-        val bs = if (broadcastState) broadcast(bs0) else bs0
+        val bs = broadcast(state.shingles
+          .select(col("shingle").as("win"), col("suite_id")).distinct())
         wins.join(bs, Seq("win"))
           .select(col("id"), col("suite_id"),
             explode(sequence(col("pos"), col("pos") + lit(width - 1)))

@@ -44,7 +44,14 @@ object Similarity {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
+  /** Cosine similarity; NULL when either vector has zero norm (no
+    * direction, so no angle). A plain division would be 0/0: a
+    * DIVIDE_BY_ZERO error under the Spark 4 ANSI default and NULL without
+    * it. `try_divide` gives NULL in both modes, so every caller's
+    * three-valued `>=` filter or `desc` order treats a degenerate vector
+    * as a non-match the same way whatever the session's ANSI setting. */
+  def cosine(a: Column, b: Column): Column =
+    try_divide(dot(a, b), norm(a) * norm(b))
 
   /** Exact top-k cosine neighbors for each query id.
     *
@@ -701,19 +708,10 @@ object Similarity {
     val cand = asg
       .join(state.members.select(col("cell"), col("id").as("cid"),
         col("vec").as("cvec")), Seq("cell"))
-      // Zero-norm guard (r17; spec-pinned): cos against a zero-norm vector
-      // is 0/0 — a DIVIDE_BY_ZERO error under the Spark 4 ANSI default,
-      // and NaN (which sorts LARGEST, passing >= threshold and, under the
-      // pre-r16 rank window, even winning the argmax) without ANSI. A
-      // degenerate vector is not a match: the CaseWhen evaluates the
-      // division lazily, yields NULL on a zero norm product, and the
-      // three-valued >= filter drops it in both modes.
-      .withColumn("__np", norm(col("vec")) * norm(col("cvec")))
-      .withColumn("cos",
-        when(col("__np") === 0.0, lit(null).cast("double"))
-          .otherwise(dot(col("vec"), col("cvec")) / col("__np")))
+      // a zero-norm vector is not a match: its NULL cosine fails the
+      // three-valued >= filter (spec-pinned)
+      .withColumn("cos", cosine(col("vec"), col("cvec")))
       .filter(col("cos") >= threshold)
-      .drop("__np")
     // best match = argmin over (−cos, cid): one partial+final hash
     // aggregate instead of a rank window — same (cos desc, cid asc)
     // winner, no per-id sort, and map-side partials absorb the cell-join

@@ -53,16 +53,14 @@ object Dbreg {
       compressRatio: Option[Double] = None,
       compressNmax: Long = 1000000L,
       ssc: String = "full",
-      verbose: Boolean = false,
       weights: Option[String] = None,
-      probeMode: String = "exact",
       hdfeTol: Double = 1e-8,
       hdfeMaxSweeps: Int = 60
   ): DbregResult = {
     val f = Formula.parse(formula)
     val v = Vcov.parse(vcov)
-    fitParsed(f, df, v, strategy, compressRatio, compressNmax, ssc, verbose, weights,
-      probeMode, hdfeTol, hdfeMaxSweeps)
+    fitParsed(f, df, v, strategy, compressRatio, compressNmax, ssc, weights,
+      hdfeTol, hdfeMaxSweeps)
   }
 
   def fitParsed(
@@ -73,9 +71,7 @@ object Dbreg {
       compressRatio: Option[Double] = None,
       compressNmax: Long = 1000000L,
       ssc: String = "full",
-      verbose: Boolean = false,
       weights: Option[String] = None,
-      probeMode: String = "exact",
       hdfeTol: Double = 1e-8,
       hdfeMaxSweeps: Int = 60
   ): DbregResult = {
@@ -89,9 +85,7 @@ object Dbreg {
     }
     val chosen =
       if (weights.isDefined) "moments"
-      else chooseStrategy(strategy, f, base, compressRatio, compressNmax, verbose,
-        probeMode)
-    if (verbose) println(s"[dbreg] strategy: $chosen")
+      else chooseStrategy(strategy, f, base, compressRatio, compressNmax)
     chosen match {
       case "moments" => fitMoments(f, base, v, ssc, weights)
       case "demean" => fitDemean(f, base, v, ssc)
@@ -230,38 +224,24 @@ object Dbreg {
       f: Formula,
       base: DataFrame,
       compressRatio: Option[Double],
-      compressNmax: Long,
-      verbose: Boolean,
-      probeMode: String = "exact"
+      compressNmax: Long
   ): String = {
     val nFe = f.fe.length
     var chosen = strategy
     if (strategy == "auto") {
       val ratioThreshold = compressRatio.getOrElse(if (nFe == 1 || nFe == 2) 0.6 else 0.01)
       val keyCols = (f.xvars ++ f.fe).distinct
-      // one probe job: COUNT(*) + COUNT(DISTINCT key-tuple) together.
-      // probeMode="exact" matches the reference's probes (A8); "approx"
-      // swaps in approx_count_distinct (HLL, ~5% rsd at the Spark
-      // default) — the probe
-      // then needs no distinct shuffle, which is the right trade at data
-      // sizes where the probe would rival the fit itself. A ~5% error is
-      // irrelevant to a 0.6-vs-0.01 threshold decision.
-      val cellsAgg = probeMode match {
-        case "exact" => countDistinct(col(keyCols.head), keyCols.tail.map(col): _*)
-        case "approx" => approx_count_distinct(struct(keyCols.map(col): _*))
-        case other => throw new IllegalArgumentException(
-          s"probeMode must be exact|approx, got $other")
-      }
+      // one probe job: COUNT(*) + COUNT(DISTINCT key-tuple) together,
+      // exact as in the reference (dbreg.R:494-701)
       val probe = base
-        .agg(count(lit(1)).as("__n"), cellsAgg.as("__cells"))
+        .agg(count(lit(1)).as("__n"),
+          countDistinct(col(keyCols.head), keyCols.tail.map(col): _*).as("__cells"))
         .collect()(0)
       val nTotal = probe.getAs[Long]("__n")
       val nCells = probe.getAs[Long]("__cells")
       val ratio = nCells.toDouble / math.max(nTotal, 1L).toDouble
       val failRatio = ratio > ratioThreshold
       val failNmax = nCells > compressNmax
-      if (verbose)
-        println(f"[dbreg] auto: n=$nTotal%,d cells=$nCells%,d ratio=$ratio%.4f (threshold $ratioThreshold)")
 
       if (nFe == 0) {
         val anyContinuous = hasContinuousX(f, base, nTotal)

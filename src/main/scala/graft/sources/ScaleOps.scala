@@ -401,28 +401,6 @@ object ScaleOps {
       .agg(finals.head, finals.tail: _*)
   }
 
-  /** Salted join for skewed keys: replicate the small side `saltBuckets`×
-    * with an explicit salt, salt the big side pseudo-randomly, join on
-    * (key, salt) — the hot key's rows now shuffle to `saltBuckets` reducers
-    * instead of one. Salting matters exactly when the small side CANNOT be
-    * broadcast (too big, or bucketed inputs where AQE's skew split is
-    * unavailable); when it can, pass `broadcastSmall = true` and the salt
-    * merely rides along. Otherwise prefer AQE's skew-join handling. */
-  def saltedJoin(
-      big: DataFrame,
-      small: DataFrame,
-      key: String,
-      saltBuckets: Int,
-      broadcastSmall: Boolean = false
-  ): DataFrame = {
-    val saltedBig = big.withColumn(
-      "__salt", pmod(pmod(hash(col(key), monotonically_increasing_id()), lit(saltBuckets)) + lit(saltBuckets), lit(saltBuckets)))
-    val saltedSmall0 = small
-      .withColumn("__salt", explode(sequence(lit(0), lit(saltBuckets - 1))))
-    val saltedSmall = if (broadcastSmall) broadcast(saltedSmall0) else saltedSmall0
-    saltedBig.join(saltedSmall, Seq(key, "__salt")).drop("__salt")
-  }
-
   /** Read a partitioned dataset with pruning-friendly defaults. */
   def readPartitioned(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
@@ -623,7 +601,9 @@ object ScaleOps {
     * deterministic per-row hash, so a hot join key's rows land on
     * `buckets` reducers instead of one. The classic manual skew-join
     * mitigation for when AQE's skew splitting can't apply (e.g. the hot
-    * side feeds an aggregation that must stay co-partitioned).
+    * side feeds an aggregation that must stay co-partitioned, or bucketed
+    * inputs) and the small side is too big to broadcast; otherwise prefer
+    * a broadcast join or AQE's skew-join handling.
     *
     * Results are EXACTLY the plain inner equi-join's: every big-side row
     * meets every matching small-side row exactly once (its salt copy).

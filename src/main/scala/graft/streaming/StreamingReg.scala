@@ -254,9 +254,8 @@ object StreamingReg {
     *
     * The batch operator counts exactly; in a stream an exact per-window
     * distinct would hold a user SET per open window in the state store —
-    * unbounded in users, the one thing streaming state must never be. The
-    * sketch trade is the same one the A8 probe's `probeMode="approx"`
-    * makes: approx_count_distinct keeps one HLL (fixed bytes) per open
+    * unbounded in users, the one thing streaming state must never be.
+    * approx_count_distinct keeps one HLL (fixed bytes) per open
     * window, mergeable across micro-batches, ~5% relative standard
     * deviation at Spark's default rsd (pass a tighter rsd upstream if the
     * use sizes thresholds off it) — and EXACT at small cardinalities

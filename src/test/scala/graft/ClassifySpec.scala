@@ -58,15 +58,6 @@ class ClassifySpec extends SparkTestBase {
     assert(out(4L)._1 == "x" && math.abs(out(4L)._2 - lnHalf) < 1e-12)
   }
 
-  test("nbClassify: shuffle-model path matches the broadcast path") {
-    val b = Classify.nbClassify(corpus, "doc_id", "text", "lang")
-      .orderBy("id").collect().toSeq
-    val s = Classify.nbClassify(corpus, "doc_id", "text", "lang",
-        broadcastModel = false)
-      .orderBy("id").collect().toSeq
-    assert(b == s)
-  }
-
   test("nbClassify: resubstitution separates the synthetic langs") {
     // two clearly-separated vocabularies; every doc classified correctly
     val df = (1 to 20).map { i =>

@@ -645,13 +645,6 @@ class DbregSpec extends SparkTestBase {
     assert(unw.nobsOrig == w1.nobsOrig && math.abs(unw.rss - w1.rss) < 1e-6)
   }
 
-  test("approx probe mode reaches the same auto decision") {
-    val exact = Dbreg.fit("y ~ x1 | unit", df, strategy = "auto")
-    val approx = Dbreg.fit("y ~ x1 | unit", df, strategy = "auto", probeMode = "approx")
-    assert(exact.strategy == approx.strategy)
-    assert(math.abs(exact.coef("x1") - approx.coef("x1")) < 1e-12)
-  }
-
   test("weights refuse fixed effects and non-moments strategies") {
     val wdf = df.withColumn("w", org.apache.spark.sql.functions.lit(2.0))
     val e1 = intercept[IllegalArgumentException] {

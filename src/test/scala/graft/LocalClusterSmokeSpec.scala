@@ -12,8 +12,8 @@ import graft.reg.Dbreg
   * real broadcast transport, localCheckpoint always available. This
   * suite runs a battery slice on `local-cluster[2,4,2048]` — two REAL
   * worker processes each launching an executor JVM — with a RELIABLE
-  * checkpoint dir configured, so the `checkpointMode=auto→reliable`
-  * staging path, broadcast joins across process boundaries, and the
+  * checkpoint dir configured, so the dir→reliable `Staging.stage`
+  * path, broadcast joins across process boundaries, and the
   * state-store-backed streaming ops all execute the way a real cluster
   * would.
   *

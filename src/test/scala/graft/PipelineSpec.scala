@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.CheckpointDirTestHook
 import org.apache.spark.sql.functions._
 import graft.pipeline.{Dedup, Multimodal, Similarity, TextOps}
 
@@ -225,10 +226,9 @@ class PipelineSpec extends SparkTestBase {
         .filter(p => java.nio.file.Files.isRegularFile(p)).count()
       assert(wrote > 0, "expected reliable checkpoint files on disk")
     } finally {
-      // restore: Spark has no unset; point the shared session back at the
-      // prior dir if there was one, else at a scratch dir other tests ignore
-      spark.sparkContext.setCheckpointDir(had.getOrElse(
-        java.nio.file.Files.createTempDirectory("graft-ckpt-rest").toString))
+      // restore the prior dir exactly: a dir left set would switch every
+      // later Staging.stage in the shared JVM onto reliable checkpoints
+      CheckpointDirTestHook.restore(spark.sparkContext, had)
     }
   }
 
@@ -545,22 +545,19 @@ class PipelineSpec extends SparkTestBase {
     assert(fp.values.toSet.size > 1)
   }
 
-  test("contamination: known bigram overlap, broadcast and shuffled paths agree") {
+  test("contamination: known bigram overlap") {
     // corpus doc 1 "a b c d" → bigrams {ab, bc, cd}; benchmark "b c d e" →
     // {bc, cd, de}: contamination 2/3. Doc 2 shares nothing. Doc 3 is an
     // exact benchmark copy → 1.0.
     val corpus = Seq(
       (1L, "a b c d"), (2L, "x y z w"), (3L, "b c d e")).toDF("doc_id", "text")
     val bench = Seq((100L, "b c d e")).toDF("doc_id", "text")
-    def run(bcast: Boolean) =
-      Dedup.contamination(corpus, bench, "doc_id", "text", n = 2, broadcastBenchmark = bcast)
-        .orderBy("id")
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-        .toSeq
-    val got = run(bcast = true)
+    val got = Dedup.contamination(corpus, bench, "doc_id", "text", n = 2)
+      .orderBy("id")
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+      .toSeq
     assert(got == Seq((1L, 3L, 2L, 2.0 / 3.0), (2L, 3L, 0L, 0.0), (3L, 3L, 3L, 1.0)))
-    assert(run(bcast = false) == got)
   }
 
   test("repetition stats: hand-computed ratios, degenerate docs get nulls") {
@@ -2468,13 +2465,6 @@ class PipelineSpec extends SparkTestBase {
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(tot(1L) == 7L)
     assert(rep((1L, "sa")) + rep((1L, "sb")) > tot(1L))
-    // non-broadcast escape hatch: identical results on both operators
-    assert(repOf(Dedup.decontaminateBySuite(st, shard, "doc_id", "text",
-      broadcastState = false)) == rep)
-    val nbTot = Dedup.decontaminate(st, shard, "doc_id", "text",
-        broadcastState = false)
-      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-    assert(nbTot == tot)
     // empty state: nothing was cut from anything — zero rows
     val empty = Dedup.contaminationState(shard.filter(lit(false)),
       "doc_id", "text", n = 5, suite = "e")

@@ -128,7 +128,8 @@ class ScaleOpsSpec extends SparkTestBase {
     val li = sf("sf0.001", "lineitem").select("l_orderkey", "l_quantity")
     val od = sf("sf0.001", "orders").select(col("o_orderkey").as("l_orderkey"), col("o_totalprice"))
     val plain = li.join(od, "l_orderkey").count()
-    val salted = ScaleOps.saltedJoin(li, od, "l_orderkey", 4).count()
+    val salted = ScaleOps.saltedJoin(li, "l_orderkey", od, "l_orderkey",
+      saltOf = xxhash64(li.columns.map(col): _*), buckets = 4).count()
     assert(plain == salted)
   }
 
@@ -136,7 +137,7 @@ class ScaleOpsSpec extends SparkTestBase {
     // planted skew: 90% of the big side shares one key. With broadcast and
     // AQE's skew split disabled (the regime saltedJoin exists for — e.g.
     // bucketed inputs), the unsalted shuffle join lands the hot key on ONE
-    // reducer; salting spreads it over saltBuckets reducers. Assert on the
+    // reducer; salting spreads it over `buckets` reducers. Assert on the
     // physical partition sizes of the joined output, not just the values.
     val prevB = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     val prevA = spark.conf.get("spark.sql.adaptive.enabled")
@@ -157,7 +158,8 @@ class ScaleOpsSpec extends SparkTestBase {
         df.rdd.mapPartitions(it => Iterator(it.size)).collect()
 
       val unsalted = big.join(small, "key")
-      val salted = ScaleOps.saltedJoin(big, small, "key", saltBuckets = 16)
+      val salted = ScaleOps.saltedJoin(big, "key", small, "key",
+        saltOf = xxhash64(col("v")), buckets = 16)
       // same join result
       assert(unsalted.count() == salted.count())
       val su = unsalted.agg(sum("v")).collect()(0).getLong(0)
