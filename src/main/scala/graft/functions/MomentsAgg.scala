@@ -37,11 +37,16 @@ case class MomentsAgg(
 
   override def createAggregationBuffer(): Array[Double] = new Array[Double](bufLen)
 
+  // built once per instance (each task binds its own copy), reused per row
+  @transient private lazy val inputs = children.toArray
+  @transient private lazy val scratch = new Array[Double](children.length)
+
   override def update(buf: Array[Double], input: InternalRow): Array[Double] = {
-    val vals = new Array[Double](children.length)
+    val in = inputs
+    val vals = scratch
     var i = 0
-    while (i < children.length) {
-      val v = children(i).eval(input)
+    while (i < in.length) {
+      val v = in(i).eval(input)
       if (v == null) return buf // skip incomplete rows
       vals(i) = v.asInstanceOf[Double]
       i += 1
@@ -60,10 +65,10 @@ case class MomentsAgg(
     var k = 3 + 2 * p
     a = 0
     while (a < p) {
-      val xa = vals(2 + a)
+      val wxa = w * vals(2 + a)
       var b = a
       while (b < p) {
-        buf(k) += w * xa * vals(2 + b)
+        buf(k) += wxa * vals(2 + b)
         b += 1; k += 1
       }
       a += 1

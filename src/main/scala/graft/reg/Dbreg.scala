@@ -38,7 +38,9 @@ import graft.model.ModelMatrix.MMCol
   */
 object Dbreg {
 
-  val MaxDesignCols = 120 // guard: p(p+1)/2 agg columns must stay codegen-friendly
+  // widest dense design: a wider compress fit (terms + FE dummies) takes
+  // the driver-side sparse WLS over its cells; Glm's dense IRLS refuses
+  val MaxDesignCols = 120
 
   /** fitHdfe: projection-path steps between lineage stagings (inline-tier
     * FEs are pure literal-lookup projections — cheap to re-derive from
@@ -771,7 +773,8 @@ object Dbreg {
       intercept = true)
     val feCols = ModelFrame.feDummyCols(f.fe, levels)
     if (termCols.size + feCols.size > MaxDesignCols) {
-      // high-cardinality FE: p(p+1)/2 agg columns would swamp codegen —
+      // high-cardinality FE: a dense triangle of p(p+1)/2 mostly-zero
+      // dummy products per cell row is the wrong shape for sparse dummies —
       // switch to the driver-side sparse WLS over collected cells (the
       // reference's own client-side path, bounded by compressNmax)
       val res = CompressDriver.fit(f, base, comp, cellKeys, termCols, feCols, v, ssc,

@@ -24,30 +24,25 @@ private[graft] final case class MomentsResult(
   * HC1 / CR1 sandwich meats. This is the only code that names a triangle
   * column or reads one back.
   *
-  *  - aggregates: [[rawAggs]] (n, Σy, Σy², Σx, Σxy, Σxxᵀ; global or keyed
-  *    via [[aggregate]], within-FE via [[keyedWithin]]), [[normalAggs]]
-  *    (the weighted XᵀWX / XᵀWy pair alone) and [[triangle]]
-  *    (Σ scale·xᵢ·xⱼ);
-  *  - readers: [[readRaw]], [[readNormal]], [[readTriangle]] and [[double]]
-  *    turn one aggregate row into symmetric matrices and vectors (null, the
-  *    sum over no rows, reads as 0). They touch nothing but the row, so
-  *    they are safe inside an executor-side `flatMap` over keyed rows;
-  *  - meats: [[hc1Meat]] and [[cr1Meat]], one query each.
+  *  - global aggregates ([[compute]], [[triangle]], the meats [[hc1Meat]]
+  *    and [[cr1Meat]], one query each) carry every triangle as ONE packed
+  *    [[graft.functions.MomentsAgg]] buffer at any p: Spark plans no
+  *    whole-stage codegen above `spark.sql.codegen.maxFields` (100)
+  *    fields, which a p(p+1)/2 + 2p + 3 `sum` spelling passes at p = 12;
+  *  - keyed aggregates ([[rawAggs]] per key via [[aggregate]], within-FE
+  *    via [[keyedWithin]], [[normalAggs]], [[keyedTriangle]]) stay one
+  *    `sum` column per entry: an object aggregate falls back to sort above
+  *    128 keys a task;
+  *  - readers ([[readRaw]], [[readNormal]], [[readTriangle]],
+  *    [[readKeyedTriangle]], [[double]]) turn one aggregate row into
+  *    symmetric matrices and vectors; a sum over no rows (null) and a
+  *    packed buffer over no rows both read as 0. They touch nothing but
+  *    the row, so they are safe in an executor-side `flatMap`.
   *
-  * Up to [[FusedThreshold]] regressors the triangle is p(p+1)/2 + 2p + 3
-  * `sum` columns in ONE `df.agg` — Catalyst executes it as a partial+final
-  * hash aggregate with whole-stage codegen, so the cost is one scan
-  * regardless of p. Wider designs switch to the fused one-buffer aggregate
-  * (graft.functions.MomentsAgg). [[compute]] casts all inputs to double
-  * before multiplying (mirrors the reference's CAST AS FLOAT,
-  * dbreg.R:958-962).
+  * [[compute]] casts all inputs to double before multiplying (mirrors the
+  * reference's CAST AS FLOAT, dbreg.R:958-962).
   */
 private[graft] object MomentsKernel {
-
-  /** Above this many regressors the p(p+1)/2 `sum` columns strain codegen;
-    * switch to the fused TypedImperativeAggregate (graft.functions.MomentsAgg)
-    * which carries the whole triangle in one buffer per partition. */
-  val FusedThreshold = 24
 
   /** Column names of one raw-moments aggregate. */
   final case class Layout(
@@ -106,25 +101,12 @@ private[graft] object MomentsKernel {
   private def tagged(tag: String): (Int, Int) => String =
     (i, j) => s"_${tag}_${i}_$j"
 
-  /** n, Σy, Σy², then (Σxᵢ, Σxᵢy) per regressor, then Σxᵢxⱼ (i ≤ j); with
-    * a weight every term is `term·w` and n is Σw. */
-  def rawAggs(
-      y: Column,
-      xs: Seq[Column],
-      w: Option[Column] = None,
-      names: Layout = Keyed
-  ): Seq[Column] = {
-    def ww(c: Column): Column = w.map(c * _).getOrElse(c)
-    val p = xs.length
-    Seq(
-      w.map(sum(_)).getOrElse(count(lit(1)).cast("double")).as(names.n),
-      sum(ww(y)).as(names.sy),
-      sum(ww(y * y)).as(names.syy)) ++
-      (0 until p).flatMap(i => Seq(
-        sum(ww(xs(i))).as(names.sx(i)),
-        sum(ww(xs(i) * y)).as(names.sxy(i)))) ++
-      upper(names.sxx, p)((i, j) => ww(xs(i) * xs(j)))
-  }
+  /** n, Σy, Σy², then (Σxᵢ, Σxᵢy) per regressor, then Σxᵢxⱼ (i ≤ j). */
+  def rawAggs(y: Column, xs: Seq[Column], names: Layout = Keyed): Seq[Column] =
+    Seq(count(lit(1)).cast("double").as(names.n), sum(y).as(names.sy),
+      sum(y * y).as(names.syy)) ++
+      xs.indices.flatMap(i => Seq(sum(xs(i)).as(names.sx(i)), sum(xs(i) * y).as(names.sxy(i)))) ++
+      upper(names.sxx, xs.length)((i, j) => xs(i) * xs(j))
 
   /** The weighted normal equations alone: Σxᵢy·w, then Σxᵢxⱼ·w. */
   def normalAggs(y: Column, xs: Seq[Column], w: Column): Seq[Column] =
@@ -174,9 +156,14 @@ private[graft] object MomentsKernel {
     cells.groupBy(col(key)).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Σ scale·xᵢ·xⱼ (i ≤ j) under `tag`, evaluated as (scale·xᵢ)·xⱼ;
-    * without a scale Σ xᵢ·xⱼ. */
-  def triangle(tag: String, xs: Seq[Column], scale: Option[Column] = None)
+  /** Σ scale·xᵢ·xⱼ (i ≤ j) as the packed column `_tag` of a global
+    * aggregate, evaluated as (scale·xᵢ)·xⱼ; without a scale Σ xᵢ·xⱼ. Its
+    * Σscale entry reads as [[packed]]'s `n`. */
+  def triangle(tag: String, xs: Seq[Column], scale: Option[Column] = None): Column =
+    graft.functions.MomentsAgg(scale.getOrElse(lit(1.0)), lit(0.0), xs).as(s"_$tag")
+
+  /** [[triangle]] for a keyed aggregate: one `sum` column per entry. */
+  def keyedTriangle(tag: String, xs: Seq[Column], scale: Option[Column] = None)
       : Seq[Column] =
     upper(tagged(tag), xs.length)((i, j) =>
       scale.map(_ * xs(i)).getOrElse(xs(i)) * xs(j))
@@ -206,12 +193,15 @@ private[graft] object MomentsKernel {
       DenseVector.tabulate(p)(i => double(row, Keyed.sxy(i))))
 
   def readTriangle(row: Row, tag: String, p: Int): DenseMatrix[Double] =
+    packed(row, s"_$tag", p).sxx
+
+  def readKeyedTriangle(row: Row, tag: String, p: Int): DenseMatrix[Double] =
     readUpper(row, tagged(tag), p)
 
-  /** The packed [[graft.functions.MomentsAgg]] buffer: n, Σy, Σy², Σx, Σxy,
-    * then the Σxxᵀ upper triangle row-major. */
-  private def fromPacked(arr: scala.collection.Seq[Double], p: Int): RawMoments = {
-    val a = arr.toArray
+  /** The packed [[graft.functions.MomentsAgg]] column `name`: n, Σy, Σy²,
+    * Σx, Σxy, then the Σxxᵀ upper triangle row-major. */
+  private def packed(row: Row, name: String, p: Int): RawMoments = {
+    val a = row.getAs[scala.collection.Seq[Double]](name).toArray
     RawMoments(a(0), a(1), a(2),
       DenseVector(a.slice(3, 3 + p)), DenseVector(a.slice(3 + p, 3 + 2 * p)),
       LinAlg.symmetricFromUpper(p, a.drop(3 + 2 * p)))
@@ -220,15 +210,18 @@ private[graft] object MomentsKernel {
   // ---------------------------------------------------------------- meats
 
   /** HC1 meat Σ scale·xxᵀ over `df` (scale = e² for OLS, rss_g for
-    * compress cells): one aggregate, one row. */
+    * compress cells): one aggregate, one row. The scale is a projected
+    * (codegen'd) column, so the buffer's per-row `eval` reads it bound. */
   def hc1Meat(df: DataFrame, scale: Column, xs: Seq[Column]): DenseMatrix[Double] = {
-    val aggs = triangle("m", xs, Some(scale))
-    readTriangle(df.agg(aggs.head, aggs.tail: _*).collect()(0), "m", xs.length)
+    val row = df.withColumn("_scale", scale)
+      .agg(triangle("m", xs, Some(col("_scale")))).collect()(0)
+    readTriangle(row, "m", xs.length)
   }
 
   /** CR1 meat: per-cluster scores s_g = Σ_{i∈g} score·xᵢ (a keyed aggregate
     * with map-side combine), then the cluster count G and Σ_g s_g s_gᵀ
-    * from ONE aggregate over the score table — one query, nothing cached. */
+    * from ONE packed aggregate over the score table — one query, nothing
+    * cached. */
   def cr1Meat(
       df: DataFrame,
       cluster: Column,
@@ -238,10 +231,9 @@ private[graft] object MomentsKernel {
     val sNames = xs.indices.map(i => s"_s$i")
     val sAggs = xs.indices.map(i => sum(score * xs(i)).as(sNames(i)))
     val scores = df.groupBy(cluster).agg(sAggs.head, sAggs.tail: _*)
-    val row = scores
-      .agg(count(lit(1)).as("_G"), triangle("m", sNames.map(col)): _*)
-      .collect()(0)
-    (row.getAs[Long]("_G"), readTriangle(row, "m", xs.length))
+    val m = packed(scores.agg(triangle("m", sNames.map(col))).collect()(0), "_m",
+      xs.length)
+    (m.n.toLong, m.sxx)
   }
 
   // ---------------------------------------------------------- global solve
@@ -252,24 +244,14 @@ private[graft] object MomentsKernel {
       xNames: Seq[String],
       intercept: Boolean,
       weightName: Option[String] = None,
-      extraAggs: Seq[(String, Column)] = Nil,
-      forceFused: Option[Boolean] = None
+      extraAggs: Seq[(String, Column)] = Nil
   ): MomentsResult = {
-    val p = xNames.length
-    val fused = forceFused.getOrElse(p > FusedThreshold)
-    val w = weightName.map(c => col(c).cast("double"))
-    val moments =
-      if (fused)
-        Seq(graft.functions.MomentsAgg(w.getOrElse(lit(1.0)), col(yName),
-          xNames.map(col)).as("_m"))
-      else
-        rawAggs(col(yName).cast("double"), xNames.map(col(_).cast("double")), w)
-    val aggs = (count(lit(1)).as("_nrows") +: moments) ++
+    val w = weightName.map(col).getOrElse(lit(1.0))
+    val aggs = Seq(count(lit(1)).as("_nrows"),
+      graft.functions.MomentsAgg(w, col(yName), xNames.map(col)).as("_m")) ++
       extraAggs.map { case (nm, c) => c.as(nm) }
     val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-    val raw =
-      if (fused) fromPacked(row.getAs[scala.collection.Seq[Double]]("_m"), p)
-      else readRaw(row, p)
+    val raw = packed(row, "_m", xNames.length)
     val (xtx, xty) = if (intercept) raw.withIntercept else (raw.sxx, raw.sxy)
     val extras = extraAggs.map { case (nm, _) => nm -> double(row, nm) }.toMap
     MomentsResult(xtx, xty, row.getAs[Long]("_nrows"), raw.n, raw.sy, raw.syy, extras)

@@ -171,9 +171,11 @@ object Qreg {
     val pin = when(res >= 0, lit(tau) * res).otherwise(lit(tau - 1.0) * res)
     val inside = when(abs(res) <= lit(h), 1.0).otherwise(0.0)
     val xs = keptX.map(col(_).cast("double"))
-    val aggs = sum(pin).as("_pin") +:
-      (MomentsKernel.triangle("a", xs, Some(inside)) ++ MomentsKernel.triangle("b", xs))
-    val row = d.df.agg(aggs.head, aggs.tail: _*).collect()(0)
+    // loss and weight in a projection below the packed aggregate
+    val row = d.df.withColumns(Map("_pinr" -> pin, "_inside" -> inside))
+      .agg(sum(col("_pinr")).as("_pin"),
+        MomentsKernel.triangle("a", xs, Some(col("_inside"))), MomentsKernel.triangle("b", xs))
+      .collect()(0)
     val aM = MomentsKernel.readTriangle(row, "a", p) / (2.0 * h)
     val bM = MomentsKernel.readTriangle(row, "b", p) * (tau * (1.0 - tau))
     val aSolve = LinAlg.solveDetecting(aM, DenseVector.zeros[Double](p))
@@ -289,7 +291,8 @@ object Qreg {
       first(col("_h")).as("_hh"),
       first(col("_kept")).as("_keptg")) ++
       (0 until p).map(i => first(element_at(col("_b"), i + 1)).as(s"_beta$i")) ++
-      MomentsKernel.triangle("a", xs, Some(inside)) ++ MomentsKernel.triangle("b", xs)
+      MomentsKernel.keyedTriangle("a", xs, Some(inside)) ++
+      MomentsKernel.keyedTriangle("b", xs)
     val names = displayNames
     val tauL = tau
     src.groupBy(col("_g")).agg(aggs.head, aggs.tail: _*).flatMap { row =>
@@ -304,8 +307,8 @@ object Qreg {
       // every term's SE)
       val kept: Array[Int] = row.getAs[scala.collection.Seq[Int]]("_keptg").toArray
       val pk = kept.length
-      val a = MomentsKernel.readTriangle(row, "a", p)
-      val b = MomentsKernel.readTriangle(row, "b", p)
+      val a = MomentsKernel.readKeyedTriangle(row, "a", p)
+      val b = MomentsKernel.readKeyedTriangle(row, "b", p)
       val aM = DenseMatrix.tabulate(pk, pk)((i, j) => a(kept(i), kept(j)) / (2.0 * h))
       val bM = DenseMatrix.tabulate(pk, pk)((i, j) =>
         tauL * (1.0 - tauL) * b(kept(i), kept(j)))

@@ -150,9 +150,11 @@ object Rlm {
     val psi = when(inside, res).otherwise(lit(band) * signum(res))
     val bW = psi * psi
     val xs = keptX.map(col(_).cast("double"))
-    val aggs = sum(aW).as("_in") +:
-      (MomentsKernel.triangle("a", xs, Some(aW)) ++ MomentsKernel.triangle("b", xs, Some(bW)))
-    val row = d.df.agg(aggs.head, aggs.tail: _*).collect()(0)
+    // both weights in a projection below the packed aggregate
+    val row = d.df.withColumns(Map("_aw" -> aW, "_bw" -> bW))
+      .agg(sum(col("_aw")).as("_in"), MomentsKernel.triangle("a", xs, Some(col("_aw"))),
+        MomentsKernel.triangle("b", xs, Some(col("_bw"))))
+      .collect()(0)
     val aM = MomentsKernel.readTriangle(row, "a", p)
     val bM = MomentsKernel.readTriangle(row, "b", p)
     val aSolve = LinAlg.solveDetecting(aM, DenseVector.zeros[Double](p))

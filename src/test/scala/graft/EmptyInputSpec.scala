@@ -119,6 +119,16 @@ class EmptyInputSpec extends SparkTestBase {
         maxIter = 3, tol = 0.0)
     }
     assert(g.getMessage.toLowerCase.contains("no rows"), g.getMessage)
+    // a packed moment buffer over no rows reads as zeros (the sum spelling
+    // read NULL): the refusal must not depend on which
+    val c = intercept[IllegalArgumentException] {
+      Dbreg.fit("y ~ x", emptyPanel, vcov = "hc1", strategy = "compress")
+    }
+    assert(c.getMessage.toLowerCase.contains("no rows"), c.getMessage)
+    val r = intercept[IllegalArgumentException] {
+      graft.reg.Rlm.fit("y ~ x", emptyPanel)
+    }
+    assert(r.getMessage.toLowerCase.matches(".*(no rows|n > p).*"), r.getMessage)
     val b = intercept[IllegalArgumentException] {
       Dbbinsreg.fit("y ~ x", emptyPanel, nbins = 4)
     }

@@ -488,8 +488,8 @@ class GlmSpec extends SparkTestBase {
   }
 
   test("wide design (p > 24) routes through the fused moments aggregate") {
-    // 26 regressors + intercept > MomentsKernel.FusedThreshold — the IRLS
-    // weight column rides through MomentsAgg's one-buffer triangle
+    // 26 regressors + intercept: the IRLS weight column rides through
+    // MomentsAgg's one-buffer triangle, well past the 100-field codegen cap
     val rng = new scala.util.Random(5)
     val p = 26
     val rows = (0 until 400).map { _ =>

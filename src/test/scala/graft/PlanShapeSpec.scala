@@ -3,11 +3,12 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Attribute, IsNotNull}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.BinaryType
 
-import graft.PlanStats.{capturedQueries, planStats, shuffleKeys}
+import graft.PlanStats.{capturedQueries, interpretedAggregates, planStats, shuffleKeys}
+import graft.functions.{FreqItemsAgg, MomentsAgg}
 import graft.pipeline.{Dedup, Similarity, TextOps}
 import graft.binsreg.Dbbinsreg
 import graft.reg.{Dbreg, ElasticNet, Glm, Qreg, Ridge, Rlm}
@@ -168,6 +169,49 @@ class PlanShapeSpec extends SparkTestBase {
     assert(scoreQueries.size == 1, run.map(_._1))
     run.foreach { case (fn, qe) =>
       assert(planStats(qe.executedPlan).cachedScans == 0, s"$fn: ${qe.executedPlan}")
+    }
+  }
+
+  test("wide moment triangles and meats run as one packed buffer, never an interpreted sum aggregate") {
+    // p(p+1)/2 + 2p + 3 `sum` columns pass spark.sql.codegen.maxFields
+    // (100) at p = 12 and then plan as an interpreted HashAggregate; every
+    // global triangle is one MomentsAgg buffer instead. The only other
+    // object aggregate is the FreqItemsAgg levels probe.
+    val rows = (0 until 960).map { i =>
+      val x1 = (i * 37 % 81) / 4.0
+      val x2 = (i / 7 % 6 + 1).toDouble
+      val month = i % 12 + 1
+      val vendor = if (i % 5 < 2) "CMT" else "VTS"
+      val y = 1.0 + 0.5 * x1 - 0.3 * x2 + (month % 3) * 0.4 +
+        (if (vendor == "VTS") 0.7 else 0.0) + (i * 7919 % 101) / 100.0
+      (y, x1, x2, month, vendor)
+    }
+    val taxi = rows.toDF("y", "x1", "x2", "month", "vendor")
+    val wide = taxi.select(col("y") +: (1 to 20).map(k =>
+      (pow(col("x1") + k, 1.0 + k / 10.0) + col("x2") * k).as(s"w$k")): _*)
+    val fits: Seq[(String, () => Any)] = Seq(
+      "compress hc1, 15 design columns" -> (() => Dbreg.fit(
+        "y ~ x1 + x2 | month + vendor", taxi, vcov = "hc1", strategy = "compress")),
+      "binsreg, 20 bins" -> (() => Dbbinsreg.fit("y ~ x1", taxi, nbins = 20)),
+      "moments, p = 20" -> (() => Dbreg.fit(
+        "y ~ " + (1 to 20).map(k => s"w$k").mkString(" + "), wide, strategy = "moments")))
+    fits.foreach { case (name, fit) =>
+      val run = capturedQueries(spark) { fit(); () }
+      val plans = run.map(_._2.executedPlan)
+      def objectAggsOf(fn: Any => Boolean) = plans.flatMap(p => PlanStats.collect(p) {
+        case a: ObjectHashAggregateExec
+            if a.aggregateExpressions.exists(e => fn(e.aggregateFunction)) => a
+      })
+      assert(objectAggsOf(_.isInstanceOf[MomentsAgg]).nonEmpty, s"$name: no packed triangle")
+      plans.foreach { p =>
+        interpretedAggregates(p).foreach { a =>
+          val fns = a.aggregateExpressions.map(_.aggregateFunction)
+          assert(a.isInstanceOf[ObjectHashAggregateExec] &&
+            fns.exists(f => f.isInstanceOf[MomentsAgg] || f.isInstanceOf[FreqItemsAgg]),
+            s"$name: interpreted ${a.nodeName} of ${a.output.size} columns: " +
+              fns.take(4).mkString(", "))
+        }
+      }
     }
   }
 

@@ -4,9 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, HigherOrderFunction}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, InputAdapter, QueryExecution,
+  SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, HashAggregateExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.joins.BaseJoinExec
@@ -65,6 +66,20 @@ object PlanStats extends AdaptiveSparkPlanHelper {
     * ReadSchema, its `dataFilters` the filters pushed to the reader. */
   def fileScans(plan: SparkPlan): Seq[FileSourceScanExec] =
     collect(plan) { case s: FileSourceScanExec => s }
+
+  /** Every aggregate operator of `plan` that runs outside whole-stage
+    * codegen: those not inside a `WholeStageCodegenExec` stage (a plan
+    * wider than `spark.sql.codegen.maxFields` never is). */
+  def interpretedAggregates(plan: SparkPlan): Seq[BaseAggregateExec] = {
+    def stage(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil // the next stage's input
+      case _ => p +: p.children.flatMap(stage)
+    }
+    val compiled = collect(plan) { case w: WholeStageCodegenExec => w }
+      .flatMap(w => stage(w.child))
+    collect(plan) { case a: BaseAggregateExec => a }
+      .filterNot(a => compiled.exists(_ eq a))
+  }
 
   /** The partitioning key expressions of every shuffle in `plan`. */
   def shuffleKeys(plan: SparkPlan): Seq[Seq[Expression]] =
