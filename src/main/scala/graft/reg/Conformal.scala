@@ -134,7 +134,11 @@ object Conformal {
     * `eps` is the check-loss smoothing at the data scale. The CQR score
     * can be negative, so the exact order statistic takes the
     * (n_cal+1−k)-th from the top exactly as the symmetric path — signs
-    * flow through untouched. */
+    * flow through untouched.
+    *
+    * Cost: one OLS init shared by both τ fits, `maxIter` + 1 scans per
+    * τ, the calibration count and the order statistic (pinned in
+    * PlanShapeSpec). */
   def cqr(
       formula: String,
       df: DataFrame,
@@ -162,7 +166,7 @@ object Conformal {
     // ONE shared OLS init feeds both quantile chains (β₀/σ̂₀ are
     // τ-independent — the generated cqrSql oracle shares its f0 CTE the
     // same way), saving a full train-split moments scan
-    val qInit = Qreg.prepareInit(formula, train)
+    val qInit = Irls.init(formula, train, "qreg")
     val lo = Qreg.fitFromInit(qInit, tau = alpha / 2.0,
       maxIter = maxIter, tol = 0.0, eps = eps, bandwidth = None)
     val hi = Qreg.fitFromInit(qInit, tau = 1.0 - alpha / 2.0,

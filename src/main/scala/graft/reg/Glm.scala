@@ -29,10 +29,7 @@ final case class GlmResult(
     @transient scoreFn: DataFrame => Column = null,
     @transient termCols: Seq[Column] = null,
     @transient offsetCol: Option[Column] = None
-) {
-  def terms: Seq[String] = coeftable.map(_.term)
-  def coef: Map[String, Double] = coeftable.map(r => r.term -> r.estimate).toMap
-  def se: Map[String, Double] = coeftable.map(r => r.term -> r.stdError).toMap
+) extends CoefTable {
 
   /** McFadden pseudo-R²: 1 − deviance/null-deviance. */
   def pseudoR2: Double = 1.0 - deviance / nullDeviance
@@ -85,11 +82,6 @@ final case class GlmResult(
       .withColumn("mu_upr", Glm.linkInv(family, col("eta") + lit(crit) * col("se_eta")))
   }
 
-  def toDF(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    coeftable.toDF("term", "estimate", "std_error", "statistic", "p_value")
-  }
-
   /** broom-style alias (API symmetry with [[DbregResult.tidy]]). */
   def tidy(spark: SparkSession): DataFrame = toDF(spark)
 
@@ -132,15 +124,23 @@ final case class GlmResult(
   * cells and runs every IRLS iteration over the (tiny) cell table —
   * "logistic regression at 100 TB" becomes one shuffle plus driver-speed
   * iterations when the design is low-cardinality (the quality-classifier /
-  * A-B-test shape).
+  * A-B-test shape). That identity holds only while the per-row and
+  * per-cell formulas agree, so each family is defined once (`Family`) and
+  * [[fit]] and [[fitGrouped]], rows and cells, all read that definition.
   *
-  * Families: `binomial` (logit link), `poisson` (log link), `gaussian`
-  * (identity; equivalent to OLS, included for uniformity). Fixed effects
+  * Families: `binomial` (logit link), `poisson`, `gamma` and `negbin` (log
+  * link), `gaussian` (identity; equivalent to OLS, included for
+  * uniformity). Fixed effects
   * are NOT supported (no `| fe` term): absorb small-cardinality factors as
   * RHS dummies instead — the incidental-parameters problem makes demean
   * tricks invalid for nonlinear models, so an honest refusal beats a wrong
   * answer (mirrors the reference's multiway-cluster refusal,
   * dbreg.R:330-339).
+  *
+  * Cost: the `auto` probe (one scan), then `maxIter` passes with `tol = 0`
+  * plus one for the deviance at the reported β (the cell build rides the
+  * first pass under compress), plus one meat scan for a sandwich vcov
+  * (pinned in PlanShapeSpec).
   */
 object Glm {
 
@@ -185,11 +185,131 @@ object Glm {
     * itself needs the profile likelihood and stays out of scope). */
   val Families: Set[String] = Set("binomial", "poisson", "gaussian", "gamma", "negbin")
 
+  /** One family, defined once for [[fit]] and [[fitGrouped]]. Both iterate
+    * over units — rows (irls) or distinct-x cells (compress) — carrying the
+    * prior weight `_wt`, the weighted mean response `_yb` and the summed
+    * cell stat `_ylogy`. Given μ, every deviance term is linear in ȳ except
+    * the cell stat, which carries the family's one non-linear part per
+    * unit; so the per-row and per-cell formulas are the same formulas and
+    * compressed iterates and deviances are exact (Wong et al. 2021). */
+  private final case class Family(name: String, theta: Double) {
+    private def th: Column = lit(theta)
+
+    /** The cell stat of a row with response y and prior weight w: w·y·ln y
+      * (poisson), w·ln y (gamma), w·[y·ln y − (y+θ)·ln(y+θ)] (negbin),
+      * w·y² (gaussian), 0 (binomial). A response outside gamma's or
+      * negbin's support makes it NaN, which survives every sum, so the
+      * first pass detects it without a separate validation scan (the
+      * explicit negbin branch matters: Spark's ln yields NULL below zero
+      * and sum would silently skip it). */
+    def cellStat(y: Column, w: Column): Column = name match {
+      case "poisson" => when(y > 0.0, w * y * log(y)).otherwise(0.0)
+      case "gamma" => when(y > 0.0, w * log(y)).otherwise(lit(Double.NaN))
+      case "negbin" =>
+        when(y < 0.0, lit(Double.NaN)).otherwise(
+          when(y > 0.0, w * y * log(y)).otherwise(lit(0.0)) - w * (y + th) * log(y + th))
+      case "gaussian" => w * y * y
+      case _ => lit(0.0)
+    }
+
+    /** Working weight, working response and deviance term of one unit at
+      * the linear predictor `etaX` plus `offset` (μ sees the offset; the
+      * working response regresses only the Xβ part, the offset is fixed). */
+    def step(etaX: Column, offset: Option[Column], yb: Column, w: Column, ylogy: Column)
+        : (Column, Column, Column) = {
+      val Eps = 1e-12
+      val eta = offset.fold(etaX)(etaX + _)
+      name match {
+        case "binomial" =>
+          val mu = least(greatest(sigmoid(eta), lit(Eps)), lit(1.0 - Eps))
+          val v = mu * (lit(1.0) - mu)
+          val dev = w * (when(yb > 0.0, yb * log(mu)).otherwise(0.0) +
+            when(yb < 1.0, (lit(1.0) - yb) * log(lit(1.0) - mu)).otherwise(0.0)) * lit(-2.0)
+          (w * v, etaX + (yb - mu) / v, dev)
+        case "gaussian" =>
+          // w·(ȳ−μ)² plus the within-cell Σw·y² − w·ȳ², exactly 0 on a row
+          (w, offset.fold(yb)(yb - _),
+            w * (yb - eta) * (yb - eta) + (ylogy - w * yb * yb))
+        case _ =>
+          val mu = greatest(exp(eta), lit(Eps))
+          val (w2, dev) = name match {
+            case "poisson" => (w * mu, ylogy - w * yb * log(mu) - w * yb + w * mu)
+            // 2Σw[−ln(y/μ) + (y−μ)/μ]
+            case "gamma" => (w, w * log(mu) + w * yb / mu - w - ylogy)
+            // 2Σw[y·ln y − y·ln μ − (y+θ)·ln(y+θ) + (y+θ)·ln(μ+θ)]
+            case "negbin" => (w * mu * th / (mu + th),
+              ylogy - w * yb * log(mu) + w * (yb + th) * log(mu + th))
+          }
+          (w2, etaX + (yb - mu) / mu, dev * lit(2.0))
+      }
+    }
+
+    /** Deviance of the null model from the totals Σw, Σw·y and Σ cell stat:
+      * μ = ȳ, except that the gaussian null model of a design without an
+      * intercept is μ = 0. */
+    def nullDeviance(sw: Double, swy: Double, sylogy: Double, intercept: Boolean): Double = {
+      val yb = swy / sw
+      name match {
+        case "binomial" =>
+          if (yb <= 0.0 || yb >= 1.0) 0.0
+          else -2.0 * (swy * math.log(yb) + (sw - swy) * math.log(1.0 - yb))
+        case "poisson" => if (yb <= 0.0) 0.0 else 2.0 * (sylogy - swy * math.log(yb))
+        // at μ = ȳ the linear term vanishes: 2(Σw·ln ȳ − Σw·ln y)
+        case "gamma" => 2.0 * (sw * math.log(yb) - sylogy)
+        case "negbin" =>
+          if (yb <= 0.0) 0.0
+          else 2.0 * (sylogy - swy * math.log(yb) + (swy + theta * sw) * math.log(yb + theta))
+        case "gaussian" => if (intercept) sylogy - swy * yb else sylogy
+      }
+    }
+  }
+
+  /** The family, after the argument checks [[fit]] and [[fitGrouped]] share. */
+  private def family(name: String, theta: Double, strategy: String, maxIter: Int): Family = {
+    require(Families(name), s"unknown family: $name")
+    require(theta > 0.0, s"negbin dispersion theta must be positive, got $theta")
+    require(Set("auto", "irls", "compress")(strategy), s"unknown strategy: $strategy")
+    require(maxIter >= 1, "maxIter must be >= 1")
+    Family(name, theta)
+  }
+
+  /** A unit frame's columns: the design columns, `_wt`, `_yb` and `_ylogy`. */
+  private def unitCols(xNames: Seq[String], y: Column, wt: Column, fam: Family): Seq[Column] =
+    xNames.map(col) ++ Seq(wt.as("_wt"), y.as("_yb"), fam.cellStat(y, wt).as("_ylogy"))
+
+  /** `auto` probes the distinct `keys` tuples (approx, one scan) and picks
+    * compress when they number at most `ratio` × rows. */
+  private def chooseStrategy(strategy: String, units: DataFrame, keys: Seq[Column],
+      ratio: Double): String =
+    if (strategy != "auto") strategy
+    else {
+      val probe = units
+        .agg(count(lit(1)).as("_n"), approx_count_distinct(struct(keys: _*)).as("_cells"))
+        .collect()(0)
+      if (probe.getAs[Long]("_cells") <= ratio * probe.getAs[Long]("_n")) "compress"
+      else "irls"
+    }
+
+  /** The compress strategy's cell table: one unit per distinct `keys` tuple. */
+  private def cells(units: DataFrame, keys: Seq[Column]): DataFrame =
+    units.groupBy(keys: _*).agg(
+      sum("_wt").as("_wt"),
+      (sum(col("_wt") * col("_yb")) / sum("_wt")).as("_yb"),
+      sum("_ylogy").as("_ylogy"))
+
+  /** Wald z row: normal reference distribution, the GLM convention. */
+  private def zRow(term: String, est: Double, se: Double): CoefRow = {
+    val z = if (se > 0) est / se else Double.NaN
+    val pv = if (z.isNaN) Double.NaN
+      else 2.0 * new NormalDistribution(0.0, 1.0).cumulativeProbability(-math.abs(z))
+    CoefRow(term, est, se, z, pv)
+  }
+
   /** Fit a GLM.
     *
     * @param formula  `y ~ x1 + x2*x3` (no `| fe` part; factors expand to
     *                 dummies exactly as in [[Dbreg]])
-    * @param family   binomial | poisson | gaussian
+    * @param family   binomial | poisson | gaussian | gamma | negbin
     * @param strategy auto | irls | compress. `auto` probes the distinct
     *                 regressor-tuple count (approx, one scan) and picks
     *                 compress when cells ≤ `compressRatio` × rows.
@@ -217,10 +337,7 @@ object Glm {
       theta: Double = 1.0
   ): GlmResult = {
     val v = Vcov.parse(vcov)
-    require(Families(family), s"unknown family: $family")
-    require(theta > 0.0, s"negbin dispersion theta must be positive, got $theta")
-    require(Set("auto", "irls", "compress")(strategy), s"unknown strategy: $strategy")
-    require(maxIter >= 1, "maxIter must be >= 1")
+    val fam = this.family(family, theta, strategy, maxIter)
     val f = Formula.parse(formula)
     require(f.fe.isEmpty,
       "GLM does not support fixed effects (| fe): absorb small factors as RHS dummies")
@@ -235,64 +352,23 @@ object Glm {
     require(xNames.length <= Dbreg.MaxDesignCols,
       s"design too wide (${xNames.length} > ${Dbreg.MaxDesignCols})")
 
-    val y = col(ModelFrame.Y)
     val wt = weights.map(col(_).cast("double")).getOrElse(lit(1.0))
-    // _ylogy (Σ w·y·ln y within the unit) makes the Poisson deviance
-    // cell-exact: it is the one deviance term not linear in y.
-    // _ylogy doubles as the family's log-moment cell stat: w·y·ln y for
-    // the Poisson deviance, w·ln y for the gamma deviance. A y ≤ 0 row
-    // under gamma poisons the stat with NaN, which survives every sum —
-    // the first IRLS pass detects it without a separate validation scan.
-    val ylogy = family match {
-      case "poisson" => when(y > 0.0, wt * y * log(y)).otherwise(0.0)
-      case "gamma" => when(y > 0.0, wt * log(y)).otherwise(lit(Double.NaN))
-      // negbin carries the whole non-μ-linear deviance part per unit:
-      // w·[y·ln y − (y+θ)·ln(y+θ)]; a y < 0 row poisons it with NaN (the
-      // explicit branch matters: Spark's ln yields NULL below zero and sum
-      // would silently skip it)
-      case "negbin" =>
-        when(y < 0.0, lit(Double.NaN)).otherwise(
-          when(y > 0.0, wt * y * log(y)).otherwise(lit(0.0)) -
-            wt * (y + lit(theta)) * log(y + lit(theta)))
-      case _ => lit(0.0)
-    }
     val off = offset.map(col(_).cast("double")).getOrElse(lit(0.0))
-    val rowFrame = d.df.select(
-      xNames.map(col) ++ Seq(wt.as("_wt"), y.as("_yb"), ylogy.as("_ylogy"), off.as("_off")): _*)
+    val units = d.df.select(
+      unitCols(xNames, col(ModelFrame.Y), wt, fam) :+ off.as("_off"): _*)
+    val keys = xNames.map(col) :+ col("_off")
+    val chosen = chooseStrategy(strategy, units, keys, compressRatio)
+    val work =
+      if (chosen == "compress")
+        cells(units, keys).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else units
 
-    val chosen = strategy match {
-      case "auto" =>
-        val probe = rowFrame
-          .agg(count(lit(1)).as("_n"),
-            approx_count_distinct(struct((xNames.map(col) :+ col("_off")): _*))
-              .as("_cells"))
-          .collect()(0)
-        if (probe.getAs[Long]("_cells") <= compressRatio * probe.getAs[Long]("_n"))
-          "compress"
-        else "irls"
-      case s => s
-    }
-
-    val work = chosen match {
-      case "compress" =>
-        rowFrame
-          .groupBy((xNames.map(col) :+ col("_off")): _*)
-          .agg(
-            sum("_wt").as("_wt"),
-            (sum(col("_wt") * col("_yb")) / sum("_wt")).as("_yb"),
-            sum("_ylogy").as("_ylogy"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      case _ => rowFrame
-    }
-
-    val exprByName: Map[String, Column] = d.displayNames.zip(d.cols.map(_.col)).toMap
     val res0 =
-      try fitIrls(f, family, chosen, work, xNames, d.displayNames, exprByName,
-        maxIter, tol, offset, theta)
+      try fitIrls(fam, chosen, work, d, maxIter, tol, offset)
       finally if (chosen == "compress") { work.unpersist(); () }
     v match {
       case Vcov.Iid => res0
-      case _ => sandwich(res0, v, base, exprByName, f, family, wt, offset, theta)
+      case _ => sandwich(res0, v, base, f, fam, wt)
     }
   }
 
@@ -310,25 +386,16 @@ object Glm {
       res: GlmResult,
       v: Vcov,
       base: DataFrame,
-      exprByName: Map[String, Column],
       f: Formula,
-      family: String,
-      wt: Column,
-      offset: Option[String],
-      theta: Double = 1.0
+      fam: Family,
+      wt: Column
   ): GlmResult = {
-    val kept = res.coeftable.map(_.term).toIndexedSeq
-    val p = kept.length
-    val beta = res.coeftable.map(_.estimate).toArray
-    val etaX = kept.zip(beta).map { case (nm, b) =>
-      exprByName(nm).cast("double") * lit(b)
-    }.reduce(_ + _)
-    val eta = offset.fold(etaX)(o => etaX + col(o).cast("double"))
-    val mu = linkInv(family, eta)
+    val p = res.coeftable.length
+    val mu = res.scoreFn(base)
     // ∂ℓ/∂η = y − μ for the canonical links; the NON-canonical log-link
     // negbin score carries the extra factor (dμ/dη)/V(μ) = θ/(θ+μ)
-    val scoreFac = family match {
-      case "negbin" => lit(theta) / (mu + lit(theta))
+    val scoreFac = fam.name match {
+      case "negbin" => lit(fam.theta) / (mu + lit(fam.theta))
       case _ => lit(1.0)
     }
     val r = (col(f.y).cast("double") - mu) * scoreFac
@@ -336,7 +403,7 @@ object Glm {
     // to the per-ROW meat but a single combined w·r·x to their CLUSTER's
     // score — so HC1 scales by w, cluster sums scale by w
     val u = wt * r
-    val xs = kept.map(nm => exprByName(nm).cast("double"))
+    val xs = res.termCols.map(_.cast("double"))
     val inv = res.vcov
     val n = res.nobs
     val vc = v match {
@@ -348,12 +415,8 @@ object Glm {
         LinAlg.vcovCr1(inv, meat, n, g.toDouble, p)
       case Vcov.Iid => throw new IllegalStateException("unreachable")
     }
-    val norm = new NormalDistribution(0.0, 1.0)
     val table = res.coeftable.zipWithIndex.map { case (r, j) =>
-      val se = math.sqrt(math.max(vc(j, j), 0.0))
-      val z = if (se > 0) r.estimate / se else Double.NaN
-      val pv = if (z.isNaN) Double.NaN else 2.0 * norm.cumulativeProbability(-math.abs(z))
-      r.copy(stdError = se, statistic = z, pValue = pv)
+      zRow(r.term, r.estimate, math.sqrt(math.max(vc(j, j), 0.0)))
     }
     res.copy(coeftable = table, vcov = vc)
   }
@@ -366,7 +429,8 @@ object Glm {
     * moments triangle (partial+final, map-side combine), the per-group
     * solves run EXECUTOR-SIDE on the G moment rows, and the next step
     * re-attaches β per group with an equi-join AQE downgrades to broadcast
-    * while G×p stays small — the corpus itself is never shuffled.
+    * while G×p stays small — the corpus itself is never shuffled. Every
+    * per-unit formula is the family definition [[fit]] reads.
     *
     * `strategy="compress"` collapses the corpus to distinct
     * (group × regressor-tuple) cells in ONE pass and iterates over the
@@ -375,9 +439,13 @@ object Glm {
     * after a single corpus scan.
     *
     * Returns a distributed DataFrame (group, term, estimate, std_error,
-    * n, deviance) — Wald z SEs from the final step's XᵀWX; `deviance` is
-    * measured at the penultimate β (the same one-lag as [[fit]] with
-    * tol=0; for stabilized groups the two are equal to solver precision).
+    * n, deviance, pseudo_r2) — Wald z SEs from the final step's XᵀWX;
+    * `deviance` is measured at the penultimate β (the same one-lag as
+    * [[fit]] with tol=0; for stabilized groups the two are equal to solver
+    * precision).
+    *
+    * Cost: 1 staged pass (plus the probe for `auto`) + `maxIter` keyed
+    * passes, the first `maxIter − 1` staged (pinned in PlanShapeSpec).
     */
   def fitGrouped(
       formula: String,
@@ -389,10 +457,7 @@ object Glm {
       compressRatio: Double = 0.25,
       theta: Double = 1.0
   ): DataFrame = {
-    require(Families(family), s"unknown family: $family")
-    require(theta > 0.0, s"negbin dispersion theta must be positive, got $theta")
-    require(Set("auto", "irls", "compress")(strategy), s"unknown strategy: $strategy")
-    require(maxIter >= 1, "maxIter must be >= 1")
+    val fam = this.family(family, theta, strategy, maxIter)
     val f = Formula.parse(formula)
     require(f.fe.isEmpty, "grouped GLM does not support fixed effects (| fe)")
     val d = ModelFrame.design(df, f, Seq(groupCol))
@@ -401,237 +466,96 @@ object Glm {
     require(xNames.nonEmpty, "empty design")
     val p = xNames.length
 
-    val y = col(ModelFrame.Y)
-    // gamma: a y ≤ 0 row poisons its group's log-moment with NaN, so that
+    // gamma: a y ≤ 0 row poisons its group's cell stat with NaN, so that
     // group reports NaN deviance/null-deviance/pseudo-R² (no extra
     // validation scan; other groups are unaffected)
-    val ylogy = family match {
-      case "poisson" => when(y > 0.0, y * log(y)).otherwise(0.0)
-      case "gamma" => when(y > 0.0, log(y)).otherwise(lit(Double.NaN))
-      case "negbin" =>
-        when(y < 0.0, lit(Double.NaN)).otherwise(
-          when(y > 0.0, y * log(y)).otherwise(lit(0.0)) -
-            (y + lit(theta)) * log(y + lit(theta)))
-      case _ => lit(0.0)
-    }
-    val rowFrame = d.df.select(
-      col(groupCol).cast("string").as("_g") +:
-        (xNames.map(col) ++ Seq(lit(1.0).as("_wt"), y.as("_yb"), (y * y).as("_ybb"),
-          ylogy.as("_ylogy"))): _*)
-
-    val chosen = strategy match {
-      case "auto" =>
-        val probe = rowFrame
-          .agg(count(lit(1)).as("_n"),
-            approx_count_distinct(struct((col("_g") +: xNames.map(col)): _*)).as("_cells"))
-          .collect()(0)
-        if (probe.getAs[Long]("_cells") <= compressRatio * probe.getAs[Long]("_n"))
-          "compress"
-        else "irls"
-      case s => s
-    }
-    val work0 = chosen match {
-      case "compress" =>
-        rowFrame.groupBy((col("_g") +: xNames.map(col)): _*)
-          .agg(
-            sum("_wt").as("_wt"),
-            (sum(col("_wt") * col("_yb")) / sum("_wt")).as("_yb"),
-            (sum(col("_wt") * col("_ybb")) / sum("_wt")).as("_ybb"),
-            sum("_ylogy").as("_ylogy"))
-      case _ => rowFrame
-    }
+    val units = d.df.select(col(groupCol).cast("string").as("_g") +:
+      unitCols(xNames, col(ModelFrame.Y), lit(1.0), fam): _*)
+    val keys = col("_g") +: xNames.map(col)
+    val chosen = chooseStrategy(strategy, units, keys, compressRatio)
     // one materialization barrier: every iteration rescans this frame, and
     // for compress the cell build must not rerun per step. Context-cleaner
     // releases the blocks with the result (same pattern as Dedup).
-    val work = work0.staged
+    val work = (if (chosen == "compress") cells(units, keys) else units).staged
 
     val spark = df.sparkSession
     import spark.implicits._
 
-    // working weight/response given the β-attachment state of `src`
-    def withWZ(src: DataFrame, haveBeta: Boolean): DataFrame = {
-      val eta =
-        if (!haveBeta) lit(0.0)
+    // step k's weighted moments of the working response plus each group's
+    // deviance and null-model totals; step 1 starts from β = 0
+    var betas: DataFrame = null
+    def momentAgg(k: Int): DataFrame = {
+      val etaX =
+        if (k == 1) lit(0.0)
         else (0 until p).map(i => col(xNames(i)) * element_at(col("_b"), i + 1))
           .reduce(_ + _)
-      val yb = col("_yb"); val w = col("_wt")
-      val Eps = 1e-12
-      val (w2, z, devTerm) = family match {
-        case "binomial" =>
-          val mu = least(greatest(sigmoid(eta), lit(Eps)), lit(1.0 - Eps))
-          val wrow = mu * (lit(1.0) - mu)
-          val dt = (when(yb > 0.0, yb * log(mu)).otherwise(0.0) +
-            when(yb < 1.0, (lit(1.0) - yb) * log(lit(1.0) - mu)).otherwise(0.0)) *
-            w * lit(-2.0)
-          (w * wrow, eta + (yb - mu) / wrow, dt)
-        case "poisson" =>
-          val mu = greatest(exp(eta), lit(Eps))
-          val dt = (col("_ylogy") * lit(1.0) / w - yb * log(mu) - yb + mu) * w * lit(2.0)
-          (w * mu, eta + (yb - mu) / mu, dt)
-        case "gamma" =>
-          val mu = greatest(exp(eta), lit(Eps))
-          val dt = (w * log(mu) + w * yb / mu - w - col("_ylogy")) * lit(2.0)
-          (w, eta + (yb - mu) / mu, dt)
-        case "negbin" =>
-          val mu = greatest(exp(eta), lit(Eps))
-          val dt = (col("_ylogy") - w * yb * log(mu) +
-            w * (yb + lit(theta)) * log(mu + lit(theta))) * lit(2.0)
-          (w * mu * lit(theta) / (mu + lit(theta)), eta + (yb - mu) / mu, dt)
-        case "gaussian" =>
-          (w, yb, w * (yb - eta) * (yb - eta))
-      }
-      src.withColumn("_w2", w2).withColumn("_z", z).withColumn("_devt", devTerm)
-    }
-
-    def momentAgg(wz: DataFrame): DataFrame = {
+      val (w2, z, devTerm) = fam.step(etaX, None, col("_yb"), col("_wt"), col("_ylogy"))
       val aggs = Seq(
         sum(col("_wt")).as("_wn"),
         sum(col("_devt")).as("_dev"),
         sum(col("_wt") * col("_yb")).as("_swy"),
-        sum(col("_wt") * col("_ybb")).as("_swyy"),
         sum(col("_ylogy")).as("_sylogy")) ++
         MomentsKernel.normalAggs(col("_z"), xNames.map(col), col("_w2"))
-      wz.groupBy(col("_g")).agg(aggs.head, aggs.tail: _*)
+      (if (k == 1) work else work.join(betas, "_g"))
+        .withColumn("_w2", w2).withColumn("_z", z).withColumn("_devt", devTerm)
+        .groupBy(col("_g")).agg(aggs.head, aggs.tail: _*)
     }
 
-    def solveRow(r: org.apache.spark.sql.Row): LinAlg.SolveOutcome = {
-      val (xtx, xty) = MomentsKernel.readNormal(r, p)
-      LinAlg.solveDetecting(xtx, xty)
-    }
-
-    var betas: DataFrame = null
-    for (k <- 1 to maxIter - 1) {
-      val src = if (k == 1) work else work.join(betas, "_g")
-      val mom = momentAgg(withWZ(src, haveBeta = k > 1))
-      betas = mom.map { r =>
-        val sol = solveRow(r)
-        val full = Array.fill(p)(0.0)
-        sol.keepIdx.zipWithIndex.foreach { case (orig, ki) => full(orig) = sol.beta(ki) }
-        (r.getAs[String]("_g"), full)
-      }.toDF("_g", "_b").staged
-    }
-    val lastSrc = if (maxIter == 1) work else work.join(betas, "_g")
-    val lastMom = momentAgg(withWZ(lastSrc, haveBeta = maxIter > 1))
-    val names = displayNames
-    val fam = family
-    val thetaLocal = theta
-    lastMom.flatMap { r =>
+    for (k <- 1 until maxIter)
+      betas = momentAgg(k).map(r => (r.getAs[String]("_g"), Irls.solveGroup(r, p)._2))
+        .toDF("_g", "_b").staged
+    momentAgg(maxIter).flatMap { r =>
       val g = r.getAs[String]("_g")
-      val sol = solveRow(r)
+      val (sol, _) = Irls.solveGroup(r, p)
       def dd(nm: String): Double = MomentsKernel.double(r, nm)
       val n = dd("_wn"); val dev = dd("_dev")
-      val swy = dd("_swy"); val syy = dd("_swyy"); val sylogy = dd("_sylogy")
-      val yb = swy / n
-      val nullDev = fam match {
-        case "binomial" =>
-          if (yb <= 0.0 || yb >= 1.0) 0.0
-          else -2.0 * (swy * math.log(yb) + (n - swy) * math.log(1.0 - yb))
-        case "poisson" =>
-          if (yb <= 0.0) 0.0 else 2.0 * (sylogy - swy * math.log(yb))
-        case "gamma" => 2.0 * (n * math.log(yb) - sylogy)
-        case "negbin" =>
-          if (yb <= 0.0) 0.0
-          else 2.0 * (sylogy - swy * math.log(yb) +
-            (swy + thetaLocal * n) * math.log(yb + thetaLocal))
-        case "gaussian" => syy - swy * swy / n
-      }
+      val nullDev = fam.nullDeviance(n, dd("_swy"), dd("_sylogy"),
+        sol.keepIdx.exists(displayNames(_) == "(Intercept)"))
       val pr2 = if (nullDev > 0.0) 1.0 - dev / nullDev else 0.0
       sol.keepIdx.zipWithIndex.map { case (orig, ki) =>
         val se = math.sqrt(math.max(sol.xtxInv(ki, ki), 0.0))
-        (g, names(orig), sol.beta(ki), se, n.round, dev, pr2)
+        (g, displayNames(orig), sol.beta(ki), se, n.round, dev, pr2)
       }
     }.toDF("group", "term", "estimate", "std_error", "n", "deviance", "pseudo_r2")
   }
 
-  /** One IRLS pass: weighted moments of the working response + deviance of
-    * the INCOMING β, all in a single aggregate. */
-  private final case class Pass(
-      mom: MomentsResult,
-      dev: Double,
-      sw: Double,
-      swy: Double,
-      sylogy: Double)
-
+  /** One IRLS pass: weighted moments of the working response, deviance of
+    * the INCOMING β and the null-model totals Σw, Σw·y and Σ cell stat, all
+    * in a single aggregate. */
   private def irlsPass(
       work: DataFrame,
       xNames: IndexedSeq[String],
-      family: String,
+      fam: Family,
       beta: Array[Double],
-      firstPass: Boolean,
-      hasOffset: Boolean = false,
-      theta: Double = 1.0
-  ): Pass = {
+      hasOffset: Boolean
+  ): MomentsResult = {
     val etaX =
       if (beta.forall(_ == 0.0)) lit(0.0)
       else xNames.zip(beta).map { case (n, b) => col(n) * lit(b) }.reduce(_ + _)
-    // μ sees the full linear predictor; the working response regresses only
-    // the Xβ part (the offset is fixed)
-    val eta = if (hasOffset) etaX + col("_off") else etaX
-    val yb = col("_yb")
     val w = col("_wt")
-    val Eps = 1e-12
-    val (w2, z, devAgg) = family match {
-      case "binomial" =>
-        val mu = least(greatest(sigmoid(eta), lit(Eps)), lit(1.0 - Eps))
-        val wrow = mu * (lit(1.0) - mu)
-        val dev = sum(w * (
-          when(yb > 0.0, yb * log(mu)).otherwise(0.0) +
-            when(yb < 1.0, (lit(1.0) - yb) * log(lit(1.0) - mu)).otherwise(0.0)
-        )) * lit(-2.0)
-        (w * wrow, etaX + (yb - mu) / wrow, dev)
-      case "poisson" =>
-        val mu = greatest(exp(eta), lit(Eps))
-        val dev = sum(col("_ylogy") - w * yb * log(mu) - w * yb + w * mu) * lit(2.0)
-        (w * mu, etaX + (yb - mu) / mu, dev)
-      case "gamma" =>
-        val mu = greatest(exp(eta), lit(Eps))
-        // 2Σw[−ln(y/μ) + (y−μ)/μ]; Σw·ln y rides in _ylogy, the rest is
-        // linear in ȳ so the compressed cells are exact
-        val dev = sum(w * log(mu) + w * yb / mu - w - col("_ylogy")) * lit(2.0)
-        (w, etaX + (yb - mu) / mu, dev)
-      case "negbin" =>
-        val mu = greatest(exp(eta), lit(Eps))
-        // d = 2Σw[y·ln y − y·ln μ − (y+θ)·ln(y+θ) + (y+θ)·ln(μ+θ)];
-        // the y-only part rides in _ylogy, the μ part is linear in ȳ —
-        // compressed cells stay exact (μ constant within a cell)
-        val dev = sum(col("_ylogy") - w * yb * log(mu) +
-          w * (yb + lit(theta)) * log(mu + lit(theta))) * lit(2.0)
-        (w * mu * lit(theta) / (mu + lit(theta)), etaX + (yb - mu) / mu, dev)
-      case "gaussian" =>
-        val mu = eta
-        val dev = sum(w * (yb - mu) * (yb - mu))
-        (w, if (hasOffset) yb - col("_off") else yb, dev)
-    }
-    val extras = Seq("_dev" -> devAgg) ++ (
-      if (firstPass)
-        Seq("_sw" -> sum(w), "_swy" -> sum(w * yb), "_sylogy" -> sum(col("_ylogy")))
-      else Nil)
-    val mom = MomentsKernel.compute(
+    val yb = col("_yb")
+    val (w2, z, devTerm) =
+      fam.step(etaX, if (hasOffset) Some(col("_off")) else None, yb, w, col("_ylogy"))
+    val extras = Seq("_dev" -> sum(devTerm), "_sw" -> sum(w), "_swy" -> sum(w * yb),
+      "_sylogy" -> sum(col("_ylogy")))
+    MomentsKernel.compute(
       work.withColumn("_w2", w2).withColumn("_z", z),
       "_z", xNames, intercept = false, weightName = Some("_w2"),
       extraAggs = extras)
-    Pass(mom, mom.extra("_dev"),
-      if (firstPass) mom.extra("_sw") else 0.0,
-      if (firstPass) mom.extra("_swy") else 0.0,
-      if (firstPass) mom.extra("_sylogy") else 0.0)
   }
 
   private def fitIrls(
-      f: Formula,
-      family: String,
+      fam: Family,
       strategy: String,
       work: DataFrame,
-      xNames0: IndexedSeq[String],
-      displayNames0: IndexedSeq[String],
-      exprByName: Map[String, Column],
+      d: ModelFrame.Design,
       maxIter: Int,
       tol: Double,
-      offset: Option[String] = None,
-      theta: Double = 1.0
+      offset: Option[String]
   ): GlmResult = {
     val hasOffset = offset.isDefined
-    var xNames = xNames0
-    var displayNames = displayNames0
+    var xNames = d.xNames
+    var displayNames = d.displayNames
     var dropped = Vector.empty[String]
 
     var beta = Array.fill(xNames.length)(0.0)
@@ -643,23 +567,25 @@ object Glm {
 
     var i = 1
     while (i <= maxIter && !converged) {
-      val pass = irlsPass(work, xNames, family, beta, firstPass = i == 1, hasOffset, theta)
+      val pass = irlsPass(work, xNames, fam, beta, hasOffset)
+      val dev = pass.extra("_dev")
       if (i == 1) {
-        sw = pass.sw; swy = pass.swy; sylogy = pass.sylogy; nCells = pass.mom.nRows
+        sw = pass.extra("_sw"); swy = pass.extra("_swy"); sylogy = pass.extra("_sylogy")
+        nCells = pass.nRows
         require(nCells > 0, "no rows after missing-value filtering (empty input?)")
-        require(family != "gamma" || !sylogy.isNaN,
+        require(fam.name != "gamma" || !sylogy.isNaN,
           "gamma family requires strictly positive response values")
-        require(family != "negbin" || !sylogy.isNaN,
+        require(fam.name != "negbin" || !sylogy.isNaN,
           "negbin family requires nonnegative response values")
       }
-      if (i > 1 && math.abs(pass.dev - devPrev) / (math.abs(pass.dev) + 0.1) < tol) {
+      if (i > 1 && math.abs(dev - devPrev) / (math.abs(dev) + 0.1) < tol) {
         // deviance stabilized: report the β that produced it (the previous
         // solve); `inv` already holds its (XᵀWX)⁻¹
-        devPrev = pass.dev
+        devPrev = dev
         converged = true
       } else {
-        devPrev = pass.dev
-        val sol = LinAlg.solveDetecting(pass.mom.xtx, pass.mom.xty)
+        devPrev = dev
+        val sol = LinAlg.solveDetecting(pass.xtx, pass.xty)
         if (sol.dropIdx.nonEmpty) {
           // collinear columns: drop them permanently and restart (W at β=0
           // is constant, so rank defects surface on the very first solve)
@@ -683,46 +609,20 @@ object Glm {
     // the deviance OF the reported β against its predecessor's
     val deviance =
       if (converged) devPrev
-      else irlsPass(work, xNames, family, beta, firstPass = false, hasOffset, theta).dev
+      else irlsPass(work, xNames, fam, beta, hasOffset).extra("_dev")
+    val nullDeviance =
+      if (hasOffset) Double.NaN
+      else fam.nullDeviance(sw, swy, sylogy, displayNames.contains("(Intercept)"))
 
-    val ybarAll = swy / sw
-    val nullDeviance = if (hasOffset) Double.NaN else family match {
-      case "binomial" =>
-        if (ybarAll <= 0.0 || ybarAll >= 1.0) 0.0
-        else -2.0 * (swy * math.log(ybarAll) + (sw - swy) * math.log(1.0 - ybarAll))
-      case "poisson" =>
-        if (ybarAll <= 0.0) 0.0 else 2.0 * (sylogy - swy * math.log(ybarAll))
-      case "gamma" =>
-        // at μ = ȳ the linear term vanishes: 2(Σw·ln ȳ − Σw·ln y)
-        2.0 * (sw * math.log(ybarAll) - sylogy)
-      case "negbin" =>
-        // sylogy = Σw[y·ln y − (y+θ)·ln(y+θ)]; at μ = ȳ the deviance is
-        // 2[sylogy − Σwy·ln ȳ + (Σwy + θΣw)·ln(ȳ+θ)]
-        if (ybarAll <= 0.0) 0.0
-        else 2.0 * (sylogy - swy * math.log(ybarAll) +
-          (swy + theta * sw) * math.log(ybarAll + theta))
-      case "gaussian" =>
-        // Σw(y−ȳ)²: recover from the LAST pass? cheaper: dev at β=(ȳ,0,…) is
-        // exactly the TSS — one extra pass only for gaussian (rare path)
-        val b = Array.fill(xNames.length)(0.0)
-        val icept = displayNames.indexOf("(Intercept)")
-        if (icept >= 0) { b(icept) = ybarAll }
-        irlsPass(work, xNames, family, b, firstPass = false).dev
-    }
-
-    val norm = new NormalDistribution(0.0, 1.0)
     val table = xNames.indices.map { j =>
-      val se = math.sqrt(math.max(inv(j, j), 0.0))
-      val zstat = if (se > 0) beta(j) / se else Double.NaN
-      val p = if (zstat.isNaN) Double.NaN
-        else 2.0 * norm.cumulativeProbability(-math.abs(zstat))
-      CoefRow(displayNames(j), beta(j), se, zstat, p)
+      zRow(displayNames(j), beta(j), math.sqrt(math.max(inv(j, j), 0.0)))
     }
 
     // response-scale scorer over new data: kept display-name → original
     // design expression (factor levels frozen at fit time, so the stored
     // Columns replay on any frame carrying the input columns — same closure
     // shape as Dbreg.withLinearPredictor)
+    val exprByName = d.displayNames.zip(d.cols.map(_.col)).toMap
     val betaFinal = beta
     val keptNames = displayNames
     val scorer: DataFrame => Column = _ => {
@@ -730,10 +630,10 @@ object Glm {
         exprByName(nm).cast("double") * lit(b)
       }.reduce(_ + _)
       val eta = offset.fold(etaX)(o => etaX + col(o).cast("double"))
-      linkInv(family, eta)
+      linkInv(fam.name, eta)
     }
 
-    GlmResult(family, strategy, table, inv, sw, nCells, deviance, nullDeviance,
+    GlmResult(fam.name, strategy, table, inv, sw, nCells, deviance, nullDeviance,
       iters, converged, dropped, scoreFn = scorer,
       termCols = keptNames.map(exprByName),
       offsetCol = offset.map(o => col(o).cast("double")))

@@ -1,24 +1,18 @@
 package graft.reg
 
-import breeze.linalg.{DenseMatrix, DenseVector}
-import org.apache.commons.math3.distribution.TDistribution
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.formula.Formula
-import graft.linalg.LinAlg
-import graft.model.ModelFrame
-import graft.model.ModelFrame.Y
-
 /** Huber robust regression (M-estimation) via IRLS on the moments kernel —
-  * a beyond-reference extension sharing the engine's one-scan-per-step
-  * shape with [[Glm]]: every IRLS step is ONE partial+final weighted-moments
-  * aggregate where the Huber weight
-  * `w = min(1, k·σ / |y − Xβ|)` is built from the incoming β as literal
-  * expressions (the HC1-meat pattern, reference dbreg.R:1805-1902). Unlike
-  * the GLM, the weight depends on the row through the RESIDUAL, so there is
-  * no distinct-x compression; each step scans the (pruned, codegen'd)
-  * base relation.
+  * a beyond-reference extension on the residual-IRLS core [[Irls]], which
+  * it shares with [[Qreg]]: the OLS init, the steps (each ONE partial+final
+  * weighted-moments aggregate, the weight built from the incoming β as
+  * literal expressions — the HC1-meat pattern, reference
+  * dbreg.R:1805-1902), the fused sandwich pass and the t table. Rlm
+  * supplies the Huber weight `w = min(1, k·σ / |y − Xβ|)`, its scale rule
+  * and its two sandwich weights. Unlike the GLM, the weight depends on the
+  * row through the RESIDUAL, so there is no distinct-x compression; each
+  * step scans the (pruned, codegen'd) base relation.
   *
   * Scale: Huber's Proposal 2 — σ starts at the initial OLS √(rss/(n−p))
   * and is re-estimated each step as σ² = Σ min(|r|, kσ)² / ((n−p)·κ(k))
@@ -35,7 +29,9 @@ import graft.model.ModelFrame.Y
   * B = Xᵀdiag(ψ²)X (ψ = clipped residual), finite-sample scaled by
   * n/(n−p) — both triangles come from ONE extra fused scan.
   *
-  * Cost: (1 OLS init) + maxIter + 1 (sandwich) scans.
+  * Cost: (1 OLS init) + maxIter + 1 (sandwich) scans (pinned in
+  * PlanShapeSpec). Like [[Qreg]], a fit that stops at `maxIter` short of
+  * `tol > 0` warns on stderr.
   */
 object Rlm {
 
@@ -56,16 +52,7 @@ object Rlm {
       nobs: Long,
       insideFrac: Double, // share of rows inside the band at the final β
       collinDropped: Seq[String]
-  ) {
-    def terms: Seq[String] = coeftable.map(_.term)
-    def coef: Map[String, Double] = coeftable.map(r => r.term -> r.estimate).toMap
-    def se: Map[String, Double] = coeftable.map(r => r.term -> r.stdError).toMap
-    def toDF(spark: SparkSession): DataFrame = {
-      import spark.implicits._
-      coeftable.map(r => (r.term, r.estimate, r.stdError, r.statistic, r.pValue))
-        .toDF("term", "estimate", "std_error", "statistic", "p_value")
-    }
-  }
+  ) extends CoefTable
 
   /** Huber fit. `tol = 0` pins exactly `maxIter` IRLS steps (the oracle /
     * [[sqlOnly]] configuration); otherwise stop when the max relative
@@ -81,98 +68,36 @@ object Rlm {
     require(k > 0, s"tuning constant must be positive: $k")
     require(maxIter >= 1)
     scale.foreach(s => require(s > 0, s"scale must be positive: $s"))
-    val f = Formula.parse(formula)
-    require(f.fe.isEmpty,
-      "rlm does not absorb fixed effects; include them as dummies")
-
-    val d = ModelFrame.design(df, f)
-
-    // initial OLS: one unweighted moments pass; collinear columns drop here
-    // and stay dropped (the weights at any β cannot restore rank)
-    val m0 = MomentsKernel.compute(d.df, Y, d.xNames, intercept = false)
-    val s0 = LinAlg.solveDetecting(m0.xtx, m0.xty)
-    val keptX = s0.keepIdx.map(d.xNames)
-    val keptNames = s0.keepIdx.map(d.displayNames)
-    val dropped = s0.dropIdx.map(d.displayNames)
-    val p = keptX.length
-    val n = m0.n
-    require(n > p, s"need n > p, got n=$n p=$p")
-    val rss0 = math.max(
-      m0.sumYSq - 2.0 * (s0.beta dot DenseVector(s0.keepIdx.map(m0.xty(_)).toArray)) +
-        (s0.beta dot (DenseMatrix.tabulate(p, p)((i, j) =>
-          m0.xtx(s0.keepIdx(i), s0.keepIdx(j))) * s0.beta)),
-      0.0)
-    var sigma = scale.getOrElse(math.sqrt(rss0 / (n - p)))
+    val init = Irls.init(formula, df, "rlm")
+    import init.{n, p}
+    var sigma = scale.getOrElse(init.sigma0)
     require(sigma > 0, "zero residual scale: OLS fits exactly, nothing to robustify")
     val kap = kappa(k)
+    def band = lit(k * sigma) // at the current σ, read as each step starts
 
-    def residual(beta: DenseVector[Double]): Column =
-      keptX.zipWithIndex.foldLeft(col(Y).cast("double")) {
-        case (acc, (xn, i)) => acc - lit(beta(i)) * col(xn).cast("double")
-      }
-
-    var beta = s0.beta
-    var iters = 0
-    var converged = false
-    while (iters < maxIter && !converged) {
-      iters += 1
-      val band = k * sigma
-      val res = residual(beta)
-      val w = when(abs(res) <= lit(band), lit(1.0))
-        .otherwise(lit(band) / abs(res))
-      val work = d.df.withColumn("__rw", w)
+    val path = Irls.iterate(init, maxIter, tol, "rlm",
+      "design lost rank under Huber weights (all mass outside the band?)")(
+      weight = res => when(abs(res) <= band, lit(1.0)).otherwise(band / abs(res)),
       // Proposal-2 scale sum Σ min(|r|, kσ)² rides along in the same pass
-      val clip2 = {
-        val a = least(abs(res), lit(band)); a * a
-      }
-      val m = MomentsKernel.compute(work, Y, keptX, intercept = false,
-        weightName = Some("__rw"), extraAggs = Seq("_clip2" -> sum(clip2)))
-      val s = LinAlg.solveDetecting(m.xtx, m.xty)
-      require(s.dropIdx.isEmpty,
-        "design lost rank under Huber weights (all mass outside the band?)")
-      val sigmaNew =
-        if (scale.isDefined) sigma
-        else math.sqrt(m.extra("_clip2") / ((n - p) * kap))
-      val delta = math.max(
-        (0 until p).map(i =>
-          math.abs(s.beta(i) - beta(i)) / math.max(math.abs(s.beta(i)), 1e-10)).max,
-        math.abs(sigmaNew - sigma) / math.max(sigmaNew, 1e-10))
-      beta = s.beta
-      sigma = sigmaNew
-      if (tol > 0 && delta < tol) converged = true
-    }
-    val band = k * sigma
+      extra = res => { val a = least(abs(res), band); Seq("_clip2" -> sum(a * a)) },
+      rescale = m =>
+        if (scale.isDefined) 0.0
+        else {
+          val next = math.sqrt(m.extra("_clip2") / ((n - p) * kap))
+          val change = math.abs(next - sigma) / math.max(next, 1e-10)
+          sigma = next
+          change
+        })
 
-    // fused sandwich pass: BOTH triangles (A: ψ′ indicator, B: ψ²) in one scan
-    val res = residual(beta)
-    val inside = abs(res) <= lit(band)
-    val aW = when(inside, 1.0).otherwise(0.0)
-    val psi = when(inside, res).otherwise(lit(band) * signum(res))
-    val bW = psi * psi
-    val xs = keptX.map(col(_).cast("double"))
-    // both weights in a projection below the packed aggregate
-    val row = d.df.withColumns(Map("_aw" -> aW, "_bw" -> bW))
-      .agg(sum(col("_aw")).as("_in"), MomentsKernel.triangle("a", xs, Some(col("_aw"))),
-        MomentsKernel.triangle("b", xs, Some(col("_bw"))))
-      .collect()(0)
-    val aM = MomentsKernel.readTriangle(row, "a", p)
-    val bM = MomentsKernel.readTriangle(row, "b", p)
-    val aSolve = LinAlg.solveDetecting(aM, DenseVector.zeros[Double](p))
-    require(aSolve.dropIdx.isEmpty,
+    // sandwich: A weights rows by ψ′ (1 inside the band), B by ψ²
+    val res = init.residual(path.beta)
+    val inside = when(abs(res) <= band, 1.0).otherwise(0.0)
+    val psi = when(abs(res) <= band, res).otherwise(band * signum(res))
+    val (table, insideFrac) = Irls.sandwich(init, path.beta, stat = inside, aW = inside,
+      bW = Some(psi * psi), aScale = 1.0, bScale = 1.0,
       "sandwich bread Xᵀdiag(ψ′)X is singular: too few rows inside the band")
-    val aInv = aSolve.xtxInv
-    val v = (aInv * bM * aInv) * (n / (n - p))
-
-    val tdist = new TDistribution(n - p)
-    val rows = (0 until p).map { i =>
-      val est = beta(i)
-      val se = math.sqrt(math.max(v(i, i), 0.0))
-      val t = if (se > 0) est / se else Double.NaN
-      val pv = if (se > 0) 2.0 * tdist.cumulativeProbability(-math.abs(t)) else Double.NaN
-      CoefRow(keptNames(i), est, se, t, pv)
-    }
-    RlmFit(rows, sigma, k, iters, converged || tol == 0.0, m0.nRows,
-      MomentsKernel.double(row, "_in") / n, dropped)
+    RlmFit(table, sigma, k, path.iterations, path.converged, init.m0.nRows, insideFrac,
+      init.dropped)
   }
 
   /** The whole fixed-iteration fit rendered as ONE runnable SQL statement

@@ -128,7 +128,11 @@ class EmptyInputSpec extends SparkTestBase {
     val r = intercept[IllegalArgumentException] {
       graft.reg.Rlm.fit("y ~ x", emptyPanel)
     }
-    assert(r.getMessage.toLowerCase.matches(".*(no rows|n > p).*"), r.getMessage)
+    assert(r.getMessage.toLowerCase.contains("no rows"), r.getMessage)
+    val q = intercept[IllegalArgumentException] {
+      Qreg.fit("y ~ x", emptyPanel)
+    }
+    assert(q.getMessage.toLowerCase.contains("no rows"), q.getMessage)
     val b = intercept[IllegalArgumentException] {
       Dbbinsreg.fit("y ~ x", emptyPanel, nbins = 4)
     }
@@ -138,6 +142,7 @@ class EmptyInputSpec extends SparkTestBase {
     // per-group shape has no global moment row to refuse on
     assert(Dbreg.fitGrouped("y ~ x", emptyPanel, "g").count() === 0L)
     assert(Glm.fitGrouped("y ~ x", emptyPanel, "g", maxIter = 2).count() === 0L)
+    assert(Qreg.fitGrouped("y ~ x", emptyPanel, "g").count() === 0L)
   }
 
   test("clustered standard errors refuse a single cluster") {

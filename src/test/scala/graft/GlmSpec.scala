@@ -234,6 +234,13 @@ class GlmSpec extends SparkTestBase {
     val ols = Dbreg.fit("yc ~ x1 + x2", df, strategy = "moments")
     for (t <- Seq("(Intercept)", "x1", "x2"))
       assert(math.abs(glm.coef(t) - ols.coef(t)) < 1e-9, s"$t")
+    // compress cells carry Σw·y², so the deviances keep the within-cell sum
+    val comp = Glm.fit("yc ~ x1 + x2", df, family = "gaussian",
+      strategy = "compress", maxIter = 3, tol = 0.0)
+    assert(math.abs(comp.deviance - glm.deviance) < 1e-9 * glm.deviance,
+      s"${comp.deviance} vs ${glm.deviance}")
+    assert(math.abs(comp.nullDeviance - glm.nullDeviance) < 1e-9 * glm.nullDeviance,
+      s"${comp.nullDeviance} vs ${glm.nullDeviance}")
   }
 
   test("prior weights equal row duplication") {
@@ -319,34 +326,42 @@ class GlmSpec extends SparkTestBase {
     val df = logitData(1200)
       .withColumn("dom", when(col("x2") < 2.0, "a")
         .when(col("x2") < 4.0, "b").otherwise("c"))
-    val grouped = Glm.fitGrouped("y ~ x1", df, "dom", family = "binomial",
-      strategy = "irls", maxIter = 6)
-      .collect().map(r => (r.getString(0), r.getString(1)) -> (r.getDouble(2), r.getDouble(3))).toMap
-    for (g <- Seq("a", "b", "c")) {
-      val solo = Glm.fit("y ~ x1", df.filter(col("dom") === g),
-        family = "binomial", strategy = "irls", maxIter = 6, tol = 0.0)
-      for (t <- Seq("(Intercept)", "x1")) {
-        val (est, se) = grouped((g, t))
-        assert(math.abs(est - solo.coef(t)) < 1e-8, s"$g/$t estimate")
-        assert(math.abs(se - solo.se(t)) < 1e-8, s"$g/$t se")
+      .withColumn("cnt", col("y") + col("x2"))
+      .withColumn("pos", lit(0.5) + col("y") + col("x2") * 0.25)
+    // every family, plus the intercept-free gaussian whose null deviance
+    // is Σw·y² rather than the centred sum
+    val cases = Seq("binomial" -> "y ~ x1", "poisson" -> "cnt ~ x1",
+      "gamma" -> "pos ~ x1", "gaussian" -> "pos ~ x1", "gaussian" -> "pos ~ 0 + x1",
+      "negbin" -> "cnt ~ x1")
+    for ((family, formula) <- cases) {
+      def grouped(strategy: String, maxIter: Int) =
+        Glm.fitGrouped(formula, df, "dom", family = family, strategy = strategy,
+          maxIter = maxIter)
+          .collect().map(r => (r.getString(0), r.getString(1)) ->
+            (r.getDouble(2), r.getDouble(3), r.getDouble(6))).toMap
+      val irls = grouped("irls", 6)
+      for (g <- Seq("a", "b", "c")) {
+        val solo = Glm.fit(formula, df.filter(col("dom") === g),
+          family = family, strategy = "irls", maxIter = 6, tol = 0.0)
+        for (t <- solo.terms) {
+          val (est, se, _) = irls((g, t))
+          assert(math.abs(est - solo.coef(t)) < 1e-8, s"$family $formula $g/$t estimate")
+          assert(math.abs(se - solo.se(t)) < 1e-8, s"$family $formula $g/$t se")
+        }
       }
-    }
-    val comp = Glm.fitGrouped("y ~ x1", df, "dom", family = "binomial",
-      strategy = "compress", maxIter = 6)
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
-    grouped.foreach { case (k, (est, _)) =>
-      assert(math.abs(comp(k) - est) < 1e-9, s"$k compress drift")
-    }
-    // per-group pseudo-R2 tracks the solo fits (deviance is at the
-    // penultimate beta — equal to solver precision once stabilized)
-    val pr2 = Glm.fitGrouped("y ~ x1", df, "dom", family = "binomial",
-      strategy = "irls", maxIter = 12)
-      .select("group", "pseudo_r2").distinct()
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    for (g <- Seq("a", "b", "c")) {
-      val solo = Glm.fit("y ~ x1", df.filter(col("dom") === g),
-        family = "binomial", strategy = "irls", maxIter = 12, tol = 0.0)
-      assert(math.abs(pr2(g) - solo.pseudoR2) < 1e-6, s"$g pseudo_r2")
+      val comp = grouped("compress", 6)
+      irls.foreach { case (k, (est, _, pr2)) =>
+        assert(math.abs(comp(k)._1 - est) < 1e-9, s"$family $formula $k compress drift")
+        assert(math.abs(comp(k)._3 - pr2) < 1e-9, s"$family $formula $k compress pseudo_r2")
+      }
+      // per-group pseudo-R2 tracks the solo fits (deviance is at the
+      // penultimate beta — equal to solver precision once stabilized)
+      val pr2 = grouped("irls", 12).map { case ((g, _), (_, _, r2)) => g -> r2 }
+      for (g <- Seq("a", "b", "c")) {
+        val solo = Glm.fit(formula, df.filter(col("dom") === g),
+          family = family, strategy = "irls", maxIter = 12, tol = 0.0)
+        assert(math.abs(pr2(g) - solo.pseudoR2) < 1e-6, s"$family $formula $g pseudo_r2")
+      }
     }
     // auto picks compress here (x1 has 17 distinct values per group)
     val auto = Glm.fitGrouped("y ~ x1", df, "dom", maxIter = 6)

@@ -215,6 +215,42 @@ class PlanShapeSpec extends SparkTestBase {
     }
   }
 
+  test("IRLS fits run the query count their Cost lines state") {
+    // each action (collect, count, eager checkpoint) is one query, so the
+    // counts are the scaladoc "Cost:" lines of Rlm, Qreg, Conformal.cqr and
+    // Glm with the iteration count pinned
+    val df = (0 until 240).map { i =>
+      val x = (i % 8).toDouble
+      val y = 1.0 + 0.5 * x + ((i * 7919) % 13 - 6) * 0.2
+      val b = if ((i * 2654435761L & 0xffffL) % 9 < x + 1) 1.0 else 0.0
+      (y, x, b, s"g${i % 3}", i.toLong)
+    }.toDF("y", "x", "b", "g", "id")
+    def queries(fit: => Any): Int = capturedQueries(spark) { fit; () }.size
+    def glm(strategy: String, vcov: String) = queries(Glm.fit("b ~ x", df,
+      family = "binomial", strategy = strategy, maxIter = 4, tol = 0.0, vcov = vcov))
+    val counts = Seq(
+      "Rlm" -> queries(Rlm.fit("y ~ x", df, maxIter = 3, tol = 0.0)),
+      "Qreg" -> queries(Qreg.fit("y ~ x", df, maxIter = 3, tol = 0.0)),
+      "cqr" -> queries(graft.reg.Conformal.cqr("y ~ x", df, "id", alpha = 0.2,
+        maxIter = 3)),
+      "Glm irls iid" -> glm("irls", "iid"),
+      "Glm irls hc1" -> glm("irls", "hc1"),
+      "Glm compress iid" -> glm("compress", "iid"),
+      "Glm compress hc1" -> glm("compress", "hc1"),
+      "Glm grouped" -> queries(Glm.fitGrouped("b ~ x", df, "g", strategy = "irls",
+        maxIter = 4).collect()),
+      "Qreg grouped" -> queries(Qreg.fitGrouped("y ~ x", df, "g", maxIter = 3)
+        .collect()))
+    // Rlm/Qreg: init + 3 steps + sandwich; cqr: one shared init, 3 + 1 per
+    // τ, the calibration count and the k-th score; Glm: 4 passes + the
+    // deviance at the reported β (+1 meat); grouped Glm: staged cells +
+    // 3 staged β tables + the final keyed pass; grouped Qreg: staged rows,
+    // staged init, 3 staged steps, the final keyed pass
+    assert(counts == Seq("Rlm" -> 5, "Qreg" -> 5, "cqr" -> 11, "Glm irls iid" -> 5,
+      "Glm irls hc1" -> 6, "Glm compress iid" -> 5, "Glm compress hc1" -> 6,
+      "Glm grouped" -> 5, "Qreg grouped" -> 6), counts)
+  }
+
   test("demean attaches FE means without a join up to 64 levels, by broadcast above") {
     // Dbreg.withMeanColumns tiers: ≤64 levels a literal lookup, up to 2M
     // levels an explicit broadcast (asserted with the size-based
