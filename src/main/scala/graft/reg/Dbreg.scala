@@ -1,7 +1,8 @@
 package graft.reg
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.storage.StorageLevel
 
 import graft.formula.{Formula, Vcov}
@@ -30,11 +31,14 @@ import graft.model.ModelMatrix.MMCol
   *  - `auto`     — cost-based chooser using cheap probe aggregations
   *
   * Scale notes: no step ever collects row-level data; every collect is a
-  * 1-row moment vector, a ≤`compressNmax`-cell table, a ≤64-level mean
-  * table, or (CompressDriver only) a per-cluster score table. Group-mean
-  * tables are cached (the vcov pass reuses them) and attach by tier
-  * (`withMeanColumns`): ≤64 levels as a literal lookup, up to 2M levels by
-  * broadcast hash join, above that by a shuffle join of the fact table.
+  * 1-row moment vector, a ≤`compressNmax`-cell table, ≤64 mean rows per
+  * FE key, or (CompressDriver only) a per-cluster score table. Every FE
+  * strategy fetches its group means through [[groupMeans]]: one aggregate
+  * over all FE keys and one bounded collect. A key with ≤64 levels
+  * attaches as a literal lookup from the collected rows (nothing stays
+  * cached); a larger key's mean table stays cached for the vcov pass and
+  * joins, by broadcast up to 2M levels and by a shuffle join of the fact
+  * table above that.
   */
 object Dbreg {
 
@@ -336,88 +340,28 @@ object Dbreg {
       d.cols.map(c => ModelMatrix.displayName(c.name) -> c.col).toMap)
   }
 
-  /** Demean / within strategy, 1-2 FE (reference dbreg.R:874-1235). */
+  /** Demean / within strategy, 1-2 FE (reference dbreg.R:874-1235).
+    * Two FE take unit, time and overall means from ONE GROUPING SETS
+    * ((fe1),(fe2),()) aggregate: exact on balanced panels. */
   private def fitDemean(f: Formula, base: DataFrame, v: Vcov, ssc: String): DbregResult = {
     val cluster = v match { case Vcov.Cluster(c) => Seq(c); case _ => Nil }
     val d0 = buildDesign(base, f, f.fe ++ cluster, intercept = false)
     val valueCols = Y +: d0.xNames
-
-    def meansOver(keys: Seq[String], suffix: String): DataFrame =
-      d0.df
-        .groupBy(keys.map(col): _*)
-        .agg(
-          avg(valueCols.head).as(valueCols.head + suffix),
-          valueCols.tail.map(c => avg(c).as(c + suffix)): _*)
-
-    val dispToInt = d0.displayNames.zip(d0.xNames).toMap
-
-    // FE intercepts for prediction: α_g = ȳ_g − x̄_g'β̂ over kept terms
-    def alphaAdj(res: DbregResult, suffix: String): Column =
-      res.coeftable
-        .map(r => lit(r.estimate) * col(dispToInt(r.term) + suffix))
-        .reduceOption(_ + _)
-        .getOrElse(lit(0.0))
-
-    val (demeaned, nFe1, nFe2, cleanup, alphaBuilder) = f.fe match {
-      case Seq(fe1) =>
-        val gm = meansOver(Seq(fe1), "_m").persist(StorageLevel.MEMORY_AND_DISK)
-        val n1 = gm.count()
-        val joined = withMeanColumns(d0.df, fe1, gm, n1, valueCols.map(_ + "_m"))
-        val tilde = cluster.map(col) ++
-          valueCols.map(c => (col(c) - col(c + "_m")).as(c))
-        val builder = (res: DbregResult) => {
-          val alpha = gm.select(col(fe1), (col(Y + "_m") - alphaAdj(res, "_m")).as("__g_alpha"))
-          // left join: unseen FE levels yield a visible null fit, not a
-          // silently dropped row
-          ((nd: DataFrame) => nd.join(broadcast(alpha), Seq(fe1), "left"), col("__g_alpha"))
-        }
-        (joined.select(tilde: _*), n1, 1L, () => { gm.unpersist(); () }, builder)
-      case Seq(fe1, fe2) =>
-        // unit means, time means AND overall means from ONE pass over the
-        // base via GROUPING SETS ((fe1),(fe2),()) — at cluster scale this
-        // replaces three scans of the fact table with one
-        val gsets = d0.df
-          .groupingSets(Seq(Seq(col(fe1)), Seq(col(fe2)), Seq.empty), col(fe1), col(fe2))
-          .agg(
-            avg(valueCols.head).as(valueCols.head + "_gs"),
-            valueCols.tail.map(c => avg(c).as(c + "_gs")) :+ grouping_id().as("__gid"): _*)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        // grouping_id bit = 1 when the column is aggregated away:
-        // {fe1} → 0b01, {fe2} → 0b10, {} → 0b11
-        def slice(gid: Int, keep: Seq[String], suffix: String): DataFrame =
-          gsets.filter(col("__gid") === gid)
-            .select(keep.map(col) ++
-              valueCols.map(c => col(c + "_gs").as(c + suffix)): _*)
-        val um = slice(1, Seq(fe1), "_u")
-        val tm = slice(2, Seq(fe2), "_t")
-        val om = slice(3, Nil, "_o")
-        val n1 = um.count(); val n2 = tm.count()
-        // overall means: exactly one row — always inline as literals
-        val omRow = om.collect()(0)
-        val withU = withMeanColumns(d0.df, fe1, um, n1, valueCols.map(_ + "_u"))
-        val withT = withMeanColumns(withU, fe2, tm, n2, valueCols.map(_ + "_t"))
-        val joined = withT.select(withT.columns.toIndexedSeq.map(col) ++
-          valueCols.map(c => lit(omRow.getAs[Double](c + "_o")).as(c + "_o")): _*)
-        val tilde = cluster.map(col) ++
-          valueCols.map(c => (col(c) - col(c + "_u") - col(c + "_t") + col(c + "_o")).as(c))
-        val builder = (res: DbregResult) => {
-          val au = um.select(col(fe1), (col(Y + "_u") - alphaAdj(res, "_u")).as("__g_au"))
-          val at = tm.select(col(fe2), (col(Y + "_t") - alphaAdj(res, "_t")).as("__g_at"))
-          val ag = om.select((col(Y + "_o") - alphaAdj(res, "_o")).as("__g_ag"))
-          val pre = (nd: DataFrame) =>
-            nd.join(broadcast(au), Seq(fe1), "left")
-              .join(broadcast(at), Seq(fe2), "left")
-              .crossJoin(broadcast(ag))
-          (pre, col("__g_au") + col("__g_at") - col("__g_ag"))
-        }
-        (joined.select(tilde: _*), n1, n2,
-          () => { gsets.unpersist(); () }, builder)
-      case other =>
-        throw new IllegalArgumentException(s"demean supports 1-2 FE, got ${other.length}")
+    val gm = groupMeans(d0.df, f.fe, valueCols, overall = f.fe.length == 2)
+    val demeaned = gm.byKey match {
+      case Seq(um) =>
+        um.attach(d0.df, "_m").select(cluster.map(col) ++
+          valueCols.map(c => (col(c) - col(c + "_m")).as(c)): _*)
+      case Seq(um, tm) =>
+        // an empty input has no overall row; finish refuses it below
+        def om(c: String) = gm.overall.fold(Double.NaN)(_.getAs[Double](c))
+        tm.attach(um.attach(d0.df, "_u"), "_t").select(cluster.map(col) ++
+          valueCols.map(c => (col(c) - col(c + "_u") - col(c + "_t") +
+            lit(om(c))).as(c)): _*)
     }
 
     val mom = MomentsKernel.compute(demeaned, Y, d0.xNames, intercept = false)
-    val dfFe = nFe1.toDouble + nFe2.toDouble - 1.0
+    val dfFe = gm.byKey.map(_.levels.toDouble).sum - (f.fe.length - 1).toDouble
     val res = finish(f, d0.copy(df = demeaned), mom, v, ssc,
       strategy = "demean",
       nobs = mom.nRows, nobsOrig = mom.nRows,
@@ -425,13 +369,29 @@ object Dbreg {
       dfResOf = (n, pKept) => math.max(n - pKept - dfFe, 1.0),
       clusterK = (pKept, nested) => pKept + dfFe - nested,
       nestedBase = Some(base))
-    cleanup()
-    val (preJoin, offset) = alphaBuilder(res)
+    gm.release()
+    // FE intercepts for prediction: α_g = ȳ_g − x̄_g'β̂ over kept terms,
+    // from the means re-attached to new data (an unseen level reads null);
+    // two FE add the unit and time intercepts and subtract the overall one
+    val dispToInt = d0.displayNames.zip(d0.xNames).toMap
+    def alpha(mean: String => Column): Column = mean(Y) - res.coeftable
+      .map(r => lit(r.estimate) * mean(dispToInt(r.term))).reduceOption(_ + _).getOrElse(lit(0.0))
+    withFePredictor(res, d0,
+      gm.byKey.zipWithIndex.map { case (m, i) =>
+        ((nd: DataFrame) => m.attach(nd, s"_a$i", "left"), alpha(c => col(c + s"_a$i")))
+      } ++ gm.overall.map(r => (identity[DataFrame] _, -alpha(c => lit(r.getAs[Double](c))))))
+  }
+
+  /** The FE-absorbing predictor (demean, hdfe): x'β̂ plus the per-FE
+    * intercept parts (a pre-join and a column each); point predictions
+    * only, as in the reference. */
+  private def withFePredictor(res: DbregResult, d0: Design,
+      alphas: Seq[(DataFrame => DataFrame, Column)]): DbregResult =
     withLinearPredictor(res,
       d0.cols.map(c => ModelMatrix.displayName(c.name) -> c.col).toMap,
-      preJoin = preJoin, offsetCol = Some(offset),
+      preJoin = nd => alphas.foldLeft(nd) { case (d, (pj, _)) => pj(d) },
+      offsetCol = Some(alphas.map(_._2).reduce(_ + _)),
       intervalsSupported = false)
-  }
 
   /** K-way / high-cardinality fixed effects via ALTERNATING PROJECTIONS
     * (Guimarães & Portugal 2010; the fixest/reghdfe demeaning loop
@@ -448,11 +408,12 @@ object Dbreg {
     * transform). One FE converges in exactly one sweep; K ≥ 2 typically
     * needs a handful.
     *
-    * Scale shape: each sweep is K keyed mean aggregates + K mean-attach
-    * steps over the (cluster?, fe*, y, X) projection — the group-mean
-    * machinery J1 already uses. The attach tier decides the sweep cost:
+    * Scale shape: each sweep is K [[groupMeans]] queries + K mean-attach
+    * steps over the (cluster?, fe*, y, X) projection; each query also
+    * returns the FE's level count, which the first sweep records for the
+    * df bookkeeping. The attach tier decides the sweep cost:
     *  - ≤64 levels (the InlineMeansMaxLevels tier): the means COLLECT
-    *    (one job — the convergence statistic folds out of the same rows
+    *    (the convergence statistic folds out of the same rows
     *    driver-side) and attach as a literal lookup PROJECTION — no join,
     *    no shuffle, and crucially NO lineage checkpoint: re-deriving a
     *    chain of codegen'd projections from the scan is far cheaper than
@@ -507,13 +468,8 @@ object Dbreg {
     val valueCols = Y +: d0.xNames
     val carry = (f.fe ++ cluster).distinct
 
-    // one probe: level count per FE (df bookkeeping)
-    val levAggs = f.fe.map(fe => countDistinct(col(fe)).as(s"__l_$fe"))
-    val levRow = d0.df.agg(levAggs.head, levAggs.tail: _*).collect()(0)
-    val levels = f.fe.indices.map(levRow.getLong)
-    val dfFe = levels.map(_.toDouble).sum - (f.fe.length - 1).toDouble
-
-    val meanCols = valueCols.map(_ + "_m")
+    // level count per FE (df bookkeeping), from each step's means query
+    val levels = Array.fill(f.fe.length)(0L)
     var cur = d0.df
     // shuffle-tier gm released one step later (its reference is cut by the
     // step's stage); broadcast-tier gms stay cached only until the NEXT
@@ -523,9 +479,9 @@ object Dbreg {
     // the post-last-stage tables cur still probes; on stage they move to
     // `pending`, whose release() runs only after the next action
     // materializes the checkpoint.
-    var pending: List[DataFrame] = Nil
-    var held: List[DataFrame] = Nil
-    def release(): Unit = { pending.foreach(_.unpersist()); pending = Nil }
+    var pending: List[GroupMeans] = Nil
+    var held: List[GroupMeans] = Nil
+    def release(): Unit = { pending.foreach(_.release()); pending = Nil }
     // per-FE accumulated mean tables (FE-intercept recovery — see the
     // Prediction paragraph above): inline tier accumulates driver-side
     // (≤64 entries), join tiers as a level-sized running full-outer sum,
@@ -542,20 +498,22 @@ object Dbreg {
         (sweep == 0 || lastSweepMax >= tol * math.max(1.0, scale0))) {
       var sweepMax = 0.0
       f.fe.zipWithIndex.foreach { case (fe, fi) =>
-        val gm = cur.groupBy(col(fe))
-          .agg(
-            avg(valueCols.head).as(valueCols.head + "_m"),
-            valueCols.tail.map(c => avg(c).as(c + "_m")): _*)
-        val shuffleTier = levels(fi) > BroadcastMeansMaxLevels
-        val subtracted =
-          if (levels(fi) <= InlineMeansMaxLevels) {
-            // inline tier: ONE job (collect), statistic from the same rows
-            val rows = gm.collect()
+        // the level count comes with the first sweep's means; up to 64
+        // levels the mean rows come back (the convergence statistic folds
+        // out of them driver-side). The step's first query materializes
+        // any pending stage
+        val gm = groupMeans(cur, Seq(fe), valueCols,
+          known = if (sweep == 0) None else Some(levels(fi)))
+        val m = gm.byKey.head
+        levels(fi) = m.levels
+        val shuffleTier = m.levels > BroadcastMeansMaxLevels
+        m.rows match {
+          case Some(rows) =>
             release()
             rows.foreach { r =>
               val acc = accMaps(fi).getOrElseUpdate(r.getAs[Any](fe),
                 Array.fill(valueCols.length)(0.0))
-              meanCols.zipWithIndex.foreach { case (c, i) =>
+              valueCols.zipWithIndex.foreach { case (c, i) =>
                 val v = r.getAs[Double](c)
                 if (!v.isNaN) {
                   sweepMax = math.max(sweepMax, math.abs(v))
@@ -563,24 +521,22 @@ object Dbreg {
                 }
               }
             }
-            inlineMeanLookup(cur, fe, rows, meanCols)
-          } else {
-            val p = gm.persist(StorageLevel.MEMORY_AND_DISK)
-            val nLev = p.count() // materializes any pending stage
-            release()
+          case None =>
+            val p = m.table
             val mxRow = p
-              .agg(greatest(meanCols.map(c => max(abs(col(c)))) :+ lit(0.0): _*))
+              .agg(greatest(valueCols.map(c => max(abs(col(c)))) :+ lit(0.0): _*))
               .collect()(0)
+            release()
             if (!mxRow.isNullAt(0)) sweepMax = math.max(sweepMax, mxRow.getDouble(0))
             val stepAcc = p.select(
-              col(fe) +: valueCols.indices.map(i => col(meanCols(i)).as(accCols(i))): _*)
+              col(fe) +: valueCols.indices.map(i => col(valueCols(i)).as(accCols(i))): _*)
             val merged = accDfs(fi) match {
               case None => graft.Staging.stage(stepAcc)
               case Some(a) =>
                 graft.Staging.stage(a
                   .join(p.select(
                     col(fe) +: valueCols.indices.map(i =>
-                      col(meanCols(i)).as(s"__st$i")): _*), Seq(fe), "full_outer")
+                      col(valueCols(i)).as(s"__st$i")): _*), Seq(fe), "full_outer")
                   .select(col(fe) +: valueCols.indices.map(i =>
                     (coalesce(col(accCols(i)), lit(0.0)) +
                       coalesce(col(s"__st$i"), lit(0.0))).as(accCols(i))): _*))
@@ -590,10 +546,9 @@ object Dbreg {
             // not force a gm recompute through the accumulator's lineage)
             merged.count()
             accDfs(fi) = Some(merged)
-            if (shuffleTier) pending ::= p else held ::= p
-            withMeanColumns(cur, fe, p, nLev, meanCols)
-          }
-        val next = subtracted.select(
+            if (shuffleTier) pending ::= gm else held ::= gm
+        }
+        val next = m.attach(cur, "_m").select(
           carry.map(col) ++
             valueCols.map(c => (col(c) - col(c + "_m")).as(c)): _*)
         // stage after every SHUFFLE-join step (re-running the shuffle
@@ -636,6 +591,7 @@ object Dbreg {
           f"${tol * math.max(1.0, scale0)}%.3e); estimates are a truncated " +
           "projection — raise hdfeMaxSweeps")
 
+    val dfFe = levels.map(_.toDouble).sum - (f.fe.length - 1).toDouble
     val mom = MomentsKernel.compute(cur, Y, d0.xNames, intercept = false)
     val res = finish(f, d0.copy(df = cur), mom, v, ssc,
       strategy = "hdfe",
@@ -674,15 +630,10 @@ object Dbreg {
         }
       }
     release()
-    held.foreach(_.unpersist())
-    val preJoin = (nd: DataFrame) =>
-      alphaParts.foldLeft(nd) { case (d, (pj, _)) => pj(d) }
-    val offset = alphaParts.map(_._2).reduce(_ + _)
-    withLinearPredictor(
+    held.foreach(_.release())
+    withFePredictor(
       res.copy(hdfeSweeps = Some(sweepsRun), hdfeConverged = Some(converged)),
-      d0.cols.map(c => ModelMatrix.displayName(c.name) -> c.col).toMap,
-      preJoin = preJoin, offsetCol = Some(offset),
-      intervalsSupported = false)
+      d0, alphaParts)
   }
 
   /** Mundlak / correlated-random-effects strategy (reference dbreg.R:1237-1502). */
@@ -691,25 +642,11 @@ object Dbreg {
     val cluster = v match { case Vcov.Cluster(c) => Seq(c); case _ => Nil }
     val d0 = buildDesign(base, f, f.fe ++ cluster, intercept = false)
 
-    var aug = d0.df
-    val caches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val meansByFe = scala.collection.mutable.ArrayBuffer.empty[(String, DataFrame)]
-    val barNames = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    f.fe.foreach { fe =>
-      val ms = d0.df
-        .groupBy(col(fe))
-        .agg(
-          avg(d0.xNames.head).as(s"${d0.xNames.head}_bar_$fe"),
-          d0.xNames.tail.map(c => avg(c).as(s"${c}_bar_$fe")): _*)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val nLev = ms.count()
-      caches += ms
-      meansByFe += ((fe, ms))
-      aug = withMeanColumns(aug, fe, ms, nLev, d0.xNames.map(c => s"${c}_bar_$fe"))
-      d0.xNames.zip(d0.displayNames).foreach { case (xn, dn) =>
-        barNames += ((s"${xn}_bar_$fe", s"${dn}_bar_$fe"))
-      }
-    }
+    // every FE's x means from one aggregate (GROUPING SETS for K ≥ 2)
+    val gm = groupMeans(d0.df, f.fe, d0.xNames)
+    val aug = gm.byKey.foldLeft(d0.df)((acc, m) => m.attach(acc, s"_bar_${m.key}"))
+    val barNames = for (fe <- f.fe; (xn, dn) <- d0.xNames.zip(d0.displayNames))
+      yield (s"${xn}_bar_$fe", s"${dn}_bar_$fe")
     val interceptName = "__g_const"
     val augWithConst = aug.withColumn(interceptName, lit(1.0))
     val xAll = (interceptName +: d0.xNames) ++ barNames.map(_._1)
@@ -724,17 +661,15 @@ object Dbreg {
       dfResOf = (n, pKept) => math.max(n - pKept, 1.0),
       clusterK = (pKept, _) => pKept,
       nestedBase = Some(base))
-    caches.foreach(_.unpersist())
-    // prediction: original x expressions + group-mean columns re-joined
+    gm.release()
+    // prediction: original x expressions + group-mean columns re-attached
+    // (an unseen level gets null means, so a null fit)
     val termCols =
       ((("(Intercept)", lit(1.0))) +:
         d0.cols.map(c => (ModelMatrix.displayName(c.name), c.col))) ++
-        barNames.toList.map { case (internal, display) => (display, col(internal)) }
-    val meansList = meansByFe.toList
+        barNames.map { case (internal, display) => (display, col(internal)) }
     val preJoin = (nd: DataFrame) =>
-      meansList.foldLeft(nd) { case (acc, (fe, ms)) =>
-        acc.join(broadcast(ms), Seq(fe), "left")
-      }
+      gm.byKey.foldLeft(nd)((acc, m) => m.attach(acc, s"_bar_${m.key}", "left"))
     withLinearPredictor(res, termCols.toMap, preJoin = preJoin)
   }
 
@@ -951,12 +886,14 @@ object Dbreg {
   private def countNestedFeLevels(base: DataFrame, fe: Seq[String], cluster: String): Double =
     NestedFe.count(base, fe, cluster)
 
-  /** Broadcast aggregate tables when plausibly small; group-mean tables
-    * with more rows flow through a shuffle join instead. */
+  // ------------------------------------------------------------ group means
+
   /** Mean tables at or below this many rows broadcast; above it they
     * shuffle-join (and fitHdfe stages per step to cut the reference). */
   private val BroadcastMeansMaxLevels = 2000000L
 
+  /** Broadcast a level-sized table when plausibly small; larger tables
+    * flow through a shuffle join instead. */
   private def maybeBroadcast(df: DataFrame, nRows: Long): DataFrame =
     if (nRows <= BroadcastMeansMaxLevels) broadcast(df) else df
 
@@ -969,38 +906,100 @@ object Dbreg {
     * when L is tiny. Typical FE dimensions (month, region, flag) are. */
   private val InlineMeansMaxLevels = 64L
 
-  /** Attach `meanCols` from a per-`keyCol` means table to `df` — flat
-    * output columns either way. Small tables inline as one staged literal
-    * when-chain producing a struct (staged: the multi-use struct attribute
-    * blocks CollapseProject, so the chain evaluates once per row); larger
-    * tables broadcast- or shuffle-join. */
-  private def withMeanColumns(
-      df: DataFrame,
-      keyCol: String,
-      means: DataFrame,
-      nLev: Long,
-      meanCols: Seq[String]
-  ): DataFrame =
-    if (nLev <= InlineMeansMaxLevels)
-      inlineMeanLookup(df, keyCol, means.collect(), meanCols)
-    else df.join(maybeBroadcast(means, nLev), Seq(keyCol))
+  /** One FE key's means of `valueCols` (named as the value columns):
+    * every (key, means…) row in `rows` when `levels` ≤
+    * InlineMeansMaxLevels, else None and the level-sized `table` joins. */
+  private final case class FeMeans(
+      key: String,
+      levels: Long,
+      valueCols: Seq[String],
+      rows: Option[Array[Row]],
+      table: DataFrame
+  ) {
 
-  /** The inline tier of [[withMeanColumns]] from PRE-COLLECTED mean rows —
-    * callers that already hold the rows (fitHdfe folds its convergence
-    * statistic out of the same collect) skip the second aggregate job. */
-  private def inlineMeanLookup(
+    /** `df` plus a column `c + suffix` per mean: the inline literal lookup
+      * (one struct-valued when-chain; an unseen level reads null), else a
+      * join of the mean table, broadcast up to BroadcastMeansMaxLevels. */
+    def attach(df: DataFrame, suffix: String, joinType: String = "inner"): DataFrame =
+      rows match {
+        case Some(rs) =>
+          val lookup = rs.foldLeft(struct(valueCols.map(c => lit(null).cast("double").as(c)): _*)) {
+            (acc, r) => when(col(key) === lit(r.getAs[Any](key)),
+              struct(valueCols.map(c => lit(r.getAs[Double](c)).as(c)): _*)).otherwise(acc)
+          }
+          df.withColumn("__lk", lookup).select(df.columns.toIndexedSeq.map(col) ++
+            valueCols.map(c => col("__lk")(c).as(c + suffix)): _*)
+        case None =>
+          val t = table.select(col(key) +: valueCols.map(c => col(c).as(c + suffix)): _*)
+          df.join(maybeBroadcast(t, levels), Seq(key), joinType)
+      }
+  }
+
+  /** Every FE key's means, the overall means row when asked for, and
+    * `release()` for the aggregate (still cached only if a key joins). */
+  private final case class GroupMeans(byKey: Seq[FeMeans], overall: Option[Row], agg: DataFrame) {
+    def release(): Unit = { agg.unpersist(); () }
+  }
+
+  /** The group-means step of every FE strategy (PAPER §0's group-mean
+    * CTEs): ONE aggregate of `valueCols` — GROUP BY for one key, else
+    * GROUPING SETS over the keys, plus the empty set when `overall` — and
+    * ONE bounded collect of each key's level count and, up to
+    * InlineMeansMaxLevels levels, its mean rows. Only when a key
+    * overflows does the aggregate stay cached (moments and vcov passes).
+    * `known`: one key's level count from an earlier call (fitHdfe's later
+    * sweeps) — inline a plain collect, else no query at all. */
+  private def groupMeans(
       df: DataFrame,
-      keyCol: String,
-      rows: Array[org.apache.spark.sql.Row],
-      meanCols: Seq[String]
-  ): DataFrame = {
-    val nullStruct = struct(meanCols.map(f => lit(null).cast("double").as(f)): _*)
-    val lookup = rows.foldLeft(nullStruct) { (acc, r) =>
-      when(col(keyCol) === lit(r.getAs[Any](keyCol)),
-        struct(meanCols.map(f => lit(r.getAs[Double](f)).as(f)): _*))
-        .otherwise(acc)
+      keys: Seq[String],
+      valueCols: Seq[String],
+      overall: Boolean = false,
+      known: Option[Long] = None
+  ): GroupMeans = {
+    val avgs = valueCols.map(c => avg(col(c)).as(c))
+    // grouping_id bit k-1-i is 1 when key i is aggregated away
+    val k = keys.length
+    val all = (1L << k) - 1L
+    val keyGids = keys.indices.map(i => all - (1L << (k - 1 - i)))
+    val means =
+      if (k == 1 && !overall)
+        df.groupBy(col(keys.head)).agg(avgs.head, avgs.tail: _*)
+          .withColumn("__gid", lit(keyGids.head))
+      else
+        df.groupingSets(keys.map(c => Seq(col(c))) ++ (if (overall) Seq(Nil) else Nil),
+            keys.map(col): _*)
+          .agg(avgs.head, avgs.tail :+ grouping_id().as("__gid"): _*)
+    // a known inline key needs no cache: one plain collect
+    val agg =
+      if (known.exists(_ <= InlineMeansMaxLevels)) means
+      else means.persist(StorageLevel.MEMORY_AND_DISK)
+    def gidOf(r: Row) = r.getAs[Long]("__gid")
+    val (levelsOf, meanRows) = known match {
+      case Some(n) =>
+        (Map(keyGids.head -> n), if (n <= InlineMeansMaxLevels) agg.collect() else Array.empty[Row])
+      case None =>
+        // one pass over the aggregate's partitions: each keeps ≤ cap rows
+        // per grouping set, and a set's row count in the partition rides
+        // on its first kept row — a set with ≤ cap rows in all is in hand
+        val (cap, gi, width) = (InlineMeansMaxLevels, agg.schema.fieldIndex("__gid"), agg.schema.length)
+        val rows = agg.mapPartitions { it =>
+          val n = scala.collection.mutable.HashMap.empty[Long, Long]
+          val kept = it.filter { r =>
+            val c = n.getOrElse(r.getLong(gi), 0L)
+            n(r.getLong(gi)) = c + 1
+            c < cap
+          }.toVector
+          kept.iterator.map(r => Row.fromSeq(r.toSeq :+ n.remove(r.getLong(gi)).getOrElse(null)))
+        }(Encoders.row(agg.schema.add("__levels", LongType))).collect()
+        (rows.filterNot(_.isNullAt(width)).groupMapReduce(gidOf)(_.getLong(width))(_ + _), rows)
     }
-    df.withColumn("__lk", lookup)
-      .select(df.columns.toIndexedSeq.map(col) ++ meanCols.map(f => col("__lk")(f).as(f)): _*)
+    val byKey = keys.zip(keyGids).map { case (key, g) =>
+      val n = levelsOf.getOrElse(g, 0L)
+      FeMeans(key, n, valueCols,
+        if (n <= InlineMeansMaxLevels) Some(meanRows.filter(gidOf(_) == g)) else None,
+        agg.filter(col("__gid") === g).select(col(key) +: valueCols.map(col): _*))
+    }
+    if (byKey.forall(_.rows.isDefined)) agg.unpersist()
+    GroupMeans(byKey, if (overall) meanRows.find(gidOf(_) == all) else None, agg)
   }
 }

@@ -327,6 +327,19 @@ class DbregSpec extends SparkTestBase {
     // mundlak with a >64-level mean join: CRE slope equals the within slope
     val fitM = Dbreg.fit("y ~ x1 | unit", wdf, strategy = "mundlak")
     assertClose(fitM.coef("x1"), fit1.coef("x1"), 1e-7, "wide mundlak beta")
+    // 2-FE mundlak from one GROUPING SETS aggregate with mixed tiers: unit
+    // means join (120 levels), time means inline (3) — the dense CRE
+    // regression of y on 1, x1 and both group means of x1
+    def meanOf(key: ((Double, Double, String, String)) => String) = {
+      val means = rows.groupBy(key).map { case (k, rs) => k -> rs.map(_._2).sum / rs.size }
+      (r: (Double, Double, String, String)) => means(key(r))
+    }
+    val (bm, sem, _) = dense(Seq(meanOf(_._3), meanOf(_._4)), m - 4.0)
+    val fitM2 = Dbreg.fit("y ~ x1 | unit + time", wdf, strategy = "mundlak")
+    assertClose(fitM2.coef("x1"), bm(1), 1e-7, "wide 2-FE mundlak beta")
+    assertClose(fitM2.se("x1"), sem(1), 1e-7, "wide 2-FE mundlak se")
+    assertClose(fitM2.coef("x1_bar_unit"), bm(2), 1e-7, "wide 2-FE mundlak unit-mean beta")
+    assertClose(fitM2.coef("x1_bar_time"), bm(3), 1e-7, "wide 2-FE mundlak time-mean beta")
   }
 
   test("compress with FE equals demean coefficients") {

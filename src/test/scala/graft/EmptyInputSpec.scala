@@ -125,6 +125,15 @@ class EmptyInputSpec extends SparkTestBase {
       Dbreg.fit("y ~ x", emptyPanel, vcov = "hc1", strategy = "compress")
     }
     assert(c.getMessage.toLowerCase.contains("no rows"), c.getMessage)
+    // the FE strategies: the group-means step finds no levels (and no
+    // overall-means row for two-FE demean); the moments pass refuses
+    Seq("y ~ x | g" -> "demean", "y ~ x | g + h" -> "demean",
+        "y ~ x | g + h" -> "mundlak", "y ~ x | g" -> "hdfe").foreach { case (f, s) =>
+      val fe = intercept[IllegalArgumentException] {
+        Dbreg.fit(f, emptyPanel.withColumn("h", col("g")), strategy = s)
+      }
+      assert(fe.getMessage.toLowerCase.contains("no rows"), s"$s $f: ${fe.getMessage}")
+    }
     val r = intercept[IllegalArgumentException] {
       graft.reg.Rlm.fit("y ~ x", emptyPanel)
     }

@@ -15,7 +15,8 @@ import graft.reg.{Dbreg, ElasticNet, Glm, Qreg, Ridge, Rlm}
 
 /** Plan-shape pins for the rounds-16/17 plan wins (OPTIMIZATION_r16.md /
   * OPTIMIZATION_r17.md, section numbers cited per test) and for the
-  * regression engine's cluster meat, demean attach tiers and scan pruning.
+  * regression engine's query counts, cluster meat, FE-mean attach tiers
+  * and scan pruning.
   * Each asserts on [[PlanStats]] counts, so reverting the win fails the
   * test. Properties
   * other suites already pin stay there: the kNN / BM25 WindowGroupLimit
@@ -147,11 +148,12 @@ class PlanShapeSpec extends SparkTestBase {
 
   // ---------------------------------------------------------- regression
 
+  // fe × t is balanced: one row per (fe, t) cell
   private def panel(levels: Int, perLevel: Int) =
     (0 until levels * perLevel).map { i =>
       val x = (i * 7 % 11).toDouble
-      (1.0 + 0.5 * x + (i % levels) * 0.01 + (i % 3) * 0.1, x, i % levels)
-    }.toDF("y", "x", "fe")
+      (1.0 + 0.5 * x + (i % levels) * 0.01 + (i % 3) * 0.1, x, i % levels, i / levels)
+    }.toDF("y", "x", "fe", "t")
 
   test("moments cluster meat is one query with no cached score table") {
     // the per-cluster score aggregate feeds G and Σ sₖsₖᵀ in the same
@@ -251,24 +253,62 @@ class PlanShapeSpec extends SparkTestBase {
       "Glm grouped" -> 5, "Qreg grouped" -> 6), counts)
   }
 
+  test("Dbreg fits run in the paper's one to three queries") {
+    // PAPER §0: a formula compiles into one to three aggregation queries.
+    // One query per action: the moments pass, the vcov meat, compress's
+    // factor-levels probe, and the FE strategies' group-means step (one
+    // aggregate over every FE key, one bounded collect). fe has 4 levels,
+    // t 30 (fe × t balanced), g 3 clusters — every FE inlines.
+    val df = panel(4, 30).withColumn("g", col("fe") % 3)
+    def queries(formula: String, strategy: String, vcov: String = "iid"): Int =
+      capturedQueries(spark) {
+        Dbreg.fit(formula, df, vcov = vcov, strategy = strategy); ()
+      }.size
+    val counts = Seq(
+      "moments iid" -> queries("y ~ x", "moments"),
+      "moments hc1" -> queries("y ~ x", "moments", "hc1"),
+      "moments ~g" -> queries("y ~ x", "moments", "~g"),
+      "compress iid" -> queries("y ~ x | fe", "compress"),
+      "compress hc1" -> queries("y ~ x | fe", "compress", "hc1"),
+      "demean 1-FE iid" -> queries("y ~ x | fe", "demean"),
+      "demean 1-FE hc1" -> queries("y ~ x | fe", "demean", "hc1"),
+      "demean 2-FE iid" -> queries("y ~ x | fe + t", "demean"),
+      "demean 2-FE hc1" -> queries("y ~ x | fe + t", "demean", "hc1"),
+      "mundlak 2-FE iid" -> queries("y ~ x | fe + t", "mundlak"),
+      "mundlak 2-FE hc1" -> queries("y ~ x | fe + t", "mundlak", "hc1"),
+      "hdfe 1-FE iid" -> queries("y ~ x | fe", "hdfe"))
+    assert(counts == Seq("moments iid" -> 1, "moments hc1" -> 2, "moments ~g" -> 2,
+      "compress iid" -> 2, "compress hc1" -> 3,
+      "demean 1-FE iid" -> 2, "demean 1-FE hc1" -> 3,
+      "demean 2-FE iid" -> 2, "demean 2-FE hc1" -> 3,
+      "mundlak 2-FE iid" -> 2, "mundlak 2-FE hc1" -> 3,
+      "hdfe 1-FE iid" -> 2), counts)
+  }
+
   test("demean attaches FE means without a join up to 64 levels, by broadcast above") {
-    // Dbreg.withMeanColumns tiers: ≤64 levels a literal lookup, up to 2M
-    // levels an explicit broadcast (asserted with the size-based
-    // auto-broadcast off, so the hint, not the table size, decides)
-    def joins(levels: Int): Seq[Map[String, Int]] = {
+    // Dbreg.groupMeans tiers: ≤64 levels a literal lookup from the
+    // collected mean rows, up to 2M levels an explicit broadcast (asserted
+    // with the size-based auto-broadcast off, so the hint, not the table
+    // size, decides). The two-FE fits read both keys from one GROUPING
+    // SETS aggregate; at 65 units the 4-level time key still inlines.
+    def joins(levels: Int, formula: String, strategy: String): Seq[Map[String, Int]] = {
       val df = panel(levels, 4)
       val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       try capturedQueries(spark) {
-        Dbreg.fit("y ~ x | fe", df, strategy = "demean"); ()
+        Dbreg.fit(formula, df, strategy = strategy); ()
       }.map { case (_, qe) => planStats(qe.executedPlan).joins }
       finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     }
-    val inline = joins(64)
-    assert(inline.forall(_.isEmpty), inline)
-    val broadcast = joins(65)
-    assert(broadcast.exists(_.nonEmpty), broadcast)
-    assert(broadcast.flatMap(_.keys).toSet == Set("BroadcastHashJoin"), broadcast)
+    Seq("y ~ x | fe" -> "demean", "y ~ x | fe + t" -> "demean",
+        "y ~ x | fe + t" -> "mundlak").foreach { case (formula, strategy) =>
+      val inline = joins(64, formula, strategy)
+      assert(inline.forall(_.isEmpty), s"$strategy $formula: $inline")
+      val broadcast = joins(65, formula, strategy)
+      assert(broadcast.exists(_.nonEmpty), s"$strategy $formula: $broadcast")
+      assert(broadcast.flatMap(_.keys).toSet == Set("BroadcastHashJoin"),
+        s"$strategy $formula: $broadcast")
+    }
   }
 
   test("a moments fit on parquet reads only the model columns, IsNotNull pushed") {

@@ -81,6 +81,30 @@ class PredictSpec extends SparkTestBase {
     assert(preds.forall(p => !p.isNaN && math.abs(p) < 100))
   }
 
+  test("demean and mundlak predictors on ≤64-level FEs plan no join and no training scan") {
+    // the FE intercepts and group means come from the fit's collected mean
+    // rows as literals: predicting never re-reads the training data
+    val dir = java.nio.file.Files.createTempDirectory("graft-predict").toString
+    try {
+      df.write.mode("overwrite").parquet(dir)
+      val train = spark.read.parquet(dir)
+      val newdata = spark.createDataFrame(DensePanel.rows.take(7))
+      Seq("y ~ x1 + x2 | unit" -> "demean", "y ~ x1 + x2 | unit + time" -> "demean",
+          "y ~ x1 + x2 | unit + time" -> "mundlak").foreach { case (formula, strategy) =>
+        val fit = Dbreg.fit(formula, train, strategy = strategy)
+        val plan = fit.predict(newdata).queryExecution.executedPlan
+        assert(PlanStats.planStats(plan).joinCount == 0, s"$strategy $formula: $plan")
+        assert(PlanStats.fileScans(plan).isEmpty, s"$strategy $formula: $plan")
+        // same predictions as on the training frame
+        val onNew = fit.predict(newdata).select("unit", "time", "fit").collect()
+          .map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
+        val onTrain = fit.predict(train).select("unit", "time", "fit").collect()
+          .map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
+        onNew.foreach { case (k, v) => assert(math.abs(v - onTrain(k)) < 1e-12, s"$k") }
+      }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
   test("demean intervals downgrade to point predictions (reference parity)") {
     val fit = Dbreg.fit("y ~ x1 | unit", df, strategy = "demean")
     val out = fit.predict(df, interval = "confidence")
