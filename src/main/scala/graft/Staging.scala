@@ -43,6 +43,15 @@ object Staging {
       df.checkpoint(eager = true)
     else df.localCheckpoint(eager = true)
 
+  /** Frees the blocks behind a frame [[stage]] returned, once nothing
+    * will read it again: a local checkpoint has no lineage to recompute
+    * from. A no-op on any other frame. */
+  def release(df: DataFrame): Unit = df.queryExecution.analyzed match {
+    case r: org.apache.spark.sql.execution.LogicalRDD =>
+      r.rdd.unpersist(blocking = false); ()
+    case _ => ()
+  }
+
   /** `df.staged` — drop-in for `df.localCheckpoint(false)` call sites. */
   implicit class StagedFrame(private val df: DataFrame) extends AnyVal {
     def staged: DataFrame = stage(df)

@@ -229,6 +229,15 @@ object Dedup {
       n: Int = 2,
       threshold: Double = 0.5,
       maxBucketSize: Option[Long] = Some(DefaultMaxBucketSize)
+  ): DataFrame =
+    minhashPairsOf(stagedShingleSets(df, idCol, textCol, n), threshold,
+      maxBucketSize)
+
+  /** [[minhashPairs]] over a [[stagedShingleSets]] table. */
+  private def minhashPairsOf(
+      keyed: DataFrame,
+      threshold: Double,
+      maxBucketSize: Option[Long]
   ): DataFrame = {
     // exact-class collapse: canonical fingerprint of the (sorted) shingle
     // set; one representative (min id) per class enters LSH. Shared with
@@ -236,9 +245,6 @@ object Dedup {
     // tokens) carry no n-gram evidence and never pair (fingerprinting the
     // empty set would unite every short doc into one spurious "exact"
     // class, which the pairwise oracle algebra rightly denies).
-    val keyed = keyedShingleSets(df, idCol, textCol, n)
-      .staged // not persist: lazily-returned, see PLANS.md §22
-      .filter(col("__fp").isNotNull) // post-barrier: no pushdown recompute
     val memb = keyed.select(col("__fp"), col("id"))
     // one keyed agg picks the representative AND carries its shingle array
     // (any member's works: signature/Jaccard are set-level invariants) —
@@ -484,7 +490,12 @@ object Dedup {
     * and fold new pair discoveries in with [[dupClusterStateMerge]]
     * instead of re-running pairs+CC per split. Persist `clusters` as
     * plain parquet (bucket by `id` if the downstream split join can't
-    * broadcast it). */
+    * broadcast it).
+    *
+    * Scale shape: the build is one CC run over the pair list; a merge
+    * costs what its NEW pairs cost (one bounded collect and one staged
+    * pass over the rows, see [[dupClusterStateMerge]]) — the state is
+    * read, never re-solved. */
   final case class DupClusterState(clusters: DataFrame)
 
   /** Build [[DupClusterState]]: one [[duplicateClusters]] run over the
@@ -493,33 +504,152 @@ object Dedup {
   def dupClusterState(pairs: DataFrame): DupClusterState =
     DupClusterState(duplicateClusters(pairs))
 
+  /** Largest contracted edge list [[dupClusterStateMerge]] solves on the
+    * driver. Up to this many edges come back in one bounded collect and
+    * union-find finishes there; above it the contracted edges go through
+    * [[duplicateClusters]]. At the bound the driver holds the collected
+    * rows (two ids and two flags each) plus a union-find map of up to
+    * 2M nodes: about 300 MB of heap for Long ids, the order of a compress
+    * fit at its 1M-cell `compressNmax` default. */
+  private val ClusterDriverMaxEdges = 1000000
+
   /** Fold NEW near-duplicate pairs into a [[DupClusterState]] — the
-    * monotone min-rep union: the state's own (id, cluster) rows are
-    * edges that preserve every old component's connectivity AND its
-    * full node set (each non-representative row carries the member,
-    * each representative appears as some row's cluster), so CC over
-    * (state rows ∪ new pairs) has exactly the components — and, the
-    * representative being the component MINIMUM id, exactly the labels
-    * — of CC over (old pairs ∪ new pairs). Spec-pinned: merged ≡
-    * rebuilt, and sequential merges ≡ one merge. New pairs can only
-    * join clusters (never split them — edges are monotone), which is
-    * what makes the split stability guarantee composable: a merge only
-    * ever moves the HIGHER merged cluster's members to the lower's
-    * split, never re-deals untouched keys.
+    * monotone min-rep union. Each old label is its component's MINIMUM
+    * id and edges only join components, so CONTRACTING every old
+    * cluster to its label loses nothing: the minimum over a merged
+    * component is the minimum over its contracted nodes. The result
+    * therefore has exactly the components and labels of CC over
+    * (old pairs ∪ new pairs). Spec-pinned: merged ≡ rebuilt, and
+    * sequential merges ≡ one merge, on both solve branches. New pairs
+    * can only join clusters (never split them — edges are monotone),
+    * which is what makes the split stability guarantee composable: a
+    * merge only ever moves the HIGHER merged cluster's members to the
+    * lower's split, never re-deals untouched keys. A pair with a NULL
+    * endpoint adds nothing.
     *
-    * Scale shape: the CC re-run is over (state + new-pair)-sized edges
-    * — dup-sized, never corpus-sized; nothing here touches a corpus. */
+    * Scale shape: priced by the NEW pairs, not the state.
+    *   - contract: each new pair's endpoints join `state.clusters`
+    *     (an endpoint with no state row keeps its own id and is
+    *     *fresh*) — one edge per new pair, no state rows;
+    *   - solve: the contracted edges come back in one `limit`-bounded
+    *     collect and union-find with min-label roots runs on the driver
+    *     (PAPER §0's shape, as the compress driver fit); above
+    *     `ClusterDriverMaxEdges` (1M) edges, or for id types the driver
+    *     cannot order as Spark does (anything but integral and string
+    *     ids; strings compare in UTF-8 byte order), [[duplicateClusters]]
+    *     runs over the contracted edges only;
+    *   - assemble: the state rows left-join the changed labels (a
+    *     broadcast local relation on the driver branch), the fresh
+    *     endpoints' rows are unioned in, and the result is staged once,
+    *     so it never reads the state's source files again (it can be
+    *     written over them).
+    * The driver branch runs two queries: the collect and the stage. */
   def dupClusterStateMerge(
       state: DupClusterState,
       newPairs: DataFrame
+  ): DupClusterState = mergeClusters(state, newPairs, ClusterDriverMaxEdges)
+
+  /** [[dupClusterStateMerge]] with its driver bound as a parameter, so
+    * specs can drive both solve branches (0 forces [[duplicateClusters]]
+    * whenever there is an edge). */
+  private[graft] def mergeClusters(
+      state: DupClusterState,
+      newPairs: DataFrame,
+      driverMaxEdges: Int
   ): DupClusterState = {
     require(Seq("id", "cluster").forall(state.clusters.columns.contains),
       s"state must carry (id, cluster), got ${state.clusters.columns.toSeq}")
-    val stateEdges = state.clusters
-      .filter(col("id") =!= col("cluster")) // self-loops add nothing
-      .select(col("id").as("id1"), col("cluster").as("id2"))
-    DupClusterState(duplicateClusters(
-      stateEdges.unionByName(newPairs.select(col("id1"), col("id2")))))
+    val cl = state.clusters.select(col("id"), col("cluster"))
+    // contract: (a, b) = the endpoints' current labels, fa/fb = "has no
+    // state row". An edge inside one old cluster carries nothing unless
+    // it brings a fresh node.
+    val contracted = newPairs
+      .select(col("id1"), col("id2"))
+      .filter(col("id1").isNotNull && col("id2").isNotNull)
+      .join(cl.select(col("id").as("id1"), col("cluster").as("__c1")), Seq("id1"), "left")
+      .join(cl.select(col("id").as("id2"), col("cluster").as("__c2")), Seq("id2"), "left")
+      .select(
+        coalesce(col("__c1"), col("id1")).as("a"),
+        coalesce(col("__c2"), col("id2")).as("b"),
+        col("__c1").isNull.as("fa"),
+        col("__c2").isNull.as("fb"))
+      .filter(col("a") =!= col("b") || col("fa") || col("fb"))
+    import org.apache.spark.sql.types._
+    val idType = contracted.schema("a").dataType
+    // the driver's order must be Spark's `min`: numeric for integral
+    // ids, UTF-8 byte order (not String.compareTo) for strings. The
+    // StringType pattern matches the default binary collation only
+    // (string types compare equal by collation)
+    val driverLt: Option[(Any, Any) => Boolean] = idType match {
+      case ByteType | ShortType | IntegerType | LongType =>
+        Some((x, y) => x.asInstanceOf[Number].longValue < y.asInstanceOf[Number].longValue)
+      case StringType =>
+        Some((x, y) => graft.functions.FreqItemsAgg.byteLt(
+          x.asInstanceOf[String], y.asInstanceOf[String]))
+      case _ => None
+    }
+    val onDriver = driverLt.flatMap { lt =>
+      val edges = contracted.limit(driverMaxEdges + 1).collect()
+      if (edges.length > driverMaxEdges) None else Some(minLabelRemap(edges, lt))
+    }
+    // one (__node, __label, __fresh) remap: every fresh node, and every
+    // old label whose component gained a lower minimum
+    val remap = onDriver match {
+      case Some(rows) =>
+        val schema = StructType(Seq(StructField("__node", idType, nullable = false),
+          StructField("__label", idType, nullable = false),
+          StructField("__fresh", BooleanType, nullable = false)))
+        state.clusters.sparkSession.createDataFrame(
+          java.util.Arrays.asList(rows: _*), schema)
+      case None =>
+        val edges = contracted.staged // CC input and the fresh flags
+        val freshIds = edges.filter(col("fa")).select(col("a").as("id"))
+          .union(edges.filter(col("fb")).select(col("b").as("id")))
+          .distinct()
+          .withColumn("__fresh", lit(true))
+        duplicateClusters(edges.select(col("a").as("id1"), col("b").as("id2")))
+          .join(freshIds, Seq("id"), "left")
+          .select(col("id").as("__node"), col("cluster").as("__label"),
+            coalesce(col("__fresh"), lit(false)).as("__fresh"))
+          .filter(col("__fresh") || col("__node") =!= col("__label"))
+    }
+    val changed = remap.filter(!col("__fresh"))
+    val old = cl.join(if (onDriver.isDefined) broadcast(changed) else changed,
+        col("cluster") === col("__node"), "left")
+      .select(col("id"), coalesce(col("__label"), col("cluster")).as("cluster"))
+    val added = remap.filter(col("__fresh"))
+      .select(col("__node").as("id"), col("__label").as("cluster"))
+    DupClusterState(old.unionByName(added).staged)
+  }
+
+  /** Union-find with min-label roots over collected contracted edges
+    * (a, b, fa, fb): one (node, label, fresh) row per fresh node and per
+    * old label whose component minimum is lower than itself. */
+  private def minLabelRemap(
+      edges: Array[org.apache.spark.sql.Row],
+      lt: (Any, Any) => Boolean
+  ): Array[org.apache.spark.sql.Row] = {
+    val parent = scala.collection.mutable.HashMap.empty[Any, Any]
+    val fresh = scala.collection.mutable.HashSet.empty[Any]
+    def find(x: Any): Any = {
+      var root = x
+      while (parent(root) != root) root = parent(root)
+      var y = x
+      while (y != root) { val next = parent(y); parent(y) = root; y = next }
+      root
+    }
+    edges.foreach { e =>
+      val (a, b) = (e.get(0), e.get(1))
+      parent.getOrElseUpdate(a, a)
+      parent.getOrElseUpdate(b, b)
+      if (e.getBoolean(2)) fresh += a
+      if (e.getBoolean(3)) fresh += b
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { if (lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
+    }
+    parent.keysIterator.map(v => (v, find(v), fresh(v)))
+      .collect { case (v, l, f) if f || l != v => org.apache.spark.sql.Row(v, l, f) }
+      .toArray
   }
 
   /** Incremental dedup: flag every NEW document that exactly or nearly
@@ -825,6 +955,13 @@ object Dedup {
       n: Int,
       threshold: Double
   ): DataFrame = {
+    checkMinhashState(state, n)
+    againstStateMatchesOf(state, stagedShingleSets(newDocs, idCol, textCol, n),
+      threshold)
+  }
+
+  /** Refuses a [[MinhashDedupState]] that cannot be probed at width `n`. */
+  private def checkMinhashState(state: MinhashDedupState, n: Int): Unit = {
     require(Seq("__fp", "cid", "csharr", "shingle_n")
         .forall(state.reps.columns.contains),
       s"state.reps must carry (__fp, cid, csharr, shingle_n), got ${state.reps.columns.toSeq}")
@@ -849,9 +986,15 @@ object Dedup {
       require(sn == n,
         s"state was built with n = $sn, apply called with n = $n")
     }
-    val ns = keyedShingleSets(newDocs, idCol, textCol, n)
-      .staged // reused: 3 branches
-      .filter(col("__fp").isNotNull) // post-barrier: no pushdown recompute
+  }
+
+  /** [[againstStateMatches]] over a [[stagedShingleSets]] table of the new
+    * docs, read by three branches. */
+  private def againstStateMatchesOf(
+      state: MinhashDedupState,
+      ns: DataFrame,
+      threshold: Double
+  ): DataFrame = {
     // exact fingerprint match — valve-immune by design
     val exact = ns.select(col("id"), col("__fp"))
       .join(state.reps.select(col("__fp"), col("cid")), "__fp")
@@ -884,7 +1027,7 @@ object Dedup {
     * contributes no edge from the shard's own pair list, keys the split
     * on its own id, and can land on the opposite side of the split from
     * its resident near-twin — the exact leakage the family exists to
-    * prevent. The cross edges come from [[dedupAgainstStateAll]]
+    * prevent. The cross edges are [[dedupAgainstStateAll]]'s matches
     * (EVERY above-threshold match, not the top-1 `dup_of` — one new doc
     * bridging two distinct resident clusters must merge them).
     *
@@ -897,12 +1040,16 @@ object Dedup {
     * degrade recall the same way only when saturation is
     * corpus-stable).
     *
-    * Scale shape: prices ONLY the shard — `minhashPairs` over the shard
-    * (shard², bucket-capped), three key-equi probes of the persisted
-    * MinHash state (never corpus×corpus), and one CC re-run over
-    * dup-sized edges; the resident corpus is never re-paired, re-read,
-    * or shuffled. Measured vs full re-pair in BENCH_NOTES ("Round-16:
-    * complete DupClusterState refresh recipe priced").
+    * Scale shape: prices ONLY the shard and its new pairs. One staged
+    * shingle table of the shard feeds both the `minhashPairs` core
+    * (shard², bucket-capped) and the three key-equi probes of the
+    * persisted MinHash state (never corpus×corpus); the merge then
+    * contracts the new pairs onto the frozen clusters and finishes
+    * union-find on the driver ([[dupClusterStateMerge]]). Neither the
+    * resident corpus nor the cluster state is re-paired, re-solved or
+    * shuffled. Measured in BENCH_NOTES ("Round-16: complete
+    * DupClusterState refresh recipe priced" against a full re-pair, and
+    * "Cluster refresh priced by its new pairs" for the merge).
     *
     * SEQUENTIAL multi-shard refreshes must ALSO refresh the MinHash
     * state between shards ([[minhashDedupStateRefresh]]) — shard 2's
@@ -926,14 +1073,31 @@ object Dedup {
       threshold: Double = 0.5,
       maxBucketSize: Option[Long] = Some(DefaultMaxBucketSize)
   ): DupClusterState = {
-    val shardPairs = minhashPairs(shard, idCol, textCol, n, threshold,
-        maxBucketSize)
+    checkMinhashState(mhState, n)
+    // one staged shingle table feeds both pair producers
+    val ns = stagedShingleSets(shard, idCol, textCol, n)
+    val shardPairs = minhashPairsOf(ns, threshold, maxBucketSize)
       .select(col("id1"), col("id2"))
-    val crossPairs =
-      dedupAgainstStateAll(mhState, shard, idCol, textCol, n, threshold)
-        .select(col("id").as("id1"), col("dup_of").as("id2"))
+    // every match is an edge; a pair both match paths found twice is a
+    // repeated edge, which the merge's union-find absorbs
+    val crossPairs = againstStateMatchesOf(mhState, ns, threshold)
+      .select(col("id").as("id1"), col("cid").as("id2"))
     dupClusterStateMerge(state, shardPairs.unionByName(crossPairs))
   }
+
+  /** [[keyedShingleSets]] staged, shingle-less docs dropped after the
+    * barrier (where the filter is a null test on a materialized column,
+    * never a pushed-down recompute of the tokenizer) — the one table the
+    * pair and match cores read. */
+  private def stagedShingleSets(
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      n: Int
+  ): DataFrame =
+    keyedShingleSets(df, idCol, textCol, n)
+      .staged // not persist: lazily-returned, see PLANS.md §22
+      .filter(col("__fp").isNotNull)
 
   /** (id, sharr, __fp) keyed shingle sets — the shared projection of the
     * MinHash families (set fingerprint = md5 of the sorted array).

@@ -492,6 +492,9 @@ object Dbreg {
     val accCols = valueCols.indices.map(i => s"__acc$i")
     var sweep = 0
     var stepsSinceStage = 0
+    // the latest stage of cur: the next stage supersedes it, the final
+    // moments pass is its last reader
+    var stagedCur: Option[DataFrame] = None
     var lastSweepMax = Double.PositiveInfinity
     var scale0 = -1.0
     while (sweep < maxSweeps &&
@@ -530,21 +533,23 @@ object Dbreg {
             if (!mxRow.isNullAt(0)) sweepMax = math.max(sweepMax, mxRow.getDouble(0))
             val stepAcc = p.select(
               col(fe) +: valueCols.indices.map(i => col(valueCols(i)).as(accCols(i))): _*)
+            // staged (eagerly) while this step's mean table is still
+            // cached, so a later shuffle-tier release never forces a gm
+            // recompute through the accumulator's lineage; the running
+            // sum it supersedes is then read by nothing
             val merged = accDfs(fi) match {
               case None => graft.Staging.stage(stepAcc)
               case Some(a) =>
-                graft.Staging.stage(a
+                val next = graft.Staging.stage(a
                   .join(p.select(
                     col(fe) +: valueCols.indices.map(i =>
                       col(valueCols(i)).as(s"__st$i")): _*), Seq(fe), "full_outer")
                   .select(col(fe) +: valueCols.indices.map(i =>
                     (coalesce(col(accCols(i)), lit(0.0)) +
                       coalesce(col(s"__st$i"), lit(0.0))).as(accCols(i))): _*))
+                graft.Staging.release(a)
+                next
             }
-            // eager: materialize the running sum while this step's mean
-            // table is still cached (a later shuffle-tier release must
-            // not force a gm recompute through the accumulator's lineage)
-            merged.count()
             accDfs(fi) = Some(merged)
             if (shuffleTier) pending ::= gm else held ::= gm
         }
@@ -565,7 +570,10 @@ object Dbreg {
             // materialization instead of holding all sweeps to fit end
             pending = pending ++ held
             held = Nil
-            graft.Staging.stage(next)
+            val staged = graft.Staging.stage(next)
+            stagedCur.foreach(graft.Staging.release)
+            stagedCur = Some(staged)
+            staged
           } else next
       }
       if (scale0 < 0.0) scale0 = sweepMax
@@ -621,16 +629,18 @@ object Dbreg {
           val alphaCol = s"__g_ha_$fi"
           val beta = betaByIdx.map { case (i, b) => lit(b) * col(accCols(i)) }
             .reduceOption(_ + _).getOrElse(lit(0.0))
-          val tbl = accDfs(fi).get
-            .select(col(fe), (col(accCols(0)) - beta).as(alphaCol))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          tbl.count() // pin the level-sized table for the predictor's life
+          // the level-sized table the predictor holds for its life; the
+          // running sum it is built from is read by nothing after it
+          val tbl = graft.Staging.stage(accDfs(fi).get
+            .select(col(fe), (col(accCols(0)) - beta).as(alphaCol)))
+          graft.Staging.release(accDfs(fi).get)
           ((nd: DataFrame) => nd.join(maybeBroadcast(tbl, levels(fi)), Seq(fe), "left"),
             col(alphaCol))
         }
       }
     release()
     held.foreach(_.release())
+    stagedCur.foreach(graft.Staging.release)
     withFePredictor(
       res.copy(hdfeSweeps = Some(sweepsRun), hdfeConverged = Some(converged)),
       d0, alphaParts)

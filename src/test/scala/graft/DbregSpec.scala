@@ -342,6 +342,29 @@ class DbregSpec extends SparkTestBase {
     assertClose(fitM2.coef("x1_bar_time"), bm(3), 1e-7, "wide 2-FE mundlak time-mean beta")
   }
 
+  test("hdfe above the inline tier holds one persisted α table per join-tier FE") {
+    // 120 units × 3 periods: unit takes the join tier, time the inline
+    // one. The running sums each sweep stages are released once the next
+    // one (or the α table) has materialized; the α table is what the
+    // predictor holds.
+    val rng = new scala.util.Random(7)
+    val rows = for (u <- 0 until 120; t <- 0 until 3) yield {
+      val x = rng.nextGaussian() + (u % 10) * 0.1
+      (0.7 * x + (u % 13) * 0.3 + t * 0.2 + rng.nextGaussian() * 0.3, x, s"u$u", s"t$t")
+    }
+    val wdf = spark.createDataFrame(rows).toDF("y", "x1", "unit", "time")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val fit = Dbreg.fit("y ~ x1 | unit + time", wdf, strategy = "hdfe",
+      hdfeTol = 1e-10, hdfeMaxSweeps = 50)
+    val added = sc.getPersistentRDDs.keySet -- before
+    assert(fit.hdfeSweeps.exists(_ > 1), fit.hdfeSweeps)
+    assert(added.size == 1, s"persisted RDDs left by the fit: $added")
+    // the held table still serves predictions
+    val pred = fit.predict(wdf).select("fit").collect()
+    assert(pred.length == rows.length && pred.forall(r => !r.isNullAt(0)))
+  }
+
   test("compress with FE equals demean coefficients") {
     val c = Dbreg.fit("y ~ x1 + x2 | unit", df, strategy = "compress")
     val d = Dbreg.fit("y ~ x1 + x2 | unit", df, strategy = "demean")

@@ -111,6 +111,24 @@ class PlanShapeSpec extends SparkTestBase {
       fn == "count" && planStats(qe.executedPlan).joinCount == 1 })
   }
 
+  test("dupClusterStateMerge runs two queries and no CC round on a small touched set") {
+    // the merge is priced by its new pairs: one bounded collect of the
+    // contracted edges (union-find finishes on the driver) and the staged
+    // result. Re-running duplicateClusters over state ∪ new pairs cost a
+    // label-sum probe, a staged propagate and a jump per round.
+    val dir = java.nio.file.Files.createTempDirectory("graft_plan_dcs").toString
+    Dedup.dupClusterState((0L until 40L).map(i => (2 * i, 2 * i + 1)).toDF("id1", "id2"))
+      .clusters.write.mode("overwrite").parquet(dir)
+    val st = Dedup.DupClusterState(spark.read.parquet(dir))
+    val newPairs = Seq(1L -> 2L, 7L -> 100L, 101L -> 102L, 9L -> 8L).toDF("id1", "id2")
+    var merged: Dedup.DupClusterState = null
+    val run = capturedQueries(spark) { merged = Dedup.dupClusterStateMerge(st, newPairs) }
+    assert(run.size <= 2 && run.count(_._1 == "collect") == 1, run.map(_._1))
+    assert(probes(run).isEmpty)
+    val m = merged.clusters.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(m.size == 83 && m(3L) == 0L && m(100L) == 6L && m(102L) == 101L)
+  }
+
   test("dedupAgainstState and semDedupAgainst pick the top-1 match without a Window") {
     // r16 §2: min_by argmax aggregate instead of a row_number rank window
     val corpus = docs.filter(col("doc_id") % 10 =!= 0)

@@ -1489,6 +1489,113 @@ class ScaleOpsSpec extends SparkTestBase {
     }
   }
 
+  /** Both solve branches of the merge: the driver union-find (default
+    * bound) and duplicateClusters over the contracted edges (bound 0).
+    * Returns each branch's (id → cluster) map and its query count. */
+  private def mergeBothBranches(st: graft.pipeline.Dedup.DupClusterState,
+      newPairs: org.apache.spark.sql.DataFrame): Seq[(String, Map[Any, Any], Int)] =
+    Seq("driver" -> 1000000, "cc" -> 0).map { case (branch, bound) =>
+      var out: graft.pipeline.Dedup.DupClusterState = null
+      val qs = PlanStats.capturedQueries(spark) {
+        out = graft.pipeline.Dedup.mergeClusters(st, newPairs, bound)
+      }
+      (branch, out.clusters.collect().map(r => r.get(0) -> r.get(1)).toMap, qs.size)
+    }
+
+  test("dupClusterStateMerge == rebuild through both solve branches: chains, " +
+      "late low ids, three-way bridges, repeated merges, string ids") {
+    import spark.implicits._
+    import graft.pipeline.Dedup
+    def cmap(st: Dedup.DupClusterState): Map[Any, Any] =
+      st.clusters.collect().map(r => r.get(0) -> r.get(1)).toMap
+    // one case: a state built from `old`, then the merges `batches` in
+    // turn, each on both branches; every step must equal CC over the
+    // union of everything folded in so far
+    def check(name: String, old: Seq[(Long, Long)], batches: Seq[(Long, Long)]*): Unit = {
+      var st = Dedup.dupClusterState(old.toDF("id1", "id2"))
+      var seen = old
+      batches.zipWithIndex.foreach { case (b, k) =>
+        seen = seen ++ b
+        val rebuilt = cmap(Dedup.dupClusterState(seen.toDF("id1", "id2")))
+        val runs = mergeBothBranches(st, b.toDF("id1", "id2"))
+        runs.foreach { case (branch, m, _) =>
+          assert(m == rebuilt, s"$name, batch $k, $branch branch")
+        }
+        // the driver branch is the collect and the stage; bound 0 runs CC
+        val q = runs.map(r => r._1 -> r._3).toMap
+        assert(q("driver") <= 2, s"$name, batch $k: $q")
+        if (b.nonEmpty) assert(q("cc") > q("driver"), s"$name, batch $k: $q")
+        st = Dedup.dupClusterStateMerge(st, b.toDF("id1", "id2"))
+      }
+    }
+    val rnd = new scala.util.Random(2718)
+    // a 50-node chain dealt at random between the state and the new pairs
+    val chain = (0L until 49L).map(i => (i, i + 1))
+    val (inState, arriving) = chain.partition(_ => rnd.nextBoolean())
+    check("50-node chain", inState, arriving)
+    // a late low id relabels a whole component (and a fresh node joins it)
+    check("late low id", Seq(10L -> 11L, 11L -> 12L, 12L -> 13L, 20L -> 21L),
+      Seq(1L -> 12L, 14L -> 13L))
+    // one new pair set bridges three old clusters, directly and through a
+    // fresh node; a fourth cluster stays untouched
+    check("three-way bridge", Seq(1L -> 2L, 5L -> 6L, 9L -> 10L, 30L -> 31L),
+      Seq(2L -> 6L, 40L -> 10L, 40L -> 5L))
+    // repeated merges, including pairs already folded in (no-op edges
+    // inside one cluster) and an empty batch
+    check("repeated merges", Seq(3L -> 4L),
+      Seq(4L -> 8L, 7L -> 9L), Seq(3L -> 8L, 9L -> 2L), Seq.empty, Seq(8L -> 7L))
+    // string ids: "Ａ" (U+FF21) sorts below the non-BMP "😀" (U+1F600) in
+    // Spark's UTF-8 byte order but above it in UTF-16 (String.compareTo)
+    // (the old clusters {😀, 😁} and {Ａ, Ｂ} meet through the new pair)
+    val (fw, fwB, emoji, emoji2) = ("Ａ", "Ｂ", "😀", "😁")
+    assert(emoji.compareTo(fw) < 0) // UTF-16 order disagrees with Spark's
+    val oldS = Seq(emoji -> emoji2, fw -> fwB, "b" -> "c")
+    val newS = Seq(emoji2 -> fwB, "c" -> "d")
+    val st = Dedup.dupClusterState(oldS.toDF("id1", "id2"))
+    val rebuilt = cmap(Dedup.dupClusterState((oldS ++ newS).toDF("id1", "id2")))
+    assert(rebuilt == Map(fw -> fw, fwB -> fw, emoji -> fw, emoji2 -> fw,
+      "b" -> "b", "c" -> "b", "d" -> "b"))
+    mergeBothBranches(st, newS.toDF("id1", "id2")).foreach { case (branch, m, _) =>
+      assert(m == rebuilt, s"string ids, $branch branch")
+    }
+  }
+
+  test("dupClusterStateMerge: a NULL endpoint adds nothing, ANSI on and off") {
+    import spark.implicits._
+    import graft.pipeline.Dedup
+    val st = Dedup.dupClusterState(Seq(1L -> 2L, 5L -> 6L).toDF("id1", "id2"))
+    val withNulls = Seq[(Option[Long], Option[Long])](
+      (Some(2L), Some(5L)), (None, Some(6L)), (Some(7L), None), (None, None),
+      (Some(8L), Some(9L))).toDF("id1", "id2")
+    val expected: Map[Any, Any] = Map(1L -> 1L, 2L -> 1L, 5L -> 1L, 6L -> 1L,
+      8L -> 8L, 9L -> 8L)
+    for (ansi <- Seq(true, false)) {
+      val key = "spark.sql.ansi.enabled"
+      val prev = spark.conf.getOption(key)
+      spark.conf.set(key, ansi.toString)
+      try mergeBothBranches(st, withNulls).foreach { case (branch, m, _) =>
+        assert(m == expected, s"ansi=$ansi, $branch branch")
+      } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+  }
+
+  test("dupClusterStateMerge: a merged state can be written over its own source") {
+    import spark.implicits._
+    import graft.pipeline.Dedup
+    val dir = Files.createTempDirectory("graft_dcs_self").toString
+    Dedup.dupClusterState(Seq(1L -> 2L, 3L -> 4L).toDF("id1", "id2"))
+      .clusters.write.mode("overwrite").parquet(dir)
+    for (bound <- Seq(1000000, 0)) {
+      val loaded = Dedup.DupClusterState(spark.read.parquet(dir))
+      Dedup.mergeClusters(loaded, Seq(4L -> 2L, 9L -> 3L).toDF("id1", "id2"), bound)
+        .clusters.write.mode("overwrite").parquet(dir)
+      val back = spark.read.parquet(dir).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(back == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 9L -> 1L),
+        s"bound $bound")
+    }
+  }
+
   test("zorderAppend: grows the layout, scan stays exact and still prunes") {
     val li = sf("sf0.001", "lineitem")
       .select("l_orderkey", "l_linenumber", "l_extendedprice", "l_quantity")
